@@ -4,9 +4,7 @@ import org.apache.spark.ml.{Estimator, Model, Transformer}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import graft.ops.FanOut
 
 /** Per-fold fit / predict over `spark.ml` estimators — the Spark re-expression
   * of the reference's application layer (`panelsplit/application.py:160-371`).
@@ -48,7 +46,7 @@ object CrossVal {
       }
       est.fit(train).asInstanceOf[Transformer]
     }
-    runAll(tasks, parallelism)
+    FanOut(tasks, parallelism)
   }
 
   /** Out-of-fold prediction: each fold's model transforms exactly that fold's
@@ -60,8 +58,7 @@ object CrossVal {
       models: Seq[Transformer],
       df: DataFrame,
       cv: PanelSplit,
-      returnGroup: String = "test",
-      parallelism: Int = 1): DataFrame = {
+      returnGroup: String = "test"): DataFrame = {
     require(models.size == cv.nSplits,
       s"models (${models.size}) must match folds (${cv.nSplits})")
     require(returnGroup == "test" || returnGroup == "train",
@@ -87,7 +84,7 @@ object CrossVal {
       returnGroup: String = "test",
       parallelism: Int = 1): (DataFrame, Seq[Transformer]) = {
     val models = crossValFit(estimator, df, cv, labelCol, weightCol, dropNaInY, parallelism)
-    (crossValPredict(models, df, cv, returnGroup, parallelism), models)
+    (crossValPredict(models, df, cv, returnGroup), models)
   }
 
   /** Distinct union of label classes over every fold's train side —
@@ -100,17 +97,4 @@ object CrossVal {
     df.filter(pred).select(col(labelCol)).na.drop().distinct()
       .orderBy(col(labelCol)).collect().map(_.get(0)).toSeq
   }
-
-  /** Run fold tasks sequentially or on a bounded driver-thread pool.
-    * Parallel ≡ serial is a test invariant (reference
-    * `tests/test_cross_validation.py:51-80`).
-    */
-  private def runAll[T](tasks: Seq[() => T], parallelism: Int): Seq[T] =
-    if (parallelism <= 1 || tasks.size <= 1) tasks.map(_())
-    else {
-      val pool = Executors.newFixedThreadPool(math.min(parallelism, tasks.size))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(tasks.map(t => Future(t()))), Duration.Inf)
-      finally pool.shutdown()
-    }
 }

@@ -1,6 +1,6 @@
 package graft.metrics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.SequentialCVPipeline
@@ -84,57 +84,88 @@ final case class Scorer(
   }
 
   /** Score an already-transformed, fold-tagged frame — the cached-response
-    * path (reference `metrics.py:173-194`): search transforms once per
-    * candidate, persists, and every scorer reads from the same frame instead
-    * of re-running the per-fold pipeline per metric.
+    * path (reference `metrics.py:173-194`): the per-fold pipeline is not
+    * re-run per metric. [[Scorers.scoreAll]] scores many metrics on one
+    * frame.
     */
   def scoreTransformed(out0: DataFrame, labelCol: String): Seq[Double] = {
-    val Averaged = "(precision|recall|f1|jaccard)_(macro|micro|weighted|samples)".r
-    val ClusterCombined = "(rand|mutual_info|homogeneity|completeness|v_measure|fowlkes_mallows)_score".r
     val responseCol = resolveResponse(out0)
     val out = applyPosLabel(out0, labelCol, responseCol)
-    val perFold = metricName match {
+    val perFold = custom match {
       // custom FIRST: a user-supplied MetricSpec overrides a name-colliding
       // registry builtin, mirroring Scorers.check's `extra`-before-registry
       // precedence (a custom 'roc_auc' must not silently run the builtin)
-      case _ if custom.isDefined =>
-        Metrics.perFoldScoresOf(out, custom.get, labelCol, responseCol)
-      case "roc_auc" =>
-        Metrics.rocAuc(out, labelCol, responseCol).orderBy(col("fold"))
-      case "roc_auc_ovr" =>
-        Metrics.rocAucOvr(out, labelCol, responseCol, weighted = false)
-      case "roc_auc_ovr_weighted" =>
-        Metrics.rocAucOvr(out, labelCol, responseCol, weighted = true)
-      case "roc_auc_ovo" =>
-        Metrics.rocAucOvo(out, labelCol, responseCol, weighted = false)
-      case "roc_auc_ovo_weighted" =>
-        Metrics.rocAucOvo(out, labelCol, responseCol, weighted = true)
-      case "top_k_accuracy" =>
-        // k via scorer kwargs; sklearn default k=2 (reference metrics.py:616-620)
-        Metrics.topKAccuracy(out, labelCol, responseCol, k = topK.getOrElse(2))
-      case "average_precision" =>
-        Metrics.averagePrecision(out, labelCol, responseCol)
-      case "d2_absolute_error_score" =>
-        Metrics.d2AbsoluteError(out, labelCol, responseCol)
-      case "d2_absolute_error_score_approx" =>
-        Metrics.d2AbsoluteError(out, labelCol, responseCol, approx = true)
-      case "adjusted_rand_score" =>
-        Metrics.adjustedRandIndex(out, labelCol, responseCol)
-      case "normalized_mutual_info_score" =>
-        Metrics.normalizedMutualInfo(out, labelCol, responseCol)
-      case "adjusted_mutual_info_score" =>
-        Metrics.adjustedMutualInfo(out, labelCol, responseCol)
-      case ClusterCombined(stat) =>
-        Metrics.clusteringMetrics(out, labelCol, responseCol)
-          .select(col("fold"), col(stat).as("score"))
-      case Averaged(stat, avg) =>
-        Metrics.multiclassScores(out, labelCol, responseCol, avg)
-          .select(col("fold"), col(stat).as("score"))
-      case _ =>
-        Metrics.perFoldScores(out, metricName, labelCol, responseCol)
+      case Some(spec) => Metrics.perFoldScoresOf(out, spec, labelCol, responseCol)
+      case None => dedicatedPath(out, labelCol, responseCol).applyOrElse(metricName,
+        (m: String) => Metrics.perFoldScores(out, m, labelCol, responseCol))
     }
     perFold.collect().map(_.getDouble(1) * sign).toSeq
   }
+
+  /** Metrics with their own per-fold computation (rank, top-k, d2,
+    * clustering, averaged); every other metric is one per-fold aggregate.
+    */
+  private def dedicatedPath(out: DataFrame, labelCol: String, responseCol: String)
+      : PartialFunction[String, DataFrame] = {
+    case "roc_auc" =>
+      Metrics.rocAuc(out, labelCol, responseCol).orderBy(col("fold"))
+    case "roc_auc_ovr" =>
+      Metrics.rocAucOvr(out, labelCol, responseCol, weighted = false)
+    case "roc_auc_ovr_weighted" =>
+      Metrics.rocAucOvr(out, labelCol, responseCol, weighted = true)
+    case "roc_auc_ovo" =>
+      Metrics.rocAucOvo(out, labelCol, responseCol, weighted = false)
+    case "roc_auc_ovo_weighted" =>
+      Metrics.rocAucOvo(out, labelCol, responseCol, weighted = true)
+    case "top_k_accuracy" =>
+      // k via scorer kwargs; sklearn default k=2 (reference metrics.py:616-620)
+      Metrics.topKAccuracy(out, labelCol, responseCol, k = topK.getOrElse(2))
+    case "average_precision" =>
+      Metrics.averagePrecision(out, labelCol, responseCol)
+    case "d2_absolute_error_score" =>
+      Metrics.d2AbsoluteError(out, labelCol, responseCol)
+    case "d2_absolute_error_score_approx" =>
+      Metrics.d2AbsoluteError(out, labelCol, responseCol, approx = true)
+    case "adjusted_rand_score" =>
+      Metrics.adjustedRandIndex(out, labelCol, responseCol)
+    case "normalized_mutual_info_score" =>
+      Metrics.normalizedMutualInfo(out, labelCol, responseCol)
+    case "adjusted_mutual_info_score" =>
+      Metrics.adjustedMutualInfo(out, labelCol, responseCol)
+    case Scorer.ClusterCombined(stat) =>
+      Metrics.clusteringMetrics(out, labelCol, responseCol)
+        .select(col("fold"), col(stat).as("score"))
+    case Scorer.Averaged(stat, avg) =>
+      Metrics.multiclassScores(out, labelCol, responseCol, avg)
+        .select(col("fold"), col(stat).as("score"))
+  }
+
+  /** This scorer's per-fold aggregate, before its own `sign`, exactly as
+    * [[scoreTransformed]] computes it — when it is one plain aggregate: a
+    * custom MetricSpec or a registry metric without a dedicated path, and
+    * no pos_label remap. None otherwise.
+    */
+  private[metrics] def plainAgg(out: DataFrame, labelCol: String): Option[Column] = {
+    // isDefinedAt matches the name only; it never touches the frame
+    val plain = posLabel.isEmpty &&
+      (custom.isDefined || !dedicatedPath(out, labelCol, responseCol).isDefinedAt(metricName))
+    if (!plain) None
+    else {
+      val (l, p) = (col(labelCol).cast("double"), col(resolveResponse(out)).cast("double"))
+      Some(custom match {
+        case Some(spec) => spec.agg(l, p)
+        case None =>
+          val (spec, resolvedSign) = Metrics.resolve(metricName)
+          spec.agg(l, p) * resolvedSign
+      })
+    }
+  }
+}
+
+object Scorer {
+  private val Averaged = "(precision|recall|f1|jaccard)_(macro|micro|weighted|samples)".r
+  private val ClusterCombined =
+    "(rand|mutual_info|homogeneity|completeness|v_measure|fowlkes_mallows)_score".r
 }
 
 object Scorers {
@@ -211,6 +242,34 @@ object Scorers {
   def custom(spec: Metrics.MetricSpec, responseCol: String = "prediction"): Scorer =
     Scorer(spec.name, spec.name,
       if (spec.greaterIsBetter) 1.0 else -1.0, responseCol, Some(spec))
+
+  /** Per-fold scores of every scorer on one frame tagged with an integer
+    * `fold` (the frame [[Scorer.scoreTransformed]] takes). All plain aggregate scorers — a
+    * registry metric without a dedicated path or a custom MetricSpec, with
+    * no pos_label — are computed in ONE `groupBy(fold).agg(…)` whose rows
+    * are sorted by fold on the driver, so m metrics cost one job set, not
+    * m. The others (rank, averaged, clustering, top-k, d2, pos_label) run
+    * their own path. The frame is persisted only while more than one of
+    * these passes reads it.
+    */
+  def scoreAll(scorers: Seq[(String, Scorer)], out: DataFrame,
+      labelCol: String): Map[String, Seq[Double]] = {
+    val aggs = scorers.map { case (name, sc) => (name, sc, sc.plainAgg(out, labelCol)) }
+    val (plain, dedicated) = aggs.partition(_._3.isDefined)
+    val passes = dedicated.size + (if (plain.isEmpty) 0 else 1)
+    if (passes > 1) out.persist()
+    try {
+      val fused = if (plain.isEmpty) Map.empty[String, Seq[Double]] else {
+        val cols = plain.zipWithIndex.map { case ((_, _, agg), i) => agg.get.as(s"score$i") }
+        val rows = out.groupBy(col("fold")).agg(cols.head, cols.tail: _*).collect()
+          .sortBy(_.getAs[Number](0).longValue)
+        plain.zipWithIndex.map { case ((name, sc, _), i) =>
+          name -> rows.map(_.getDouble(i + 1) * sc.sign).toSeq
+        }.toMap
+      }
+      fused ++ dedicated.map { case (name, sc, _) => name -> sc.scoreTransformed(out, labelCol) }
+    } finally if (passes > 1) out.unpersist()
+  }
 
   /** `check_scoring` (`metrics.py:452-550`): a single name or a list of
     * names → ordered (name, Scorer) pairs; duplicates rejected. `extra`

@@ -4,6 +4,7 @@ import org.apache.spark.ml.{Estimator, Model, Transformer}
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.cv.{CrossVal, PanelSplit, PeriodFold}
 import graft.metrics.Metrics
@@ -53,28 +54,48 @@ final class SequentialCVPipeline(
   /** Fit all steps sequentially; step i+1 sees step i's (out-of-fold, for CV
     * steps) output (`pipeline.py:686-719`).
     */
-  def fit(df: DataFrame): this.type = {
+  def fit(df: DataFrame): this.type = { fitOutput(df); this }
+
+  /** Fit, and return what `transform(df)` would return, taken from the
+    * out-of-fold frame the fit already built rather than from a second pass
+    * through the fitted steps.
+    */
+  def fitTransform(df: DataFrame): DataFrame = withFoldCol(fitOutput(df))
+
+  /** Fit every step and return the last step's output, still carrying the
+    * internal `__fold` marker. Each CV step's out-of-fold output is
+    * persisted while a later step fits on it, so that step's per-fold fits
+    * read it instead of recomputing it; all of them are released once the
+    * last step is fitted. The returned frame itself is not persisted.
+    */
+  private[graft] def fitOutput(df: DataFrame): DataFrame = {
+    val lastEstimator = steps.lastIndexWhere(_._2 != null)
     var current = df
+    val held = Vector.newBuilder[DataFrame]
     val acc = Vector.newBuilder[(String, Option[FittedStep])]
-    steps.zip(cvSteps).foreach { case ((name, est), cvOpt) =>
-      if (est == null) { // passthrough
-        acc += name -> None
-      } else (cvOpt match {
-        case None =>
-          val model = cloneEst(est).fit(current).asInstanceOf[Transformer]
-          acc += name -> Some(FittedWhole(model))
-          current = model.transform(current)
-        case Some(cv) =>
-          val foldModels = cv.folds.map { f =>
-            val train = current.filter(f.trainPredicate(cv.periodsCol, cv.snapshotCol))
-            f -> cloneEst(est).fit(train).asInstanceOf[Transformer]
-          }
-          acc += name -> Some(FittedPerFold(cv, foldModels))
-          current = applyPerFold(cv, foldModels, current)
-      })
-    }
+    try {
+      steps.zip(cvSteps).zipWithIndex.foreach { case (((name, est), cvOpt), i) =>
+        if (est == null) { // passthrough
+          acc += name -> None
+        } else (cvOpt match {
+          case None =>
+            val model = cloneEst(est).fit(current).asInstanceOf[Transformer]
+            acc += name -> Some(FittedWhole(model))
+            current = model.transform(current)
+          case Some(cv) =>
+            val foldModels = cv.folds.map { f =>
+              val train = current.filter(f.trainPredicate(cv.periodsCol, cv.snapshotCol))
+              f -> cloneEst(est).fit(train).asInstanceOf[Transformer]
+            }
+            acc += name -> Some(FittedPerFold(cv, foldModels))
+            current = applyPerFold(cv, foldModels, current)
+            if (i < lastEstimator && current.storageLevel == StorageLevel.NONE)
+              held += current.persist()
+        })
+      }
+    } finally held.result().foreach(_.unpersist())
     fitted = Some(acc.result())
-    this
+    current
   }
 
   /** Out-of-fold application: each fold's model transforms that fold's
@@ -111,8 +132,10 @@ final class SequentialCVPipeline(
           current = applyPerFold(cv, models, current)
       }
     }
-    current.withColumnRenamed("__fold", "fold")
+    withFoldCol(current)
   }
+
+  private def withFoldCol(out: DataFrame): DataFrame = out.withColumnRenamed("__fold", "fold")
 
   def predict(df: DataFrame): DataFrame = transform(df)
 

@@ -1,17 +1,24 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.metrics.Scorers
+import graft.ops.FanOut
 import graft.pipeline.SequentialCVPipeline
 
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
 
-/** One evaluated candidate: per-metric per-split scores + aggregates. */
+/** One evaluated candidate: per-metric per-split scores + aggregates.
+  *
+  * `fitTimeSec` is the candidate's own last-step fit plus an even share of
+  * its prefix's fit: a prefix shared by k candidates adds its fit seconds / k
+  * to each, so Σ `fitTimeSec` over the candidates is the fit work actually
+  * done and `cvResults`' `mean_fit_time` stays comparable across groups.
+  * `scoreTimeSec` is the candidate's scoring alone.
+  */
 final case class CandidateResult(
     index: Int,
     params: Map[String, Any],
@@ -29,7 +36,21 @@ final case class CandidateResult(
   * `RandomizedSearch` (`panelsplit/model_selection/model_selection.py`).
   *
   * Candidates fan out as driver-side jobs over a shared (cached) DataFrame;
-  * each fit is itself a set of per-fold Spark jobs. Semantics preserved:
+  * each fit is itself a set of per-fold Spark jobs. Work is shared across
+  * candidates at three points:
+  *  - prefix sharing: candidates are grouped by the params of the steps
+  *    before the last estimator. Each distinct prefix is fitted once, its
+  *    out-of-fold output is persisted, and only the last step is fitted per
+  *    candidate on that output. A prefix is released as soon as the last
+  *    candidate using it is done, so storage holds at most one persisted
+  *    out-of-fold frame per live distinct prefix (besides what a running
+  *    fit or scoring holds for its own duration);
+  *  - fit-time output: each candidate is scored from the out-of-fold frame
+  *    its fit built ([[SequentialCVPipeline.fitTransform]]), not from a
+  *    second transform pass;
+  *  - fused scoring: [[Scorers.scoreAll]] computes every plain aggregate
+  *    metric in one per-fold aggregation.
+  * A prefix that fails fails every candidate sharing it. Semantics preserved:
   * std is population (ddof=0, `model_selection.py:856-858`), rank is
   * ties→min with NaN→worst (`:876-884`), fit failures fill `errorScore` and
   * warn, all-failed raises (`_validation.py:88-166`), multimetric scoring
@@ -70,38 +91,79 @@ abstract class BaseSearch(
   def bestParams: Map[String, Any] = results(bestIndex).params
   def bestScore: Double = results(bestIndex).meanScore(primaryMetric)
 
+  /** Candidates are grouped by the params of the steps before the last
+    * estimator (the prefix); `split` is that estimator's index. A param is a
+    * prefix param unless it names a step from `split` on that no prefix step
+    * shares a name with (copyWith applies a key to every same-named step).
+    */
+  private val split: Int = math.max(0, pipeline.steps.lastIndexWhere(_._2 != null))
+  private val tailOnlySteps: Set[String] =
+    pipeline.steps.drop(split).map(_._1).toSet -- pipeline.steps.take(split).map(_._1)
+
+  private def prefixParams(params: Map[String, Any]): Map[String, Any] =
+    params.filter { case (k, _) => !tailOnlySteps(k.split("__")(0)) }
+
+  /** A fitted prefix's out-of-fold output and fit seconds. An output the
+    * search persisted itself (`owned`; never the caller's input) is released
+    * when the last candidate sharing it is done.
+    */
+  private final class Prefix(val out: DataFrame, val fitSec: Double, users: Int, owned: Boolean) {
+    private val left = new java.util.concurrent.atomic.AtomicInteger(users)
+    def release(): Unit = if (left.decrementAndGet() == 0) drop()
+    def drop(): Unit = if (owned) out.unpersist()
+  }
+
   def fit(df: DataFrame): this.type = {
     val cands = candidates()
     require(cands.nonEmpty, "empty parameter space")
 
-    val tasks: Seq[() => CandidateResult] = cands.zipWithIndex.map { case (params, i) => () =>
+    val groups = scala.collection.mutable.LinkedHashMap.empty[Map[String, Any], Vector[Int]]
+    cands.indices.foreach { i =>
+      val key = prefixParams(cands(i))
+      groups(key) = groups.getOrElse(key, Vector.empty) :+ i
+    }
+    // each distinct prefix is fitted once; its out-of-fold output is
+    // persisted for the last steps of the candidates that share it
+    val prefixes: Seq[Try[Prefix]] = FanOut(groups.toSeq.map { case (params, members) => () =>
       Try {
-        val cand = pipeline.copyWith(params)
         val t0 = System.nanoTime()
-        cand.fit(df)
-        val t1 = System.nanoTime()
-        // Cached response (reference metrics.py:173-194): one transform per
-        // candidate, persisted; every scorer reads the same frame — m metrics
-        // cost 1 transform job set, not m.
-        val out0 = cand.transform(df)
-        val out = if (cand.lastCv.isDefined) out0 else out0.withColumn("fold", org.apache.spark.sql.functions.lit(0))
-        out.persist()
-        val scores =
-          try scorers.map { case (name, sc) => name -> sc.scoreTransformed(out, labelCol) }.toMap
-          finally out.unpersist()
-        (scores, (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9)
-      } match {
-        case Success((scores, ft, st)) =>
-          mkResult(i, params, scores, failed = false, None).copy(fitTimeSec = ft, scoreTimeSec = st)
-        case Failure(e) if raiseOnError =>
-          throw new IllegalStateException(s"Candidate $i ($params) failed with error_score=raise", e)
-        case Failure(e) =>
-          System.err.println(s"[search] candidate $i failed: ${e.getMessage}; filling errorScore")
-          val fill = scoring.map(_ -> Seq.fill(pipeline.nScoreSplits)(errorScore)).toMap
-          mkResult(i, params, fill, failed = true, Some(e.getMessage))
+        val prefix = pipeline.copyWith(params).subPipeline(0, split)
+        val out = prefix.fitOutput(df)
+        val owned = prefix.steps.exists(_._2 != null) && out.storageLevel == StorageLevel.NONE
+        if (owned) out.persist()
+        new Prefix(out, (System.nanoTime() - t0) / 1e9, members.size, owned)
+      }
+    }, parallelism)
+
+    // candidates run grouped by prefix, so a prefix is released as soon as
+    // its group is done; results return in candidate order
+    val tasks: Seq[() => CandidateResult] = groups.values.zip(prefixes).toSeq.flatMap {
+      case (members, prefix) => members.map { i => () =>
+        val params = cands(i)
+        prefix.flatMap { p =>
+          try Try {
+            val t0 = System.nanoTime()
+            val out0 = pipeline.copyWith(params).subPipeline(split, pipeline.steps.size).fitTransform(p.out)
+            val t1 = System.nanoTime()
+            val out = if (pipeline.lastCv.isDefined) out0 else out0.withColumn("fold", lit(0))
+            val scores = Scorers.scoreAll(scorers, out, labelCol)
+            (scores, p.fitSec / members.size + (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9)
+          } finally p.release()
+        } match {
+          case Success((scores, ft, st)) =>
+            mkResult(i, params, scores, failed = false, None).copy(fitTimeSec = ft, scoreTimeSec = st)
+          case Failure(e) if raiseOnError =>
+            throw new IllegalStateException(s"Candidate $i ($params) failed with error_score=raise", e)
+          case Failure(e) =>
+            System.err.println(s"[search] candidate $i failed: ${e.getMessage}; filling errorScore")
+            val fill = scoring.map(_ -> Seq.fill(pipeline.nScoreSplits)(errorScore)).toMap
+            mkResult(i, params, fill, failed = true, Some(e.getMessage))
+        }
       }
     }
-    val evaluated = runAll(tasks, parallelism)
+    val evaluated =
+      try FanOut(tasks, parallelism).sortBy(_.index)
+      finally prefixes.foreach(_.foreach(_.drop()))
     if (evaluated.forall(_.failed))
       throw new IllegalStateException(
         s"All ${evaluated.size} fits failed. First error: ${evaluated.head.error.getOrElse("?")}")
@@ -172,15 +234,6 @@ abstract class BaseSearch(
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(rows.asJava, StructType(fields))
   }
-
-  private def runAll[T](tasks: Seq[() => T], par: Int): Seq[T] =
-    if (par <= 1 || tasks.size <= 1) tasks.map(_())
-    else {
-      val pool = Executors.newFixedThreadPool(math.min(par, tasks.size))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(tasks.map(t => Future(t()))), Duration.Inf)
-      finally pool.shutdown()
-    }
 }
 
 /** Exhaustive cartesian product of `paramGrid` lists

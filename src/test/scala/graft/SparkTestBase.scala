@@ -9,6 +9,24 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
 
   override def afterAll(): Unit = super.afterAll()
+
+  /** Runs `body` and returns its result with the number of distinct RDDs
+    * that stored blocks meanwhile, i.e. how many frames it cached.
+    */
+  def rddsCachedDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onBlockUpdated(e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId.asRDDId.foreach(b => ids.add(b.rddId))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, ids.size)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {

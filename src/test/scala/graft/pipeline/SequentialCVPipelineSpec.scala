@@ -154,4 +154,49 @@ class SequentialCVPipelineSpec extends SparkTestBase {
     assert(preds.forall(_ == 8.0)) // mean 3 + shift 5
     assertThrows[IllegalArgumentException](pipe.copyWith(Map("mu__nope" -> 1)).fit(df))
   }
+
+  /** CV mean step feeding a second mean step, whole or CV over the first
+    * step's out-of-fold periods, with passthroughs in between. The second
+    * step's fit reads the first step's output.
+    */
+  private def stackedPipes(df: org.apache.spark.sql.DataFrame): Seq[() => SequentialCVPipeline] = {
+    val cv1 = PanelSplit(df, "period", nSplits = 3, testSize = 3)
+    val axis2 = cv1.folds.flatMap(_.testPeriods).sortBy(_.asInstanceOf[Int]).toVector
+    val cv2 = PanelSplit(df, "period", nSplits = 2, testSize = 2, uniquePeriods = Some(axis2))
+    def mu = est(new MeanRegressor().setLabelCol("y").setPredictionCol("mu"))
+    def out = est(new MeanRegressor().setLabelCol("y"))
+    Seq(
+      () => new SequentialCVPipeline(Seq("mu" -> mu, "out" -> out), Seq(Some(cv1), None)),
+      () => new SequentialCVPipeline(Seq("mu" -> mu, "out" -> out), Seq(Some(cv1), Some(cv2))),
+      () => new SequentialCVPipeline(Seq("mu" -> mu, "skip" -> null, "out" -> out, "tail" -> null),
+        Seq(Some(cv1), None, Some(cv2), None)))
+  }
+
+  test("fitTransform returns the rows fit(df).transform(df) returns") {
+    val df = identityPanel
+    stackedPipes(df).foreach { mk =>
+      val a = mk()
+      val viaFit = a.fitTransform(df)
+      assert(a.isFitted)
+      val viaTransform = mk().fit(df).transform(df)
+      assert(viaFit.columns.toSeq == viaTransform.columns.toSeq)
+      def rows(out: org.apache.spark.sql.DataFrame) = out.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      assert(rows(viaFit).nonEmpty && rows(viaFit) == rows(viaTransform))
+    }
+  }
+
+  test("fit caches intermediate CV outputs only while later steps fit") {
+    val df = identityPanel.cache()
+    df.count()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    stackedPipes(df).foreach { mk =>
+      val (_, cached) = rddsCachedDuring(mk().fit(df))
+      assert(cached > 0, "the mean step's out-of-fold output should be cached for the next step")
+      assert(sc.getPersistentRDDs.size == before)
+      mk().fitTransform(df).count()
+      assert(sc.getPersistentRDDs.size == before)
+    }
+    df.unpersist()
+  }
 }

@@ -2,9 +2,13 @@ package graft.search
 
 import graft.SparkTestBase
 import graft.cv.PanelSplit
+import graft.metrics.Scorers
 import graft.ml.MeanRegressor
 import graft.pipeline.SequentialCVPipeline
 import org.apache.spark.ml.{Estimator, Model}
+import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
+import org.apache.spark.ml.regression.LinearRegression
+import org.apache.spark.sql.DataFrame
 
 class SearchSpec extends SparkTestBase {
   private lazy val sp = spark
@@ -23,6 +27,113 @@ class SearchSpec extends SparkTestBase {
     val cv = PanelSplit(df, "period", nSplits = 3, testSize = 1)
     new SequentialCVPipeline(
       Seq("mu" -> est(new MeanRegressor().setLabelCol("y"))), Seq(Some(cv)))
+  }
+
+  // 6 entities x 12 periods, two features, y linear in them plus a wobble
+  private lazy val lrPanel: DataFrame = {
+    val rows = for (p <- 1 to 12; e <- 0 to 5) yield {
+      val (x1, x2) = (math.sin(p * 1.3 + e), ((e * 7 + p * 3) % 5) * 0.5)
+      (e * 100 + p, p, x1, x2, 1.5 + 2.0 * x1 - 0.7 * x2 + 0.2 * math.cos(p * e + 0.3))
+    }
+    val df = new VectorAssembler().setInputCols(Array("x1", "x2")).setOutputCol("features")
+      .transform(rows.toDF("id", "period", "x1", "x2", "y")).cache()
+    df.count()
+    df
+  }
+
+  /** Scaler on 2 folds feeding ridge OLS on 2 folds of the scaler's
+    * out-of-fold periods. Unstandardized ridge makes both steps' params
+    * move every score.
+    */
+  private def lrPipe(df: DataFrame) = {
+    val cv1 = PanelSplit(df, "period", nSplits = 2, testSize = 3)
+    val axis2 = cv1.folds.flatMap(_.testPeriods).sortBy(_.asInstanceOf[Int]).toVector
+    val cv2 = PanelSplit(df, "period", nSplits = 2, testSize = 1, uniquePeriods = Some(axis2))
+    new SequentialCVPipeline(Seq(
+      "scale" -> est(new StandardScaler().setInputCol("features").setOutputCol("scaled")),
+      "ols" -> est(new LinearRegression().setFeaturesCol("scaled").setLabelCol("y")
+        .setSolver("normal").setStandardization(false))),
+      Seq(Some(cv1), Some(cv2)))
+  }
+
+  private val lrGrid: Map[String, Seq[Any]] =
+    Map("scale__withStd" -> Seq(false, true), "ols__regParam" -> Seq(0.1, 1.0))
+  private val lrScoring = Seq("neg_mean_squared_error", "r2", "d2_absolute_error_score")
+
+  /** Every candidate's scores, ranks and the best params equal those of an
+    * independent `copyWith(params).fit(df)` scored by `Scorer.score`.
+    */
+  private def assertMatchesIndependentFits(search: BaseSearch, df: DataFrame): Unit = {
+    val want = search.results.map { r =>
+      val fitted = search.pipeline.copyWith(r.params).fit(df)
+      r.index -> lrScoring.map(m => m -> Scorers.get(m).score(fitted, df, "y")).toMap
+    }.toMap
+    def mean(xs: Seq[Double]) = xs.sum / xs.size
+    lrScoring.foreach { m =>
+      val means = want.map { case (i, s) => i -> mean(s(m)) }
+      val sorted = means.values.toSeq.sorted
+      assert(sorted.zip(sorted.tail).forall { case (a, b) => b - a > 1e-9 },
+        s"candidates too close to rank robustly on $m: $means")
+      search.results.foreach { r =>
+        assert(r.splitScores(m).size == want(r.index)(m).size)
+        r.splitScores(m).zip(want(r.index)(m)).foreach { case (got, exp) =>
+          assert(math.abs(got - exp) <= 1e-12, s"candidate ${r.index} $m: $got vs $exp")
+        }
+        assert(math.abs(r.meanScore(m) - means(r.index)) <= 1e-12)
+        assert(r.rank(m) == 1 + means.values.count(_ > means(r.index)))
+      }
+    }
+    assert(search.bestParams == search.results(want.maxBy(_._2(lrScoring.head).sum)._1).params)
+  }
+
+  test("prefix-shared search equals independent per-candidate fits") {
+    val df = lrPanel
+    // 2 prefixes (scale__withStd), each shared by 2 candidates
+    val gs = new GridSearch(lrPipe(df), lrGrid, lrScoring, "y", parallelism = 4)
+    gs.fit(df)
+    assert(gs.results.size == 4 && gs.results.forall(!_.failed))
+    assertMatchesIndependentFits(gs, df)
+    // 3 of the 4: one prefix shared by 2 candidates, the other used by 1
+    val rs = new RandomizedSearch(lrPipe(df), lrGrid, nIter = 3, seed = 5L,
+      scoring = lrScoring, labelCol = "y", parallelism = 2)
+    rs.fit(df)
+    assert(rs.results.groupBy(_.params("scale__withStd")).values.map(_.size).toSet == Set(1, 2))
+    assertMatchesIndependentFits(rs, df)
+  }
+
+  test("a failing prefix fails every candidate sharing it; error_score=raise rethrows") {
+    val df = lrPanel
+    val grid = Map("scale__inputCol" -> Seq("features", "missing"), "ols__regParam" -> Seq(0.1, 1.0))
+    val gs = new GridSearch(lrPipe(df), grid, Seq("neg_mean_squared_error"), "y",
+      refit = false, errorScore = -1e6, parallelism = 2)
+    gs.fit(df)
+    val (bad, good) = gs.results.partition(_.params("scale__inputCol") == "missing")
+    assert(bad.size == 2 && bad.forall(r => r.failed &&
+      r.splitScores("neg_mean_squared_error") == Seq(-1e6, -1e6)))
+    assert(bad.map(_.error).distinct.size == 1 && bad.head.error.isDefined)
+    assert(good.size == 2 && good.forall(!_.failed))
+    assert(gs.bestParams("scale__inputCol") == "features")
+
+    val raising = new GridSearch(lrPipe(df), grid, Seq("neg_mean_squared_error"), "y",
+      refit = false, parallelism = 2, raiseOnError = true)
+    val e = intercept[IllegalStateException](raising.fit(df))
+    assert(e.getMessage.contains("error_score=raise") && e.getCause != null)
+  }
+
+  test("search leaves nothing persisted behind") {
+    val df = lrPanel
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    // refit=true also runs a plain pipeline.fit; d2 makes scoring persist
+    val (_, cached) = rddsCachedDuring {
+      new GridSearch(lrPipe(df), lrGrid, lrScoring, "y", parallelism = 2).fit(df)
+    }
+    assert(cached > 0, "the search should cache its shared prefixes")
+    assert(sc.getPersistentRDDs.size == before)
+    val failing = new GridSearch(lrPipe(df), Map("scale__inputCol" -> Seq("features", "missing")),
+      Seq("neg_mean_squared_error"), "y", refit = false, parallelism = 2, raiseOnError = true)
+    intercept[IllegalStateException](failing.fit(df))
+    assert(sc.getPersistentRDDs.size == before)
   }
 
   test("GridSearch: best candidate by mean score, rank ties->min, refit") {
@@ -88,7 +199,7 @@ class SearchSpec extends SparkTestBase {
     assert(r.meanScore("recall_micro") == 1.0)
   }
 
-  test("multimetric scoring reuses the cached candidate response (stage-count evidence)") {
+  test("fused scoring: 4 plain metrics cost no more stages than 1 (stage-count evidence)") {
     val df = panel.cache(); df.count()
     def stagesFor(scoring: Seq[String]): Int = {
       val counter = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -101,18 +212,16 @@ class SearchSpec extends SparkTestBase {
       try {
         new GridSearch(pipe(df), Map("mu__shift" -> Seq(0.0)),
           scoring = scoring, labelCol = "y", refit = false).fit(df)
-        Thread.sleep(2000) // let the listener bus drain
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
       } finally spark.sparkContext.removeSparkListener(listener)
       counter.get
     }
     val one = stagesFor(Seq("neg_mean_squared_error"))
     val four = stagesFor(Seq("neg_mean_squared_error", "neg_mean_absolute_error",
       "neg_root_mean_squared_error", "neg_mean_absolute_percentage_error"))
-    // without the per-candidate persist, 4 metrics would re-run the whole
-    // per-fold transform per scorer (~4x the stages); with the cached
-    // response the extra metrics add only their own aggregate/collect stages
-    assert(four < one * 3,
-      s"stage blowup suggests the response cache is gone: 1 metric -> $one stages, 4 -> $four")
+    // all four are plain aggregates, computed in one groupBy(fold).agg
+    assert(four <= one,
+      s"plain metrics are no longer fused: 1 metric -> $one stages, 4 -> $four")
   }
 
   test("error_score=raise fails fast with the candidate's error") {
