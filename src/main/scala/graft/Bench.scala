@@ -66,11 +66,14 @@ object Bench {
         spark.sparkContext.setJobDescription(null)
         if (spark.sparkContext.isStopped) Seq.empty // killed mid-query: wall is garbage
         else {
-          // runs started during this gate; give the async listener bus a
-          // beat to drain before reading their totals (outside the wall)
+          // runs started during this gate; wait (at most 10 s) until the
+          // async listener bus has delivered their progress events before
+          // reading their totals (outside the wall)
           val newRuns = new java.util.HashSet(engineByRun.keySet())
           newRuns.removeAll(runs0)
-          if (!newRuns.isEmpty) Thread.sleep(200)
+          if (!newRuns.isEmpty)
+            try org.apache.spark.ListenerBusDrain(spark.sparkContext, 10000L)
+            catch { case _: java.util.concurrent.TimeoutException => () }
           val engine = {
             val it = newRuns.iterator(); var s = 0L
             while (it.hasNext) s += engineByRun.getOrDefault(it.next(), 0L)

@@ -27,10 +27,10 @@ object Dedup {
     */
   def shingles(text: Column, n: Int): Column = {
     val t = split(text, " ")
-    when(size(t) >= n,
-      array_distinct(
-        transform(sequence(lit(0), size(t) - n),
-          i => concat_ws(" ", slice(t, i + 1, lit(n))))))
+    when(size(t) >= n, // `toks` splits once per row; `t` in the lambda re-splits per shingle
+      array_distinct(flatten(transform(array(t), toks =>
+        transform(sequence(lit(0), size(toks) - n),
+          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))))
       .otherwise(array().cast("array<string>"))
   }
 
@@ -928,8 +928,8 @@ object Dedup {
   /** [[simhashJaccardPairsTouching]] over PRE-COMPUTED signatures (round-8;
     * guide §2.4 "don't compute things twice"): the streaming incremental-CC
     * gate accumulates each batch's documents — re-deriving simhash for the
-    * whole accumulated corpus on EVERY micro-batch re-paid the token
-    * explode + `bits`-buffer aggregation for all previously seen docs.
+    * whole accumulated corpus on EVERY micro-batch re-paid the signature
+    * pass for all previously seen docs.
     * `knownSigned` carries a `sigCol` computed ONCE at each doc's arrival
     * (simhash is a pure function of the text, so the stored value is
     * bit-identical to a recompute). Verify still reads the texts.
@@ -992,49 +992,45 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
   }
 
-  /** 32-bit SimHash over tokens: bit b of the signature is the sign of
-    * Σ_tokens (±1 depending on bit b of the token's 60-bit hash).
+  /** SimHash signature of each document: bit b is set iff more than half
+    * of the document's DISTINCT tokens have bit b set in their md5-60 hash
+    * ([[graft.text.TextFunctions.hash60]]). Tokens come from splitting the
+    * text on " " as Spark's `split` does, so repeated, leading and
+    * trailing spaces yield empty tokens and "" is one empty token. The hash
+    * has 60 bits, so positions 60..63 are always 0.
     *
-    * ONE aggregation, `bits` conditional-sum buffers (round-7 optimization;
-    * guide §2.3 "shuffle fewer bytes" / §2.4 "remove shuffles outright"):
-    * the previous shape exploded tokens × `bits` positions through a
-    * broadcast crossJoin and paid TWO hash aggregations ((id, b) then id) —
-    * a bits× row blowup whose partial-aggregate hashmap saw bits×|tokens|
-    * updates. Here each token row updates `bits` codegen'd sum buffers of
-    * one groupBy(id), so the shuffle carries one row of `bits` longs per
-    * (partition, id) and the bit-assembly is a row-local projection.
-    * Per-bit integer sums are order-independent — output is bit-identical
-    * to the old plan (same md5-derived ±1 contributions, same sign rule).
-    * Output: (id, simhash).
+    * Row-local: one output row per input row with non-null text, computed
+    * in one pass over the document by a typed UDF ([[simhashVotes]]); no
+    * explode and no shuffle. Rows with null text produce no row. Ids pass
+    * through unchanged and must be unique (every caller keys by document
+    * id); duplicate ids are not merged.
+    * Output: (id, simhash: bigint).
     */
   def simhash(df: DataFrame, idCol: String, textCol: String, bits: Int = 32): DataFrame = {
-    val tok = df
-      .select(col(idCol).as("id"), explode(array_distinct(split(col(textCol), " "))).as("tok"))
-      .withColumn("th", hash60(col("tok")))
-    val sums = (0 until bits).map { b =>
-      sum(when(shiftright(col("th"), b) % 2 === 1, 1).otherwise(-1)).as(s"__s$b")
+    require(bits > 0, s"bits=$bits must be positive")
+    val sig = udf { (text: String) =>
+      val votes = simhashVotes(text, math.min(bits, 60))
+      // positions wrap at 64 like a shift by b does; 60..63 never vote
+      (0 until bits).map(_ & 63).foldLeft(0L)((s, p) => if (p < 60 && votes(p) > 0) s + (1L << p) else s)
     }
-    tok.groupBy(col("id")).agg(sums.head, sums.tail: _*)
-      .select(col("id"),
-        (0 until bits).map(b =>
-          when(col(s"__s$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), sig(col(textCol)).as("simhash"))
   }
 
   /** WIDE SimHash: the signature as `array<bigint>` with ONE WORD PER BAND
     * (word `w` holds conceptual bits [w·bandBits, (w+1)·bandBits), each word
-    * ≤ 63 bits so it stays non-negative). This lifts the single-BIGINT
+    * ≤ 60 bits so it stays non-negative). This lifts the single-BIGINT
     * 63-bit ceiling: `bits` = 96/128/… is now expressible, which is the
     * production mitigation for the banded head's random-collision growth
     * (candidate volume ∝ n²·nBands/2^(bits/nBands) — widening `bits` at
     * fixed `nBands` divides it by 2^(Δbits/nBands); see SCALE.md).
     *
-    * Aligning words with bands makes the representation free to index:
-    * band-key extraction is `element_at(sig, band+1)` (no shifts), and
-    * hamming is Σ_w bit_count(w_a xor w_b) via `zip_with` + `aggregate` —
-    * still pure codegen'd integer ops, no UDF. For the same `bits`/`nBands`
-    * the per-band keys and hamming distances equal [[simhash]]-derived ones
-    * exactly (spec-verified), so narrow and wide heads are interchangeable.
+    * Conceptual bit b votes with bit b%60 of hash chunk b/60: chunk 0 is the
+    * plain token hash, so bits < 60 equal [[simhash]]'s, and chunk k > 0
+    * hashes the token salted as "k#token". Band keys are
+    * `element_at(sig, band+1)` and hamming is Σ_w bit_count(w_a xor w_b);
+    * for the same `bits`/`nBands` both equal the [[simhash]]-derived ones.
+    * Same row-local, per-row contract as [[simhash]].
     * Output: (id, simhash: array<bigint> of length nBands).
     */
   def simhashWide(
@@ -1043,39 +1039,42 @@ object Dedup {
       textCol: String,
       bits: Int = 96,
       nBands: Int = 12): DataFrame = {
-    require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
+    require(bits > 0 && bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
     val bandBits = bits / nBands
     require(bandBits <= 60, s"band width $bandBits exceeds 60 bits (raise nBands)")
-    // hash60 yields 60 independent bits per token — conceptual bit b draws
-    // from hash CHUNK k = b/60 at position b%60, where chunk 0 is the plain
-    // token hash (so any bits ≤ 60 prefix agrees with [[simhash]] exactly)
-    // and chunk k > 0 salts the token with "k#".
-    //
-    // ONE aggregation with `bits` conditional-sum buffers (round-7
-    // optimization, same rewrite as [[simhash]]): the previous shape paid a
-    // bits× crossJoin row blowup and THREE shuffles ((id,b) → (id,w) → id
-    // with a collect_list sort); per-bit integer sums are order-independent
-    // and the word assembly is a row-local projection, so the output is
-    // bit-identical.
-    val nChunks = (bits + 59) / 60
-    val withH = (0 until nChunks).foldLeft(
-      df.select(col(idCol).as("id"), explode(array_distinct(split(col(textCol), " "))).as("tok"))
-    ) { (d, k) =>
-      d.withColumn(s"__th$k",
-        if (k == 0) hash60(col("tok")) else hash60(concat(lit(s"$k#"), col("tok"))))
+    val sig = udf { (text: String) =>
+      val votes = simhashVotes(text, bits)
+      Array.tabulate(nBands) { w =>
+        (0 until bandBits).foldLeft(0L) { (s, j) =>
+          if (votes(w * bandBits + j) > 0) s | (1L << j) else s
+        }
+      }
+    }.asNonNullable()
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), sig(col(textCol)).as("simhash"))
+  }
+
+  /** Per-bit SimHash votes of one text: votes(b) = Σ over its distinct
+    * tokens of +1 if bit b%60 of the token's hash chunk b/60 is set, else
+    * −1. Chunk 0 is md5-60 of the token (bit-identical to
+    * [[graft.text.TextFunctions.hash60]]: the digest's first 15 hex
+    * digits), chunk k > 0 md5-60 of "k#token".
+    */
+  private def simhashVotes(text: String, bits: Int): Array[Int] = {
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    val votes = new Array[Int](bits)
+    text.split(" ", -1).distinct.foreach { tok =>
+      var h = 0L
+      for (b <- 0 until bits) {
+        if (b % 60 == 0) {
+          val s = if (b == 0) tok else s"${b / 60}#$tok"
+          h = java.nio.ByteBuffer.wrap(
+            md5.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))).getLong >>> 4
+        }
+        votes(b) += (if (((h >>> (b % 60)) & 1L) == 1L) 1 else -1)
+      }
     }
-    val sums = (0 until bits).map { b =>
-      val (k, p) = (b / 60, b % 60)
-      sum(when(shiftright(col(s"__th$k"), p) % 2 === 1, 1).otherwise(-1)).as(s"__s$b")
-    }
-    val words = (0 until nBands).map { w =>
-      (0 until bandBits).map { j =>
-        val b = w * bandBits + j
-        when(col(s"__s$b") > 0, lit(1L << j)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    }
-    withH.groupBy(col("id")).agg(sums.head, sums.tail: _*)
-      .select(col("id"), array(words: _*).as("simhash"))
+    votes
   }
 
   /** Near-duplicate candidate pairs over [[simhashWide]] signatures — the

@@ -174,7 +174,8 @@ object DedupQueries extends QueryPack {
       // each arriving doc's SimHash is computed ONCE and stored with it in
       // the accumulator (round-8): later batches' banded index reads the
       // stored signatures instead of re-hashing the whole accumulated
-      // corpus — bit-identical (simhash is a pure function of the text)
+      // corpus — bit-identical (simhash is a pure function of the text).
+      // The left join keeps null-text docs (no signature) as singletons.
       graft.streaming.StreamingOps.streamIncrementalCC(s, dir,
         (known, batchIds) => Dedup.simhashJaccardPairsTouchingPresigned(
           known, batchIds, "doc_id", "text", "__sig", N, CLUSTER_THR),
@@ -183,7 +184,7 @@ object DedupQueries extends QueryPack {
         enrich = batch => batch.join(
           Dedup.simhash(batch, "doc_id", "text", 48)
             .select(col("id").as("doc_id"), col("simhash").as("__sig")),
-          Seq("doc_id")))
+          Seq("doc_id"), "left"))
     }),
     "q_incremental_screen" -> ((s, dir) => {
       // ingest-time near-dup screen: every 5th doc plays the arriving

@@ -85,10 +85,22 @@ object Tables {
   private val CACHE_TARGET_BYTES: Long = 256L << 10
   private def cacheParts(spark: SparkSession, dir: String, name: String): Int = {
     val par = spark.sparkContext.defaultParallelism
-    val bytes = scala.util.Try(
-      new java.io.File(s"$dir/$name.parquet").length).getOrElse(0L)
+    val bytes = scala.util.Try(fileBytes(s"$dir/$name.parquet")).getOrElse(0L)
     math.max(1, math.min(par.toLong,
       (bytes + CACHE_TARGET_BYTES - 1) / CACHE_TARGET_BYTES).toInt)
+  }
+
+  /** Bytes of a table's data files: the file itself, or every file under a
+    * directory-shaped table except Spark's hidden ones (`_SUCCESS`, `.crc`).
+    */
+  private def fileBytes(path: String): Long = {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+    try files.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      java.nio.file.Files.isRegularFile(p) && !n.startsWith(".") && !n.startsWith("_")
+    }.map(p => java.nio.file.Files.size(p)).sum
+    finally files.close()
   }
 
   def events(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "events")

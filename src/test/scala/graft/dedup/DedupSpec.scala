@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkTestBase {
@@ -21,6 +22,24 @@ class DedupSpec extends SparkTestBase {
     assert(g.length == 3)
     val dup = g.find(_.getAs[Long]("n_dups") == 2).get
     assert(dup.getAs[Long]("canonical_id") == 0L)
+  }
+
+  test("shingles: distinct n-grams in first-occurrence order, empty when shorter than n or null") {
+    val texts = Seq("a b a b a b", "", "double  space and trailing ", " lead", "x", "naïve café 東京 naïve café",
+      null)
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    // plain-Scala reference: split on " " keeping empty tokens, as Spark's split does
+    def ref(t: String, n: Int): Seq[String] =
+      if (t == null) Seq.empty
+      else {
+        val toks = t.split(" ", -1).toSeq
+        if (toks.size < n) Seq.empty else toks.sliding(n).map(_.mkString(" ")).toSeq.distinct
+      }
+    for (n <- Seq(1, 2, 3)) {
+      val got = df.select(col("id"), Dedup.shingles(col("text"), n)).collect()
+        .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      texts.zipWithIndex.foreach { case (t, i) => assert(got(i.toLong) == ref(t, n), s"n=$n text=$t") }
+    }
   }
 
   test("unigram jaccard pairs find exact and near dups, not unrelated") {
@@ -248,6 +267,56 @@ class DedupSpec extends SparkTestBase {
       val rebuilt = words.zipWithIndex.map { case (w, i) => w << (4 * i) }.reduce(_ | _)
       assert(rebuilt == narrow(id), s"doc $id: wide words $words != narrow ${narrow(id)}")
     }
+  }
+
+  test("row-local simhash and simhashWide equal the explode + hash60 + groupBy formulation") {
+    val rnd = new scala.util.Random(7)
+    val vocab = Seq("alpha", "beta", "gamma", "delta", "naïve", "café", "東京", "Ωmega", "🙂", "x")
+    val generated = (10L until 60L).map(id =>
+      (id, Seq.fill(1 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+    val df = (Seq(
+      (0L, "alpha beta gamma delta epsilon zeta"),
+      (1L, null),
+      (2L, ""),
+      (3L, "rep rep rep tok tok"),
+      (4L, "double  space and trailing "),
+      (5L, " leading space  "),
+      (6L, "   "),
+      (7L, "naïve café 東京 Ωmega 🙂 naïve"),
+      (8L, null)) ++ generated).toDF("doc_id", "text")
+    // the aggregate formulation the kernel replaced: one row per distinct
+    // token, per-bit ±1 sums grouped by id
+    val tok = df.select(col("doc_id").as("id"),
+      explode(array_distinct(split(col("text"), " "))).as("tok"))
+    def sums(bits: Int, hash: Int => Column, pos: Int => Int) = (0 until bits).map(b =>
+      sum(when(shiftright(hash(b), pos(b)) % 2 === 1, 1).otherwise(-1)).as(s"s$b"))
+    def chunkHash(b: Int) = graft.text.TextFunctions.hash60(
+      if (b < 60) col("tok") else concat(lit(s"${b / 60}#"), col("tok")))
+    def oldNarrow(bits: Int) = {
+      val s = sums(bits, _ => graft.text.TextFunctions.hash60(col("tok")), identity)
+      tok.groupBy("id").agg(s.head, s.tail: _*).select(col("id"), (0 until bits)
+        .map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_ + _))
+    }
+    def oldWide(bits: Int, nBands: Int) = {
+      val bandBits = bits / nBands
+      val s = sums(bits, chunkHash, _ % 60)
+      tok.groupBy("id").agg(s.head, s.tail: _*).select(col("id"), array((0 until nBands).map(w =>
+        (0 until bandBits).map(j => when(col(s"s${w * bandBits + j}") > 0, lit(1L << j))
+          .otherwise(lit(0L))).reduce(_ + _)): _*))
+    }
+    def rows(d: DataFrame) = d.collect().map(r => r.getLong(0) -> r.get(1)).toSeq
+    val nonNull = df.filter(col("text").isNotNull).count()
+    def check(fresh: DataFrame, old: DataFrame, what: String): Unit = {
+      val got = rows(fresh)
+      assert(got.size == nonNull, s"$what: one row per non-null-text input row")
+      assert(!got.exists(r => r._1 == 1L || r._1 == 8L), s"$what: null-text ids must be absent")
+      assert(got.toMap == rows(old).toMap, s"$what differs from the aggregate formulation")
+    }
+    for (bits <- Seq(32, 48))
+      check(Dedup.simhash(df, "doc_id", "text", bits), oldNarrow(bits), s"simhash($bits)")
+    for (bits <- Seq(48, 96))
+      check(Dedup.simhashWide(df, "doc_id", "text", bits, nBands = 12), oldWide(bits, 12),
+        s"simhashWide($bits)")
   }
 
   test("simhashWide 96-bit: words past bit 60 draw from the salted hash chunk, not zeros") {

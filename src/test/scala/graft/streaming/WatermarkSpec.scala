@@ -249,6 +249,29 @@ class WatermarkSpec extends SparkTestBase {
     assert(multi.nonEmpty)
   }
 
+  test("q_stream_incremental_cc keeps a null-text doc as its own singleton") {
+    // gate corpus in miniature: a near-dup cluster spread over all five
+    // chunks (doc_id mod 5), an empty text and a null text
+    val words = (1 to 30).map(i => s"w$i")
+    val texts = Seq(
+      0L -> words, 1L -> words, 2L -> words.updated(3, "v3"), 3L -> words.updated(7, "v7"),
+      4L -> words.updated(3, "v3").updated(9, "v9"), 5L -> (1 to 30).map(i => s"u$i"),
+      6L -> Seq(""), 8L -> words.take(20))
+      .map { case (id, ws) => (id, ws.mkString(" ")) } :+ (7L -> (null: String))
+    val dir = s"target/test_stream_cc_null/${System.nanoTime()}"
+    texts.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val q = graft.SparkEntry.queries
+    val streamed = q("q_stream_incremental_cc")(spark, dir).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
+    // the gate's oracle is q_dedup_clusters: one-shot CC over all doc ids
+    val oneShot = q("q_dedup_clusters")(spark, dir).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
+    assert(streamed == oneShot)
+    assert(streamed.get(7L).contains(7L), "null-text doc must be its own singleton")
+    assert(!streamed.exists { case (id, c) => id != 7L && c == 7L })
+    assert((0L to 4L).forall(streamed(_) == 0L), s"near-dup cluster split: $streamed")
+  }
+
   test("streamed SCD2 maintenance converges to the one-shot history build") {
     import org.apache.spark.sql.DataFrame
     val dir = "/root/testdata/sf0.001"
