@@ -423,23 +423,16 @@ object Dedup {
     // measured: letting Catalyst pick the join strategy here beats forcing
     // broadcast (the array payloads make broadcast hash probes slower than
     // the partitioned join at this shape)
-    val sh = df.select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
-    cands
-      .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .filter(sizeCompatible(col("sh_a"), col("sh_b"), threshold))
-      .withColumn("sim", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
+    jaccardVerified(cands, df, idCol, textCol, n, threshold)
   }
 
   /** Connected components over the near-duplicate pair graph — the final
     * step of a real dedup pipeline (one canonical doc per cluster).
-    * Iterative min-label propagation: each node repeatedly adopts the
-    * minimum label among itself and its neighbors until fixpoint — the
-    * standard large-scale CC algorithm (hash-partitioned joins, no driver
-    * graph). Converges in O(component diameter) rounds; near-dup clusters
-    * are dense, so a handful. Throws if `maxIters` is hit unconverged.
+    * Iterative min-label propagation with pointer jumping, one aggregation
+    * per round (see [[connectedComponentsFrom]]); hash-partitioned joins,
+    * no driver graph. Rounds grow with component diameter; near-dup
+    * clusters are dense, so a handful. Throws if `maxIters` is hit
+    * unconverged.
     *
     * @param nodes DataFrame with an `id` column (every doc, incl. singletons)
     * @param pairs DataFrame with `id_a`, `id_b` edges
@@ -449,31 +442,37 @@ object Dedup {
     connectedComponentsFrom(
       nodes.select(col("id"), col("id").as("cluster")), pairs, maxIters)
 
-  /** [[connectedComponents]] from a SEEDED labeling (round-8): `seeds` is
+  /** [[connectedComponents]] from a seeded labeling: `seeds` is
     * (id, cluster) where every seed label is the id of a node in the same
     * component with label ≤ id (the trivial cluster = id always qualifies;
-    * a previous converged clustering qualifies by construction). Min-label
-    * propagation from any valid seed converges to the SAME fixpoint — the
-    * component-wide min id — because labels only decrease and every
-    * non-fixpoint state has a decreasing step; starting closer to the
-    * fixpoint just removes rounds. Measured on the incremental gates: the
-    * id-seeded run re-derives the entire base clustering every batch
-    * (changed ≈ |base| in round 1), the seeded run pays only for the new
-    * connectivity.
+    * a previous converged clustering qualifies by construction).
+    *
+    * Each round is ONE `groupBy(id)` over the union of three messages per
+    * node x, all read from the previous round's labels L:
+    *   - L(n) for every neighbour n (edges ⋈ labels on `dst`);
+    *   - L(L(x)), the pointer jump (labels ⋈ labels on cluster = id,
+    *     reusing the first join's labels exchange);
+    *   - L(x) itself.
+    * The new label is their minimum and `chg` = new < old. Every message is
+    * the label of a node in x's component that is ≤ x's, so labels only
+    * decrease, stay in-component, and every non-fixpoint state has a
+    * decreasing step: any valid seed converges to the SAME fixpoint, the
+    * component-wide min id. The jump shortens paths (O(log length) rounds
+    * on a chain with ids in order, O(length) in random order); reading the
+    * previous labels, it may take a round or two more than a min-then-jump
+    * round. A previous clustering as seed saves the rounds that would
+    * re-derive it. Edges to ids outside `seeds` are ignored.
+    *
+    * The rounds run on [[graft.ops.Iterate.fixpoint]]: one eager
+    * checkpoint job per round counts the changed labels, and the previous
+    * round's checkpoint is released. Logs `CC round N: changed=X, Ys` to
+    * `graft.dedup.CC`.
     */
   def connectedComponentsFrom(seeds: DataFrame, pairs: DataFrame,
       maxIters: Int = 20): DataFrame = {
-    val log = org.slf4j.LoggerFactory.getLogger("graft.dedup.CC")
-    // symmetrize via explode, NOT union: a self-union would execute the
-    // (potentially expensive) pair-generation plan twice before the cache
-    // materializes — measured 2x the LSH pipeline cost on the cluster query
-    // cache the edges PRE-PARTITIONED on the per-round join key (round-7;
-    // guide §2.4 "two operations keyed the same way can share one
-    // exchange"): without the pinned repartition every round re-shuffled
-    // the full cached edge frame by dst — stage metrics showed two
-    // 1.9M-record exchanges per round on the sf0.1 flagship. Partitioned
-    // once at cache time, the per-round join needs no edge-side exchange
-    // at all.
+    // symmetrize via explode, not union: a self-union would run the pair
+    // plan twice. Cached pre-partitioned on the per-round join key, so no
+    // round re-shuffles the edges; round 1's job materializes the cache.
     val edges = graft.ops.Par.pinned(
       pairs.select(explode(array(
           struct(col("id_a").as("src"), col("id_b").as("dst")),
@@ -481,74 +480,45 @@ object Dedup {
         .select(col("e.src").as("src"), col("e.dst").as("dst")),
       col("dst"))
       .cache()
-    // materialize the symmetrized frame EAGERLY: the pair-generation plan
-    // (banded index + verify — the expensive part) runs exactly once, in
-    // its own job, instead of lazily inside round 1's checkpoint job; every
-    // round then reads only the cached edges
-    val t0 = System.nanoTime()
-    val nEdges = edges.count()
-    log.info(s"CC: ${nEdges} directed edges materialized in " +
-      f"${(System.nanoTime() - t0) / 1e9}%.1fs")
-    // localCheckpoint each round: iterative DataFrame algorithms grow their
-    // logical plan exponentially otherwise (every iteration embeds all
-    // previous) — lineage truncation is mandatory at any scale
-    var labels = seeds.select(col("id"), col("cluster")).localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val tr = System.nanoTime()
-      // candidate label via neighbors: min over (own, neighbors' labels).
-      // SHUFFLE_HASH on the labels side (round-7; guide §3.1): the build
-      // side is one row per node — always ≤ the edge side — and hashing it
-      // per partition beats sort-merge, which re-SORTED the cached edge
-      // frame every round; Spark 4's shuffled hash join spills, so the
-      // build side need not fit in memory at scale.
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("id", "dst").withColumnRenamed("cluster", "nlbl")
-          .hint("shuffle_hash"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("nlbl")).as("minNeighbor"))
-      val afterMin = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"), col("cluster").as("old"),
-          least(col("cluster"), coalesce(col("minNeighbor"), col("cluster"))).as("cluster"))
-      // pointer-doubling shortcut (label ← label(label)): every node's
-      // label is the id of a node in its own component with label(x) ≤ x
-      // invariant, so chasing one hop stays in-component and only
-      // decreases — collapses the propagation tail from O(diameter) to
-      // O(log diameter) rounds (round-4 instrumentation showed a 4-round
-      // tail of <100 stragglers on the sf0.1 flagship graph). The parent
-      // lookup joins the labels frame against itself — the SMALL axis
-      // (one row per node), not the edge frame.
-      val parents = afterMin.select(col("id").as("__pid"), col("cluster").as("__plbl"))
-      // carry a change flag through the checkpoint: counting changes is then
-      // a filter on materialized data, not another join against old labels
-      val updated = afterMin
-        .join(parents, afterMin("cluster") === col("__pid"), "left")
-        .select(col("id"),
-          coalesce(col("__plbl"), col("cluster")).as("cluster"),
-          (coalesce(col("__plbl"), col("cluster")) < col("old")).as("chg"))
-        .localCheckpoint(true)
-      val changed = updated.filter(col("chg")).count()
-      labels = updated.select(col("id"), col("cluster"))
-      converged = changed == 0
-      iter += 1
-      log.info(f"CC round $iter: changed=$changed, " +
-        f"${(System.nanoTime() - tr) / 1e9}%.1fs")
-    }
-    edges.unpersist()
-    require(converged, s"connectedComponents did not converge in $maxIters iterations")
-    labels
+    val noOld = lit(null).cast(seeds.schema("cluster").dataType)
+    try {
+      graft.ops.Iterate.fixpoint(seeds.select(col("id"), col("cluster")),
+          org.slf4j.LoggerFactory.getLogger("graft.dedup.CC"), "CC",
+          "changed" -> count_if(col("chg")), maxIters,
+          s"connectedComponents did not converge in $maxIters iterations") { state =>
+        val labels = state.select(col("id"), col("cluster"))
+        // both joins hash the SAME labels-by-id frame, so its exchange runs
+        // once per round; SHUFFLE_HASH keeps the cached edges unsorted and
+        // the tiny jump join from building a broadcast relation
+        val byId = labels.select(col("id").as("dst"), col("cluster").as("m")).hint("shuffle_hash")
+        val viaNeighbors = edges.join(byId, "dst")
+          .select(col("src").as("id"), col("m"), noOld.as("old"))
+        val viaParent = labels.join(byId, col("cluster") === col("dst"))
+          .select(col("id"), col("m"), noOld.as("old"))
+        viaNeighbors
+          .unionByName(viaParent)
+          .unionByName(labels.select(col("id"), col("cluster").as("m"), col("cluster").as("old")))
+          .groupBy(col("id"))
+          .agg(min(col("m")).as("cluster"), min(col("old")).as("old"))
+          .where(col("old").isNotNull)
+          .select(col("id"), col("cluster"), (col("cluster") < col("old")).as("chg"))
+      }(_ == 0).select(col("id"), col("cluster"))
+    } finally edges.unpersist(blocking = true)
   }
 
   /** Incremental CC maintenance — the 100 TB answer to "a new crawl batch
     * arrived, update the dedup clusters" without re-clustering the corpus:
-    * every EXISTING component enters the propagation as its STAR (one
-    * id → cluster edge per labeled node — already one hop from converged),
-    * so the rounds pay for the new connectivity only, never the base
-    * graph's full pair set (2.9M pairs vs 5k star edges on the sf0.1
-    * flagship — a 580× edge-frame cut). Identity (spec-proven):
-    * CC(star(CC(E)) ∪ E_new) = CC(E ∪ E_new), so the output is exactly
-    * the full-graph min-label clustering.
+    * every EXISTING component enters as its STAR (one id → cluster edge
+    * per labeled node; on the sf0.1 flagship 2.9M base pairs shrink to 5k
+    * star edges), and the previous labels seed the propagation
+    * ([[connectedComponentsFrom]]). A node arriving both as labeled base
+    * and batch member keeps the smaller label. Base labels start at their
+    * fixpoint (every star edge and pointer jump already carries the
+    * component's min id), so each fused round changes only the labels
+    * the new edges reach, and a batch without new edges converges in one
+    * round. Identity (spec-proven):
+    * CC(star(CC(E)) ∪ E_new) = CC(E ∪ E_new), so the output is exactly the
+    * full-graph min-label clustering.
     *
     * @param labels existing (id, cluster) labeling — CC output
     * @param newNodes ids arriving in this batch (an `id` column)
@@ -559,12 +529,6 @@ object Dedup {
       newEdges: DataFrame, maxIters: Int = 20): DataFrame = {
     val star = labels.filter(col("id") =!= col("cluster"))
       .select(col("id").as("id_a"), col("cluster").as("id_b"))
-    // SEED the propagation with the existing labels (round-8): the base
-    // side starts already-converged, so rounds pay only for the merges the
-    // new edges introduce instead of re-deriving every base cluster from
-    // scratch (min-merge on id dedups a node arriving both as labeled base
-    // and batch member, keeping the smaller = previous label). Same
-    // fixpoint as id-seeding — see [[connectedComponentsFrom]].
     val seeds = labels.select(col("id"), col("cluster"))
       .unionByName(newNodes.select(col("id"), col("id").as("cluster")))
       .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
@@ -590,41 +554,70 @@ object Dedup {
       maxHamming: Int = 3): DataFrame = {
     require(maxHamming < nBands,
       s"pigeonhole guarantee needs maxHamming ($maxHamming) < nBands ($nBands)")
-    require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bandBits = bits / nBands
-    val mask = (1L << bandBits) - 1
-    val sigs = simhash(df, idCol, textCol, bits)
-    val banded = sigs.crossJoin(broadcast((0 until nBands).toDF("band")))
-      .withColumn("bkey", expr(s"shiftright(simhash, band * $bandBits) & $mask"))
-    // triangle-split self-join (round-7; guide §2.5 skew): each side is
-    // salted with a deterministic pmod(id, g) grid cell — side a fixes
-    // ga = id_a mod g and enumerates gb, side b the reverse — so every
-    // (a, b) pair joins in EXACTLY ONE of the g² cells and a hot bucket's
-    // quadratic expansion spreads over g² tasks instead of one straggler
-    // (measured: a 92 s taskMax on the sf0.1 flagship without it). The
-    // pinned 4-key partitioning also keeps AQE from coalescing the tiny
-    // pre-expansion exchanges into a single partition.
-    val g = SELF_JOIN_SPLIT
-    val gDf = (0 until g).map(_.toLong).toList
-    val a = graft.ops.Par.pinned(
-      banded.select(col("id").as("id_a"), col("simhash").as("sig_a"), col("band"), col("bkey"))
-        .withColumn("ga", pmod(col("id_a"), lit(g.toLong)))
-        .crossJoin(broadcast(gDf.toDF("gb"))),
-      col("band"), col("bkey"), col("ga"), col("gb"))
-    val b = graft.ops.Par.pinned(
-      banded.select(col("id").as("id_b"), col("simhash").as("sig_b"), col("band"), col("bkey"))
-        .withColumn("gb", pmod(col("id_b"), lit(g.toLong)))
-        .crossJoin(broadcast(gDf.toDF("ga"))),
-      col("band"), col("bkey"), col("ga"), col("gb"))
-    a.join(b, Seq("band", "bkey", "ga", "gb"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(firstMatchingBand(col("band"), col("sig_a"), col("sig_b"), bandBits, nBands))
+    selfJoinCandidates(simhash(df, idCol, textCol, bits), bits, nBands)
       .withColumn("hamming", expr("bit_count(sig_a ^ sig_b)"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming")).distinct()
   }
+
+  /** Candidate rows of [[simhashNearDupPairs]] before verify: (id_a, sig_a,
+    * id_b, sig_b) for id_a < id_b sharing a band, once per pair (its first
+    * matching band).
+    *
+    * Triangle-split self-join: each side is salted with a deterministic
+    * pmod(id, g) grid cell — side a fixes ga = id_a mod g and enumerates
+    * gb, side b the reverse — so every (a, b) pair joins in EXACTLY ONE of
+    * the g² cells and a hot bucket's quadratic expansion spreads over g²
+    * tasks instead of one straggler (measured: a 92 s taskMax on the sf0.1
+    * flagship without it). (band, bkey, ga, gb) is joined as ONE packed
+    * bigint ([[bandedSigs]]): a single long key makes a broadcast side a
+    * `LongHashedRelation`, where the four-column key built an
+    * `UnsafeHashedRelation` whose 64 MB map page stayed on the heap until
+    * the `ContextCleaner` freed it. The pinned partitioning on that key
+    * also keeps AQE from coalescing the tiny pre-expansion exchanges into
+    * a single partition.
+    */
+  private[dedup] def selfJoinCandidates(sigs: DataFrame, bits: Int, nBands: Int): DataFrame = {
+    require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
+    val spark = sigs.sparkSession
+    import spark.implicits._
+    val bandBits = bits / nBands
+    val g = SELF_JOIN_SPLIT
+    val gBits = bitWidth(g - 1)
+    val banded = bandedSigs(sigs, bandBits, nBands, 2 * gBits)
+    val gDf = (0 until g).map(_.toLong).toList
+    def side(id: String, sig: String, own: String, other: String) = {
+      val salted = banded.select(col("id").as(id), col("simhash").as(sig), col("bk"))
+        .withColumn(own, pmod(col(id), lit(g.toLong)))
+        .crossJoin(broadcast(gDf.toDF(other)))
+      graft.ops.Par.pinned(
+        salted.select(col(id), col(sig), (shiftleft(col("bk"), 2 * gBits) +
+          shiftleft(col("ga"), gBits) + col("gb")).as("key")),
+        col("key"))
+    }
+    side("id_a", "sig_a", "ga", "gb").join(side("id_b", "sig_b", "gb", "ga"), "key")
+      .filter(col("id_a") < col("id_b"))
+      .filter(firstMatchingBand(shiftright(col("key"), bandBits + 2 * gBits),
+        col("sig_a"), col("sig_b"), bandBits, nBands))
+      .select(col("id_a"), col("sig_a"), col("id_b"), col("sig_b"))
+  }
+
+  /** One row per (signature, band): (id, simhash, bk) with the packed key
+    * bk = band · 2^bandBits + the band's bits. The caller may shift
+    * `spare` more bits in below bk; all of it must fit 63 bits.
+    */
+  private def bandedSigs(sigs: DataFrame, bandBits: Int, nBands: Int, spare: Int): DataFrame = {
+    require(bandBits + bitWidth(nBands - 1) + spare <= 63,
+      s"packed band key needs ${bandBits + bitWidth(nBands - 1) + spare} bits; a bigint holds 63")
+    val spark = sigs.sparkSession
+    import spark.implicits._
+    sigs.crossJoin(broadcast((0 until nBands).toDF("band")))
+      .select(col("id"), col("simhash"), (shiftleft(col("band").cast("long"), bandBits) +
+        expr(s"shiftright(simhash, band * $bandBits) & ${(1L << bandBits) - 1}")).as("bk"))
+  }
+
+  /** Bits needed to hold `maxValue` (0 for 0). */
+  private def bitWidth(maxValue: Int): Int = 32 - Integer.numberOfLeadingZeros(maxValue)
 
   /** Grid size of the salted self-join split: hot-bucket work divides by
     * g², input rows multiply by g (tiny frames). 8 splits the worst
@@ -891,14 +884,7 @@ object Dedup {
       maxHamming: Int = 11): DataFrame = {
     val cands = simhashNearDupPairs(df, idCol, textCol, bits, nBands, maxHamming)
       .select("id_a", "id_b")
-    val sh = df.select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
-    cands
-      .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .filter(sizeCompatible(col("sh_a"), col("sh_b"), threshold))
-      .withColumn("sim", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
+    jaccardVerified(cands, df, idCol, textCol, n, threshold)
   }
 
   /** Verified near-dup pairs TOUCHING a batch: exactly
@@ -961,28 +947,42 @@ object Dedup {
       nBands: Int,
       maxHamming: Int): DataFrame = {
     require(maxHamming < nBands, s"pigeonhole needs maxHamming ($maxHamming) < nBands ($nBands)")
-    require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
-    val spark = known.sparkSession
-    import spark.implicits._
-    val bandBits = bits / nBands
-    val mask = (1L << bandBits) - 1
-    val banded = graft.ops.Par.pinned(
-      sigs.crossJoin(broadcast((0 until nBands).toDF("band")))
-        .withColumn("bkey", expr(s"shiftright(simhash, band * $bandBits) & $mask")),
-      col("band"), col("bkey"))
-    val ids = batchIds.select(col(batchIds.columns.head).as("id"))
-    val probe = banded.join(ids, Seq("id"), "left_semi")
-      .select(col("id").as("id_x"), col("simhash").as("sig_x"), col("band"), col("bkey"))
-    val index = banded
-      .select(col("id").as("id_y"), col("simhash").as("sig_y"), col("band"), col("bkey"))
-    val cands = probe.join(index, Seq("band", "bkey"))
-      .filter(col("id_x") =!= col("id_y"))
-      .filter(firstMatchingBand(col("band"), col("sig_x"), col("sig_y"), bandBits, nBands))
+    val cands = probeCandidates(sigs, batchIds, bits, nBands)
       .filter(expr("bit_count(sig_x ^ sig_y)") <= maxHamming)
       .select(least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"))
       .distinct()
-    val sh = known.select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
+    jaccardVerified(cands, known, idCol, textCol, n, threshold)
+  }
+
+  /** Candidate rows of the touching head before verify: (id_x, sig_x,
+    * id_y, sig_y) for every batch doc x and other doc y sharing a band,
+    * once per ordered pair (its first matching band). The banded frame is
+    * pinned on the packed (band, bkey) bigint and both sides join on it,
+    * for the same reason as in [[selfJoinCandidates]].
+    */
+  private[dedup] def probeCandidates(sigs: DataFrame, batchIds: DataFrame,
+      bits: Int, nBands: Int): DataFrame = {
+    require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
+    val bandBits = bits / nBands
+    val banded = graft.ops.Par.pinned(bandedSigs(sigs, bandBits, nBands, 0), col("bk"))
+    val ids = batchIds.select(col(batchIds.columns.head).as("id"))
+    val probe = banded.join(ids, Seq("id"), "left_semi")
+      .select(col("id").as("id_x"), col("simhash").as("sig_x"), col("bk"))
+    val index = banded.select(col("id").as("id_y"), col("simhash").as("sig_y"), col("bk"))
+    probe.join(index, "bk")
+      .filter(col("id_x") =!= col("id_y"))
+      .filter(firstMatchingBand(shiftright(col("bk"), bandBits),
+        col("sig_x"), col("sig_y"), bandBits, nBands))
+      .select(col("id_x"), col("sig_x"), col("id_y"), col("sig_y"))
+  }
+
+  /** Candidate pairs (id_a, id_b) kept when the n-gram Jaccard of their
+    * texts in `df` reaches `threshold`: (id_a, id_b, sim rounded to 6 dp).
+    */
+  private def jaccardVerified(cands: DataFrame, df: DataFrame, idCol: String,
+      textCol: String, n: Int, threshold: Double): DataFrame = {
+    val sh = df.select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
     cands
       .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -1125,13 +1125,6 @@ object Dedup {
       maxHamming: Int = 11): DataFrame = {
     val cands = simhashWideNearDupPairs(df, idCol, textCol, bits, nBands, maxHamming)
       .select("id_a", "id_b")
-    val sh = df.select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
-    cands
-      .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .filter(sizeCompatible(col("sh_a"), col("sh_b"), threshold))
-      .withColumn("sim", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
+    jaccardVerified(cands, df, idCol, textCol, n, threshold)
   }
 }

@@ -247,10 +247,11 @@ object LinkGraph {
     * prioritization.
     *
     * Each round is one self-semi-join of the symmetrized edge frame
-    * against the survivor set + one degree aggregate, survivors
-    * localCheckpoint'ed (the CC/PageRank discipline); the driver compares
-    * two bounded scalars (survivor counts) per round for the fixpoint
-    * test. Rounds are data-dependent but ≤ the longest peel cascade;
+    * against the survivor set + one degree aggregate, run on
+    * [[graft.ops.Iterate.fixpoint]]: the survivors are checkpointed with
+    * their count observed on the same job, the previous round's
+    * checkpoint is released, and the fixpoint is two equal survivor counts
+    * in a row. Rounds are data-dependent but ≤ the longest peel cascade;
     * `maxRounds` bounds the loop loudly (an oracle unrolling R rounds
     * stays exact because the engine ASSERTS convergence within R).
     * Integer-only state — no pinning discipline needed.
@@ -269,28 +270,21 @@ object LinkGraph {
       .where(col("a") =!= col("b"))
     val sym = dir0.union(dir0.select(col("b").as("a"), col("a").as("b")))
       .distinct().localCheckpoint()
-    var survivors = sym.select(col("a").as("node")).distinct().localCheckpoint()
-    var n = survivors.count()
-    var round = 0
-    var fixed = false
-    while (!fixed) {
-      round += 1
-      require(round <= maxRounds, s"k-core failed to converge in $maxRounds rounds")
-      val deg = sym
-        .join(survivors.withColumnRenamed("node", "a"), "a")
-        .join(survivors.withColumnRenamed("node", "b"), "b")
+    val nodes = sym.select(col("a").as("node")).distinct()
+    var n = nodes.count()
+    val core = try graft.ops.Iterate.fixpoint(nodes,
+        org.slf4j.LoggerFactory.getLogger("graft.graph.kCore"), "k-core",
+        "survivors" -> count(lit(1)), maxRounds,
+        s"k-core failed to converge in $maxRounds rounds") { survivors =>
+      val s = survivors.select(col("node"))
+      sym
+        .join(s.withColumnRenamed("node", "a"), "a")
+        .join(s.withColumnRenamed("node", "b"), "b")
         .groupBy(col("a").as("node")).agg(count(lit(1)).as("core_degree"))
-      val next = deg.where(col("core_degree") >= k).localCheckpoint()
-      val n2 = next.count()
-      if (n2 == n) {
-        fixed = true
-        survivors = next // carry the degree column of the stable round
-      } else {
-        n = n2
-        survivors = next.select("node")
-      }
-    }
-    survivors.select(col("node"), col("core_degree"))
+        .where(col("core_degree") >= k)
+    } { n2 => val fixed = n2 == n; n = n2; fixed }
+    finally graft.ops.Iterate.release(sym)
+    core.select(col("node"), col("core_degree"))
   }
 
   /** Synchronous label-propagation community detection (Raghavan, Albert &

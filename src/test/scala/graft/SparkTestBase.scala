@@ -27,6 +27,23 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       (out, ids.size)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Runs `body` and returns its result with the ids of the RDDs it left
+    * behind: new in `getPersistentRDDs` or holding `rdd_` blocks.
+    */
+  def rddsHeldAfter[T](body: => T): (T, Set[Int]) = {
+    val sc = spark.sparkContext
+    def held = sc.getPersistentRDDs.keySet.toSet ++ org.apache.spark.RddBlocks(sc)
+    val before = held
+    val out = body
+    (out, held -- before)
+  }
+
+  /** Ids of the checkpointed RDDs `df` reads. */
+  def checkpointRdds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.queryExecution.logical.collectLeaves().collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
 }
 
 object SparkTestBase {

@@ -198,6 +198,164 @@ class DedupSpec extends SparkTestBase {
     assert(Set(10L, 11L, 12L, 13L, 14L).forall(finalMap(_) == 10L))
   }
 
+  /** Min-id components by union-find on the driver. */
+  private def unionFind(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
+    def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { parent(math.max(ra, rb)) = math.min(ra, rb) }
+    }
+    nodes.map(n => n -> find(n)).toMap
+  }
+
+  /** Seeded random graph over shuffled ids: a long chain, a star, a cycle,
+    * random extra edges, duplicate and reversed pairs, self-pairs and
+    * isolated nodes.
+    */
+  private def randomGraph(seed: Long): (Seq[Long], Seq[(Long, Long)]) = {
+    val rnd = new scala.util.Random(seed)
+    val ids = rnd.shuffle((0L until 200L).toVector).map(_ * 7 + seed)
+    val chain = ids.slice(0, 40).sliding(2).map(p => (p(0), p(1))).toSeq
+    val star = ids.slice(40, 90).tail.map(ids(40) -> _)
+    val cyc = ids.slice(90, 115)
+    val cycle = cyc.indices.map(i => (cyc(i), cyc((i + 1) % cyc.size)))
+    val extra = Seq.fill(20)((ids(115 + rnd.nextInt(60)), ids(115 + rnd.nextInt(60))))
+    val base = chain ++ star ++ cycle ++ extra
+    val dups = rnd.shuffle(base).take(15).flatMap { case (a, b) => Seq((a, b), (b, a)) }
+    val selfs = ids.slice(100, 110).map(i => (i, i)) :+ (ids(190), ids(190))
+    (ids, rnd.shuffle(base ++ dups ++ selfs)) // ids(175) onwards: isolated
+  }
+
+  // min-label propagation needs O(length) rounds on a chain whose ids
+  // are in random order, more than the default 20 for a 40-node chain
+  private val Rounds = 60
+
+  private def ccMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
+
+  test("connectedComponents == driver union-find on seeded random graphs and an empty edge set") {
+    for (seed <- Seq(1L, 2L, 3L)) {
+      val (nodes, edges) = randomGraph(seed)
+      val got = ccMap(Dedup.connectedComponents(nodes.toDF("id"), edges.toDF("id_a", "id_b"), Rounds))
+      assert(got == unionFind(nodes, edges), s"seed $seed")
+    }
+    val nodes = Seq(5L, 3L, 9L)
+    val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    assert(ccMap(Dedup.connectedComponents(nodes.toDF("id"), none)) == nodes.map(n => n -> n).toMap)
+  }
+
+  test("connectedComponentsFrom: a seeded start equals the id start") {
+    val (nodes, edges) = randomGraph(4L)
+    // a valid seed: the components of a random half of the edges
+    val partial = unionFind(nodes, new scala.util.Random(4L).shuffle(edges).take(edges.size / 2))
+    val seeded = Dedup.connectedComponentsFrom(partial.toSeq.toDF("id", "cluster"),
+      edges.toDF("id_a", "id_b"), Rounds)
+    val fromIds = Dedup.connectedComponents(nodes.toDF("id"), edges.toDF("id_a", "id_b"), Rounds)
+    assert(ccMap(seeded) == ccMap(fromIds))
+    assert(ccMap(seeded) == unionFind(nodes, edges))
+  }
+
+  test("connectedComponents: running out of maxIters throws; nothing but the result stays held") {
+    val chain = (0L until 40L).map(i => (i, i + 1))
+    val nodes = (0L to 40L).toDF("id")
+    // a multi-round run caches the edges and checkpoints every round; only
+    // the returned labels' checkpoint may remain afterwards, also after a
+    // failed run
+    val ((out, cached), held) = rddsHeldAfter(rddsCachedDuring {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.connectedComponents(nodes, chain.toDF("id_a", "id_b"), maxIters = 2)
+      }
+      assert(e.getMessage == "requirement failed: connectedComponents did not converge in 2 iterations")
+      Dedup.connectedComponents(nodes, chain.toDF("id_a", "id_b"))
+    })
+    assert(cached >= 6, s"expected the edges and several rounds cached, saw $cached")
+    assert(checkpointRdds(out).size == 1)
+    assert(held == checkpointRdds(out))
+    assert(out.select("cluster").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
+  }
+
+  /** Corpus with a hot bucket (24 identical boilerplate docs share every
+    * band), near-dup families one word apart, random docs and a null text.
+    */
+  private def hotBucketCorpus: DataFrame = {
+    val rnd = new scala.util.Random(11L)
+    val vocab = (0 until 40).map(i => s"w$i")
+    def words(k: Int) = Seq.fill(k)(vocab(rnd.nextInt(vocab.size)))
+    val boiler = (100L until 124L).map(i => (i, "the same boilerplate text here again"))
+    val families = (0 until 8).flatMap { f =>
+      val base = words(12)
+      (0 until 4).map { j =>
+        (200L + 10 * f + j, base.updated(rnd.nextInt(12), s"x$f$j").mkString(" "))
+      }
+    }
+    val random = (300L until 320L).map(i => (i, words(8).mkString(" ")))
+    (boiler ++ families ++ random :+ ((400L, null: String))).toDF("doc_id", "text")
+  }
+
+  test("packed single-long band keys give the multi-column joins' candidates and pairs") {
+    val df = hotBucketCorpus
+    val batch = df.filter(col("doc_id") % 3 === 0).select("doc_id")
+    val batchSet = batch.collect().map(_.getLong(0)).toSet
+    for ((bits, nBands) <- Seq((48, 12), (48, 4), (32, 4))) {
+      val bandBits = bits / nBands
+      val mask = (1L << bandBits) - 1
+      def firstMatch(band: Int, x: Long, y: Long) =
+        (0 until band).forall(j => ((x ^ y) >>> (j * bandBits) & mask) != 0L)
+      val sigs = Dedup.simhash(df, "doc_id", "text", bits)
+      // the multi-column formulations the packed key replaced
+      val banded = sigs.crossJoin((0 until nBands).toDF("band"))
+        .withColumn("bkey", expr(s"shiftright(simhash, band * $bandBits) & $mask"))
+      val g = (0 until 8).map(_.toLong).toDF("g")
+      val a = banded.select(col("id").as("id_a"), col("simhash").as("sig_a"), col("band"), col("bkey"))
+        .withColumn("ga", pmod(col("id_a"), lit(8L))).crossJoin(g.withColumnRenamed("g", "gb"))
+      val b = banded.select(col("id").as("id_b"), col("simhash").as("sig_b"), col("band"), col("bkey"))
+        .withColumn("gb", pmod(col("id_b"), lit(8L))).crossJoin(g.withColumnRenamed("g", "ga"))
+      val selfOld = a.join(b, Seq("band", "bkey", "ga", "gb")).filter(col("id_a") < col("id_b"))
+        .select("id_a", "sig_a", "id_b", "sig_b", "band").as[(Long, Long, Long, Long, Int)]
+        .collect().filter(r => firstMatch(r._5, r._2, r._4)).map(r => (r._1, r._2, r._3, r._4))
+      val probe = banded.join(batch.withColumnRenamed("doc_id", "id"), Seq("id"), "left_semi")
+        .select(col("id").as("id_x"), col("simhash").as("sig_x"), col("band"), col("bkey"))
+      val index = banded.select(col("id").as("id_y"), col("simhash").as("sig_y"), col("band"), col("bkey"))
+      val probeOld = probe.join(index, Seq("band", "bkey")).filter(col("id_x") =!= col("id_y"))
+        .select("id_x", "sig_x", "id_y", "sig_y", "band").as[(Long, Long, Long, Long, Int)]
+        .collect().filter(r => firstMatch(r._5, r._2, r._4)).map(r => (r._1, r._2, r._3, r._4))
+      val tag = s"bits=$bits nBands=$nBands"
+      assert(selfOld.count(r => r._1 >= 100 && r._3 < 124) == 24 * 23 / 2, s"$tag: hot bucket")
+      assert(Dedup.selfJoinCandidates(sigs, bits, nBands)
+        .as[(Long, Long, Long, Long)].collect().sorted.toSeq == selfOld.sorted.toSeq, tag)
+      assert(Dedup.probeCandidates(sigs, batch, bits, nBands)
+        .as[(Long, Long, Long, Long)].collect().sorted.toSeq == probeOld.sorted.toSeq, tag)
+      // verified pairs of both heads
+      val maxH = nBands - 1
+      def ham(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
+      val bulk = Dedup.simhashNearDupPairs(df, "doc_id", "text", bits, nBands, maxH)
+        .as[(Long, Long, Int)].collect().toSet
+      assert(bulk == selfOld.filter(r => ham(r._2, r._4) <= maxH)
+        .map(r => (r._1, r._3, ham(r._2, r._4))).toSet, tag)
+      val touching = Dedup.simhashJaccardPairsTouching(df, batch, "doc_id", "text",
+          threshold = 0.5, bits = bits, nBands = nBands, maxHamming = maxH)
+        .as[(Long, Long, Double)].collect().toSet
+      val sh = df.select(col("doc_id"), Dedup.shingles(col("text"), 1).as("sh"))
+        .as[(Long, Seq[String])].collect().toMap
+      val touchingOld = probeOld.filter(r => ham(r._2, r._4) <= maxH)
+        .map(r => (math.min(r._1, r._3), math.max(r._1, r._3))).toSet[(Long, Long)]
+        .map { case (x, y) =>
+          val (p, q) = (sh(x), sh(y))
+          val inter = p.intersect(q).size.toDouble
+          (x, y, inter / (p.size + q.size - inter))
+        }.filter(_._3 >= 0.5)
+        .map(t => t.copy(_3 = BigDecimal(t._3).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+      assert(touching == touchingOld, tag)
+      assert(touching.nonEmpty && touching.forall(t => batchSet(t._1) || batchSet(t._2)), tag)
+    }
+    // the packed key must fit a bigint
+    val e = intercept[IllegalArgumentException] {
+      Dedup.simhashNearDupPairs(df, "doc_id", "text", bits = 64, nBands = 1, maxHamming = 0)
+    }
+    assert(e.getMessage.contains("packed band key"))
+  }
+
   test("simhash: identical texts equal; near-dup within small hamming distance; unrelated far") {
     val hashes = Dedup.simhash(corpus, "doc_id", "text")
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("simhash")).toMap

@@ -195,6 +195,22 @@ class LinkGraphSpec extends AnyFunSuite with SparkTestBase {
     assert(core(e, k = 5).isEmpty)
   }
 
+  test("kcore: the round limit raises its message; only the returned core stays held") {
+    val path = Seq(("n1", "n2"), ("n2", "n3"), ("n3", "n4"), ("n4", "n5"), ("n5", "n6"), ("n6", "n7"))
+    val e = intercept[IllegalArgumentException] { core(path, k = 2, maxRounds = 2) }
+    assert(e.getMessage == "requirement failed: k-core failed to converge in 2 rounds")
+    import spark.implicits._
+    val e2 = Seq(("p1", "p2"), ("p2", "x"), ("x", "y"), ("y", "z"), ("z", "x"))
+    val ((out, cached), held) = rddsHeldAfter(rddsCachedDuring {
+      intercept[IllegalArgumentException] { core(path, k = 2, maxRounds = 2) }
+      LinkGraph.kCore(e2.toDF("s", "d"), "s", "d", 2)
+    })
+    assert(cached >= 4, s"expected several rounds checkpointed, saw $cached")
+    assert(checkpointRdds(out).size == 1 && held == checkpointRdds(out))
+    assert(out.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      Map("x" -> 2L, "y" -> 2L, "z" -> 2L))
+  }
+
   test("lpa: community_size column counts final label members") {
     import spark.implicits._
     val e = Seq(("a", "b"), ("b", "c"), ("a", "c"))

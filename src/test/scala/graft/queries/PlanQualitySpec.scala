@@ -267,17 +267,29 @@ class PlanQualitySpec extends SparkTestBase {
     val items = (1 to 300).map(i => (i.toLong % 20, i.toLong)).toDF("k", "v")
     val par = graft.ops.Experiments.paretoAbc(items, col("k"), col("v"))
     par.collect()
-    val planP = par.queryExecution.executedPlan.toString
-    // round-8: the keyed aggregate is materialized ONCE via localCheckpoint
-    // (it feeds the bounds pass, the bucket histogram, and this plan), so
-    // the window's input shows as the checkpointed RDD scan — the window
-    // still sits above the aggregate OUTPUT (one row per key), never the
-    // raw rows
-    val aggIdx = math.max(planP.indexOf("HashAggregate"),
-      planP.indexOf("Scan ExistingRDD"))
-    val winIdx = planP.indexOf("Window")
-    assert(aggIdx >= 0 && winIdx >= 0,
-      s"pareto must window above the (materialized) aggregate:\n$planP")
+    // the keyed aggregate is materialized once via localCheckpoint (it
+    // feeds the bounds pass, the bucket histogram and this plan): every
+    // window must read that checkpoint — (key, v), one row per key — and
+    // otherwise only the small offsets relation, never the raw rows
+    val windows = par.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }
+    assert(windows.nonEmpty, s"pareto lost its rank window:\n${par.queryExecution.optimizedPlan}")
+    val nKeys = items.select("k").distinct().count()
+    windows.foreach { w =>
+      val leaves = w.collectLeaves()
+      val aggs = leaves.collect { case r: org.apache.spark.sql.execution.LogicalRDD => r }
+      assert(aggs.size == 1, s"window must read one checkpointed aggregate:\n$w")
+      assert(aggs.head.output.map(_.name) == Seq("key", "v"), s"checkpoint columns:\n$w")
+      val keys = aggs.head.rdd.map(_.getLong(0)).collect()
+      assert(keys.length == nKeys && keys.distinct.length == keys.length,
+        s"checkpoint must hold one row per key: ${keys.length} rows for $nKeys keys")
+      assert(leaves.forall {
+        case _: org.apache.spark.sql.execution.LogicalRDD => true
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.size <= 1024
+        case _ => false
+      }, s"window reads a leaf other than the aggregate and the offsets:\n$w")
+    }
     // every rank window must be PARTITIONED (by the histogram bucket) —
     // an unpartitioned WindowExec is a single-task sort of the key axis
     for (q <- Seq(par, graft.ops.Experiments.gini(items, col("k"), col("v")))) {
