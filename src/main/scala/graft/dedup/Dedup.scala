@@ -471,14 +471,17 @@ object Dedup {
   def connectedComponentsFrom(seeds: DataFrame, pairs: DataFrame,
       maxIters: Int = 20): DataFrame = {
     // symmetrize via explode, not union: a self-union would run the pair
-    // plan twice. Cached pre-partitioned on the per-round join key, so no
-    // round re-shuffles the edges; round 1's job materializes the cache.
-    val edges = graft.ops.Par.pinned(
-      pairs.select(explode(array(
+    // plan twice. Cached hash-partitioned on dst at the session's shuffle
+    // partition count, the count the labels exchange gets, so no round
+    // re-shuffles the edges. (Par.pinned leaves a small edge set
+    // unpartitioned, and a pin to one partition plans as a single
+    // partition; either way every round re-shuffled the cached edges.)
+    // Round 1's job materializes the cache.
+    val edges = pairs.select(explode(array(
           struct(col("id_a").as("src"), col("id_b").as("dst")),
           struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")),
-      col("dst"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .repartition(col("dst"))
       .cache()
     val noOld = lit(null).cast(seeds.schema("cluster").dataType)
     try {
@@ -603,8 +606,11 @@ object Dedup {
   }
 
   /** One row per (signature, band): (id, simhash, bk) with the packed key
-    * bk = band · 2^bandBits + the band's bits. The caller may shift
-    * `spare` more bits in below bk; all of it must fit 63 bits.
+    * bk = band · 2^bandBits + the band's bits, so band = bk >> bandBits.
+    * Every narrow banded frame (self-join, touching probe, screen index and
+    * probe, persistent index) is built here, so the key is defined once.
+    * The caller may shift `spare` more bits in below bk; all of it must
+    * fit 63 bits.
     */
   private def bandedSigs(sigs: DataFrame, bandBits: Int, nBands: Int, spare: Int): DataFrame = {
     require(bandBits + bitWidth(nBands - 1) + spare <= 63,
@@ -661,7 +667,7 @@ object Dedup {
     * SimHash near-dups, comparing neither base-to-base nor batch-to-batch.
     *
     * This is the asymmetric shape real ingest needs: at scale the base's
-    * banded signature index is materialized ONCE (bucketed by (band, bkey))
+    * banded signature index is materialized ONCE (bucketed by band key)
     * and each arriving batch only hashes and probes itself — per-batch cost
     * is O(|batch| · nBands) probe rows against a bucketed index, never a
     * rescan of the base; recall within `maxHamming` is pigeonhole-exact
@@ -684,9 +690,10 @@ object Dedup {
       simhashBandedIndex(base, idCol, textCol, bits, nBands),
       batch, idCol, textCol, bits, nBands, maxHamming)
 
-  /** The base corpus's banded signature index — (base_id, sig_b, band,
-    * bkey). Build (and cache/materialize) ONCE; probe every arriving batch
-    * against it with [[screenAgainstIndex]].
+  /** The base corpus's banded signature index — (base_id, sig_b, bk), bk
+    * the packed band key of [[bandedSigs]]. Build (and cache/materialize)
+    * ONCE; probe every arriving batch against it with
+    * [[screenAgainstIndex]].
     */
   def simhashBandedIndex(
       base: DataFrame,
@@ -695,17 +702,9 @@ object Dedup {
       bits: Int = 48,
       nBands: Int = 12): DataFrame = {
     require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
-    val spark = base.sparkSession
-    import spark.implicits._
-    val bandBits = bits / nBands
-    val mask = (1L << bandBits) - 1
     graft.ops.Par.pinned(
-      simhash(base, idCol, textCol, bits)
-        .crossJoin(broadcast((0 until nBands).toDF("band")))
-        .withColumn("bkey", expr(s"shiftright(simhash, band * $bandBits) & $mask")),
-      col("band"), col("bkey"))
-      .select(col("id").as("base_id"), col("simhash").as("sig_b"),
-        col("band"), col("bkey"))
+      bandedSigs(simhash(base, idCol, textCol, bits), bits / nBands, nBands, 0), col("bk"))
+      .select(col("id").as("base_id"), col("simhash").as("sig_b"), col("bk"))
   }
 
   /** Probe a batch against a prebuilt [[simhashBandedIndex]]. */
@@ -720,19 +719,13 @@ object Dedup {
     require(maxHamming < nBands,
       s"pigeonhole guarantee needs maxHamming ($maxHamming) < nBands ($nBands)")
     require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
-    val spark = batch.sparkSession
-    import spark.implicits._
     val bandBits = bits / nBands
-    val mask = (1L << bandBits) - 1
-    val ENC = 1000000000000L // hamming ≤ 63 ≪ 10¹², ids < 10¹² by contract
     val probe = graft.ops.Par.pinned(
-      simhash(batch, idCol, textCol, bits)
-        .crossJoin(broadcast((0 until nBands).toDF("band")))
-        .withColumn("bkey", expr(s"shiftright(simhash, band * $bandBits) & $mask")),
-      col("band"), col("bkey"))
-      .select(col("id"), col("simhash").as("sig_n"), col("band"), col("bkey"))
-    verifyScreenMatches(probe.join(index, Seq("band", "bkey"))
-      .filter(firstMatchingBand(col("band"), col("sig_n"), col("sig_b"), bandBits, nBands)),
+      bandedSigs(simhash(batch, idCol, textCol, bits), bandBits, nBands, 0), col("bk"))
+      .select(col("id"), col("simhash").as("sig_n"), col("bk"))
+    verifyScreenMatches(probe.join(index, "bk")
+      .filter(firstMatchingBand(shiftright(col("bk"), bandBits),
+        col("sig_n"), col("sig_b"), bandBits, nBands)),
       maxHamming)
   }
 
@@ -766,8 +759,8 @@ object Dedup {
   }
 
   /** Persist the banded signature index as an on-disk BUCKETED table,
-    * hash-bucketed on the combined band key `bk = band·2^bandBits + bkey`
-    * (injective in (band, bkey), so a join on `bk` alone is exact) — the
+    * hash-bucketed on its packed band key `bk` ([[bandedSigs]]; injective
+    * in (band, band bits), so a join on `bk` alone is exact) — the
     * cross-JOB layout the incremental screen needs at 100 TB: the base
     * corpus is hashed and banded ONCE, lives on disk, and every future
     * probe joins it CO-LOCATED (zero shuffle on either side, asserted by
@@ -782,11 +775,8 @@ object Dedup {
       bits: Int = 48,
       nBands: Int = 12,
       nBuckets: Int = 16): DataFrame = {
-    val bandBits = bits / nBands
     graft.sources.PartitionedSink.writeBucketedTable(
-      simhashBandedIndex(base, idCol, textCol, bits, nBands)
-        .withColumn("bk", col("band") * (1L << bandBits) + col("bkey")),
-      "bk", nBuckets, table)
+      simhashBandedIndex(base, idCol, textCol, bits, nBands), "bk", nBuckets, table)
   }
 
   /** Probe a batch against a [[persistentBandedIndex]] with a co-located
@@ -814,7 +804,7 @@ object Dedup {
     require(graft.sources.PartitionedSink.isShuffleFree(joined),
       "persistent-index probe join introduced a shuffle exchange — " +
         "index and probe must be co-bucketed on bk")
-    // bk = band·2^bandBits + bkey, so band = bk >> bandBits (row-local)
+    // band = bk >> bandBits (row-local)
     val bandBits = bits / nBands
     verifyScreenMatches(joined
       .filter(firstMatchingBand(shiftright(col("bk"), bandBits),
@@ -836,15 +826,8 @@ object Dedup {
       nBands: Int = 12,
       nBuckets: Int = 16): DataFrame = {
     require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val bandBits = bits / nBands
-    val mask = (1L << bandBits) - 1
-    val probe = simhash(batch, idCol, textCol, bits)
-      .crossJoin(broadcast((0 until nBands).toDF("band")))
-      .withColumn("bkey", expr(s"shiftright(simhash, band * $bandBits) & $mask"))
-      .select(col("id"), col("simhash").as("sig_n"),
-        (col("band") * (1L << bandBits) + col("bkey")).as("bk"))
+    val probe = bandedSigs(simhash(batch, idCol, textCol, bits), bits / nBands, nBands, 0)
+      .select(col("id"), col("simhash").as("sig_n"), col("bk"))
     val probeTbl = graft.sources.PartitionedSink.writeBucketedTable(
       probe, "bk", nBuckets, probeTable)
     probeTbl.hint("merge")

@@ -18,8 +18,10 @@ import org.slf4j.Logger
   *     nor the frame returned);
   *   - logs one line: `<name> round N: <metric>=X, Ys`.
   *
-  * After `maxRounds` rounds without `done`, the last checkpoint is
-  * released and `require` fails with `failure`.
+  * After `maxRounds` rounds without `done`, `require` fails with
+  * `failure`. On that or any other exception (from `step`, the checkpoint
+  * job or `done`) the round's checkpoint is released before rethrowing,
+  * so a failed run holds no blocks.
   */
 object Iterate {
 
@@ -36,20 +38,25 @@ object Iterate {
     var state = init
     var round = 0
     var converged = false
-    while (!converged && round < maxRounds) {
-      val t0 = System.nanoTime()
-      round += 1
-      val obs = Observation()
-      val next = step(state).observe(obs, metric._2.as("m")).localCheckpoint(true)
-      if (round > 1) release(state)
-      state = next
-      val m = obs.get("m").asInstanceOf[Number].longValue
-      converged = done(m)
-      log.info(f"$name round $round: ${metric._1}=$m, ${(System.nanoTime() - t0) / 1e9}%.1fs")
+    try {
+      while (!converged && round < maxRounds) {
+        val t0 = System.nanoTime()
+        round += 1
+        val obs = Observation()
+        val next = step(state).observe(obs, metric._2.as("m")).localCheckpoint(true)
+        if (round > 1) release(state)
+        state = next
+        val m = obs.get("m").asInstanceOf[Number].longValue
+        converged = done(m)
+        log.info(f"$name round $round: ${metric._1}=$m, ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      }
+      require(converged, failure)
+      state
+    } catch {
+      case e: Throwable =>
+        if (state ne init) release(state)
+        throw e
     }
-    if (!converged && round > 0) release(state)
-    require(converged, failure)
-    state
   }
 
   /** Drops the blocks of a frame made by `localCheckpoint`; reading it

@@ -64,4 +64,20 @@ class IterateSpec extends SparkTestBase {
     assert(e.getMessage == "requirement failed: stuck after 3 rounds")
     assert(held.isEmpty)
   }
+
+  test("fixpoint: an exception in a later round releases the round before it") {
+    val log = org.slf4j.LoggerFactory.getLogger("graft.ops.IterateSpec")
+    val init = (1L to 5L).toDF("x")
+    var round = 0
+    val (e, held) = rddsHeldAfter(intercept[IllegalStateException] {
+      Iterate.fixpoint(init, log, "boom", "n" -> count(lit(1)), 5, "never") { s =>
+        round += 1
+        if (round == 2) throw new IllegalStateException("step failed in round 2")
+        s.select((col("x") + 1).as("x"))
+      }(_ => false)
+    })
+    assert(e.getMessage == "step failed in round 2")
+    assert(held.isEmpty)
+    assert(init.count() == 5)
+  }
 }
