@@ -180,7 +180,6 @@ object DedupQueries extends QueryPack {
         (known, batchIds) => Dedup.simhashJaccardPairsTouchingPresigned(
           known, batchIds, "doc_id", "text", "__sig", N, CLUSTER_THR),
         nChunks = 5,
-        queryName = s"stream_cc_${math.abs(dir.hashCode)}",
         enrich = batch => batch.join(
           Dedup.simhash(batch, "doc_id", "text", 48)
             .select(col("id").as("doc_id"), col("simhash").as("__sig")),

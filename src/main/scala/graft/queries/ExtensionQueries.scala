@@ -175,8 +175,7 @@ object ExtensionQueries extends QueryPack {
 
   /** Sessionization via flatMapGroupsWithState (12h gap). */
   private def sessionQ(spark: SparkSession, dir: String): DataFrame =
-    StreamingOps.sessionize(spark, dir, gapHours = 12,
-      queryName = s"stream_sessions_${math.abs(dir.hashCode)}")
+    StreamingOps.sessionize(spark, dir, gapHours = 12)
 
   /** Period-partitioned sink + partition-pruned fold scan: write events
     * partitioned by day under target/, re-read with fold 0's train filter —
@@ -399,40 +398,33 @@ object ExtensionQueries extends QueryPack {
     "q_partitioned_fold_scan" -> (partitionedScanQ _),
     "q_bucketed_join" -> (bucketedJoinQ _),
     "q_stream_dedup" -> ((s, dir) =>
-      StreamingOps.streamDedupUsersPerDay(s, dir,
-        queryName = s"stream_dedup_${math.abs(dir.hashCode)}")),
+      StreamingOps.streamDedupUsersPerDay(s, dir)),
     "q_stream_screen" -> ((s, dir) =>
-      StreamingOps.streamScreen(s, dir,
-        queryName = s"stream_screen_${math.abs(dir.hashCode)}")),
+      StreamingOps.streamScreen(s, dir)),
     // filter-on-ingest: the row-local C4 heuristic filter applied to a
     // document stream; per-doc independence ⇒ batch oracle verifies it
     "q_stream_filter" -> ((s, dir) =>
-      StreamingOps.streamC4Filter(s, dir,
-        queryName = s"stream_c4_${math.abs(dir.hashCode)}")),
+      StreamingOps.streamC4Filter(s, dir)),
     // stream-stream attribution join: purchases pair with the same user's
     // clicks in the preceding hour, both sides unbounded; watermark +
     // time-range bound the join state
     "q_stream_join" -> ((s, dir) =>
-      StreamingOps.streamStreamJoin(s, dir,
-        queryName = s"stream_join_${math.abs(dir.hashCode)}")),
+      StreamingOps.streamStreamJoin(s, dir)),
     // semantic screen on ingest: per-vector argmax vs the static bench
     // side ⇒ chunking-invariant, batch oracle verifies it
     "q_stream_semantic" -> ((s, dir) =>
       StreamingOps.streamSemanticScreen(s, dir,
-        threshold = SimilarityQueries.SEM_THR,
-        queryName = s"stream_semantic_${math.abs(dir.hashCode)}")),
+        threshold = SimilarityQueries.SEM_THR)),
     // constant-space exact-membership screen on ingest: bitmap built once,
     // each micro-batch is k zero-join bit-tests; batch oracle verbatim
     "q_stream_bloom" -> ((s, dir) =>
       StreamingOps.streamBloomScreen(s, dir,
-        DedupQueries.BLOOM_M, DedupQueries.BLOOM_K,
-        queryName = s"stream_bloom_${math.abs(dir.hashCode)}")),
+        DedupQueries.BLOOM_M, DedupQueries.BLOOM_K)),
     // sub-document dedup on ingest: paragraph ScreenIndex built once,
     // bloom-confined exact election per micro-batch; batch oracle verbatim
     "q_stream_paragraph" -> ((s, dir) =>
       StreamingOps.streamParagraphScreen(s, dir, paraTokens = 10,
-        DedupQueries.BLOOM_M, DedupQueries.BLOOM_K,
-        queryName = s"stream_paragraph_${math.abs(dir.hashCode)}")),
+        DedupQueries.BLOOM_M, DedupQueries.BLOOM_K)),
   )
 
   private val topKOracle: String =

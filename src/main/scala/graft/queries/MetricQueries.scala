@@ -221,8 +221,7 @@ object MetricQueries extends QueryPack {
     // threshold) scorer's reliability bins maintained on ingest —
     // decomposable (n, Σp, Σy) cells per micro-batch, merged at close
     "q_stream_calibration" -> ((s, dir) =>
-      graft.streaming.StreamingOps.streamCalibration(s, dir, bins = 10,
-        queryName = s"stream_calib_${math.abs(dir.hashCode)}")),
+      graft.streaming.StreamingOps.streamCalibration(s, dir, bins = 10)),
     "q_metrics_multilabel" -> (multilabelScores _),
   )
 

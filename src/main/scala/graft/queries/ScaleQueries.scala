@@ -242,8 +242,7 @@ object ScaleQueries extends QueryPack {
     nll.count() // train the LM once, BEFORE the stream starts
     graft.streaming.StreamingOps.streamReleaseCompose(spark, dir,
       batch => curationPerDoc(batch, nll),
-      redacted => curationClose(redacted),
-      queryName = s"stream_curation_${math.abs(dir.hashCode)}")
+      redacted => curationClose(redacted))
   }
 
   /** LM-NLL cut for [[curationV2]]: sits in the corpus's upper tail

@@ -98,8 +98,7 @@ object SketchQueries extends QueryPack {
     "q_kmv_overlap" -> (kmvQ _),
     "q_cms_join_size" -> (cmsJoinSizeQ _),
     "q_stream_hll" -> ((s, dir) =>
-      graft.streaming.StreamingOps.streamHllDistinct(s, dir,
-        queryName = s"stream_hll_${math.abs(dir.hashCode)}")),
+      graft.streaming.StreamingOps.streamHllDistinct(s, dir)),
   )
 
   private val toks = "string_split(text, ' ')"

@@ -320,11 +320,9 @@ object StatQueries extends QueryPack {
     }),
     "q_quality_card" -> (qualityCardQ _),
     "q_stream_quantile" -> ((s, dir) =>
-      graft.streaming.StreamingOps.streamExactQuantiles(s, dir, QS_TOK,
-        queryName = s"stream_quantile_${math.abs(dir.hashCode)}")),
+      graft.streaming.StreamingOps.streamExactQuantiles(s, dir, QS_TOK)),
     "q_stream_weighted_sample" -> ((s, dir) =>
-      graft.streaming.StreamingOps.streamWeightedSample(s, dir, 100, "ws",
-        queryName = s"stream_wsample_${math.abs(dir.hashCode)}")),
+      graft.streaming.StreamingOps.streamWeightedSample(s, dir, 100, "ws")),
     "q_char_entropy" -> (charEntropyQ _),
     // ε-DP published counts: per-(source, lang) document histogram under
     // seeded Laplace(1/ε) — the data-card numbers a release actually ships

@@ -518,8 +518,7 @@ object TextQueries extends QueryPack {
     // counts merged at close, the same drift arithmetic on the merged
     // frame — streamed == one-shot batch, batch oracle verbatim
     "q_stream_drift" -> ((s, dir) =>
-      graft.streaming.StreamingOps.streamDriftCard(s, dir,
-        queryName = s"stream_drift_${math.abs(dir.hashCode)}")),
+      graft.streaming.StreamingOps.streamDriftCard(s, dir)),
     // cross-source 8-gram overlap matrix: the inter-source dedup decision
     // card (which source pairs share boilerplate, and how much)
     "q_source_overlap" -> ((s, dir) =>

@@ -409,8 +409,7 @@ object WebQueries extends QueryPack {
     val ranks = graft.graph.LinkGraph.pagerank(edges, "src", "dst", iterations = 5)
       .select(col("node").as("host"), col("rank"))
     graft.streaming.StreamingOps.streamWarcRelease(
-      spark, fixture, ranks, RANK_MIN, releaseClose(spark, dir),
-      queryName = s"stream_webrel_${math.abs(dir.hashCode)}")
+      spark, fixture, ranks, RANK_MIN, releaseClose(spark, dir))
   }
 
   /** HITS over the same extracted link graph: the skew construction makes
@@ -552,8 +551,7 @@ object WebQueries extends QueryPack {
       pmod(col("doc_id") * 7919, lit(100000)).as("capture_ts"),
       pmod(col("doc_id"), lit(3)).as("content_class"))
     graft.streaming.StreamingOps.streamScd2(spark, dir, proj,
-      "url", "capture_ts", "content_class", "doc_id",
-      queryName = s"stream_scd2_${math.abs(dir.hashCode)}")
+      "url", "capture_ts", "content_class", "doc_id")
       .select(col("url"), col("version"), col("effective_from"), col("effective_to"),
         col("content_class"), col("doc_id").as("since_doc_id"))
       .orderBy(col("url"), col("version"))
@@ -565,8 +563,7 @@ object WebQueries extends QueryPack {
     */
   private def streamWarcQ(spark: SparkSession, dir: String): DataFrame = {
     val pages = graft.streaming.StreamingOps.streamWarcIngest(
-      spark, warcFixture(spark, dir),
-      queryName = s"stream_warc_${math.abs(dir.hashCode)}")
+      spark, warcFixture(spark, dir))
     aggregatePages(spark, dir, pages)
   }
 

@@ -1,0 +1,98 @@
+package graft.streaming
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{lit, pmod}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+
+/** One run of one `Trigger.AvailableNow` stream of [[StreamingOps]]: the
+  * run's root, its staging, its drain and its batchId-keyed state. The
+  * contract is stated once, on [[StreamingOps]].
+  */
+private[streaming] final class StreamRun(spark: SparkSession, queryName: String) {
+  private val root =
+    org.apache.spark.SparkLocalDir.createTemp(spark.sparkContext, "stream").getPath
+  /** The query's checkpoint; a stateful query's state store lives in it. */
+  val checkpoint = s"$root/checkpoint"
+  /** Where [[stage]] writes its files. */
+  val staging = s"$root/staging"
+  private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+  /** Persists `df` until the drain ends or, when called inside a batch,
+    * until that batch ends.
+    */
+  def hold(df: DataFrame): DataFrame = held.synchronized { held += df.persist(); df }
+
+  /** A static side: held, and materialized before the stream starts. */
+  def cached(df: DataFrame): DataFrame = { hold(df).count(); df }
+
+  /** Stages `df` as one file per non-empty `pmod(key, nChunks)` bucket and
+    * streams the files back one per trigger.
+    */
+  def stage(df: DataFrame, nChunks: Int, key: Column): DataFrame =
+    stage(df.repartition(nChunks, pmod(key, lit(nChunks))).write.mode("overwrite").parquet(_))
+
+  /** Streams back, one file per trigger, what `write` puts in [[staging]]. */
+  def stage(write: String => Unit): DataFrame = {
+    write(staging)
+    spark.readStream.schema(spark.read.parquet(staging).schema)
+      .option("maxFilesPerTrigger", "1").parquet(staging)
+  }
+
+  /** Runs `body` on each micro-batch of `stream` until its available input
+    * is drained. `stream` is built inside the drain, so held frames are
+    * released if building it fails too.
+    */
+  def drain(stream: => DataFrame)(body: Batch => Unit): Unit =
+    run(stream.writeStream.foreachBatch { (df: DataFrame, id: Long) =>
+      val mark = held.synchronized(held.size)
+      try body(new Batch(df, id)) finally release(mark)
+    })
+
+  /** Drains `stream` into the memory table named after the query and
+    * returns that table.
+    */
+  def drainToMemory(stream: DataFrame, outputMode: String = "append"): DataFrame = {
+    run(stream.writeStream.format("memory").outputMode(outputMode))
+    stream.sparkSession.table(queryName)
+  }
+
+  private def run(writer: => DataStreamWriter[Row]): Unit =
+    try writer.queryName(queryName).option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    finally release(0)
+
+  private def release(from: Int): Unit = held.synchronized {
+    held.drop(from).foreach(_.unpersist(blocking = true))
+    held.dropRightInPlace(held.size - from)
+  }
+
+  private def path(name: String, batchId: Long) = s"$root/$name/batch=$batchId"
+
+  /** Every batch's output under `name`, with its batch id in column `batch`. */
+  def byBatch(name: String): DataFrame = spark.read.parquet(s"$root/$name")
+
+  /** Every batch's output under `name`. */
+  def all(name: String): DataFrame = byBatch(name).drop("batch")
+
+  /** The output of the last batch that wrote under `name`. */
+  def last(name: String): DataFrame = spark.read.parquet(path(name,
+    new java.io.File(s"$root/$name").list().map(_.stripPrefix("batch=").toLong).max))
+
+  /** One micro-batch: its rows, its id, and the run's state read in the
+    * batch's own session.
+    */
+  final class Batch private[StreamRun] (val df: DataFrame, val id: Long) {
+    /** Overwrites this batch's output under `name`. */
+    def write(name: String, out: DataFrame): Unit =
+      out.write.mode("overwrite").parquet(path(name, id))
+
+    /** Every output written under `name` so far. */
+    def all(name: String): DataFrame =
+      df.sparkSession.read.parquet(s"$root/$name").drop("batch")
+
+    /** The previous batch's output under `name`, if it wrote one. */
+    def previous(name: String): Option[DataFrame] =
+      Some(path(name, id - 1)).filter(p => id > 0 && new java.io.File(p).exists)
+        .map(df.sparkSession.read.parquet(_))
+  }
+}

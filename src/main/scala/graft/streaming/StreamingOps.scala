@@ -2,27 +2,61 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.LongType
 
 /** Structured Streaming extension (SURVEY §7.6 — not a reference
   * capability): the period axis of a panel is maintained incrementally from
   * an event stream via watermarked tumbling-window aggregation; fold
   * (re-)planning happens per micro-batch on the tiny aggregated axis.
+  *
+  * Every stream here drains its available input under
+  * `Trigger.AvailableNow` through one [[StreamRun]], whose contract holds
+  * for all of them:
+  *   - each call gets a fresh root under Spark's local dir
+  *     (`spark.local.dir` / `SPARK_LOCAL_DIRS`), deleted at JVM shutdown, so
+  *     runs never share state, whatever their `queryName` (which names only
+  *     the query, and a memory sink's table). The query checkpoint, staged
+  *     input and batch outputs live there, and the returned frame reads
+  *     them, so it stays readable after the call returns;
+  *   - each batch output is written under its batchId with mode overwrite
+  *     and state is read back by explicit batchId, so a batch replayed under
+  *     `foreachBatch`'s at-least-once delivery rewrites identical output;
+  *   - static sides (cached before the stream starts) are released when the
+  *     drain ends, and frames a batch persists when that batch ends, on
+  *     success or failure alike.
   */
 object StreamingOps {
 
-  /** Recursive delete for a sink staging dir. `Files.walk` returns a live
-    * directory stream that must be closed — leaking it holds a handle on
-    * the directory being deleted (a hard failure on some platforms).
+  /** `dir/<file>` as a file stream, one file per trigger. */
+  private def fileStream(spark: SparkSession, dir: String, file: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(s"$dir/$file").schema)
+      .option("pathGlobFilter", file).option("maxFilesPerTrigger", "1").parquet(dir)
+
+  /** The events table as a stream, `ts` read as a session-TZ timestamp
+    * whichever parquet flavor stores it.
     */
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      val s = java.nio.file.Files.walk(root)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally s.close()
-    }
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+    graft.sources.Tables.tsConf(spark)
+    val s = fileStream(spark, dir, "events.parquet")
+    if (s.schema("ts").dataType == LongType) s.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    else s
+  }
+
+  /** The response records of the WARC archives under `warcDir`, streamed
+    * one archive per trigger.
+    */
+  private def warcResponses(spark: SparkSession, warcDir: String): DataFrame = {
+    import spark.implicits._
+    spark.readStream.format("binaryFile")
+      .schema(org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat.schema)
+      .option("pathGlobFilter", "*.warc*")
+      .option("maxFilesPerTrigger", "1")
+      .load(warcDir)
+      .select(col("path"), col("content")).as[(String, Array[Byte])]
+      .flatMap((graft.sources.WarcSource.parseArchive _).tupled)
+      .filter(col("warc_type") === "response")
+      .toDF()
+  }
 
   /** Event projected for sessionization: micros keep the gap arithmetic in
     * exact integer math (identical in the DuckDB oracle via epoch_us); the
@@ -138,30 +172,13 @@ object StreamingOps {
   def sessionize(spark: SparkSession, dir: String, gapHours: Int = 12,
       queryName: String = "stream_sessions"): DataFrame = {
     import spark.implicits._
-    graft.sources.Tables.tsConf(spark)
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-
-    var stream = spark.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    if (rawSchema("ts").dataType == LongType)
-      stream = stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-
     val gapUs = gapHours.toLong * 3600L * 1000000L
-    val events = stream
+    val events = eventsStream(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("ts"))
       .as[UserEvent]
-
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sessionize_ckpt").toString
-    val query = sessionizeStream(events, gapUs).writeStream
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-
-    val closed = spark.table(queryName)
-    val open = spark.read.format("statestore").load(ckpt)
+    val run = new StreamRun(spark, queryName)
+    val closed = run.drainToMemory(sessionizeStream(events, gapUs).toDF())
+    val open = spark.read.format("statestore").load(run.checkpoint)
       .select(
         col("key.value").as("user_id"),
         col("value.groupState.session_idx").as("session_idx"),
@@ -185,27 +202,12 @@ object StreamingOps {
       spark: SparkSession,
       dir: String,
       queryName: String = "stream_dedup"): DataFrame = {
-    graft.sources.Tables.tsConf(spark)
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    var stream = spark.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    if (rawSchema("ts").dataType == LongType)
-      stream = stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-
-    val deduped = stream
+    val deduped = eventsStream(spark, dir)
       .withColumn("period", to_date(col("ts")))
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("user_id", "period")
       .select(col("user_id"), col("period"))
-
-    val query = deduped.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-
-    spark.table(queryName)
+    new StreamRun(spark, queryName).drainToMemory(deduped)
       .groupBy(col("period"))
       .agg(count(lit(1)).as("n_users"))
   }
@@ -219,34 +221,14 @@ object StreamingOps {
       spark: SparkSession,
       dir: String,
       queryName: String = "stream_period_agg"): DataFrame = {
-    graft.sources.Tables.tsConf(spark)
-    // schema from a batch peek (ts arrives as raw nanos long)
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-
-    // the parquet file-stream source needs a directory; glob-filter the
-    // single events file inside the sf dir
-    var stream = spark.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    if (rawSchema("ts").dataType == LongType)
-      stream = stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-
-    val agg = stream
+    val agg = eventsStream(spark, dir)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day").as("w"))
       .agg(
         count(lit(1)).as("n_events"),
         round(sum(col("value")), 6).as("sum_value"),
         round(avg(col("value")), 6).as("avg_value"))
-
-    val query = agg.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-
-    spark.table(queryName)
+    new StreamRun(spark, queryName).drainToMemory(agg, "complete")
       .select(to_date(col("w.start")).as("period"),
         col("n_events"), col("sum_value"), col("avg_value"))
   }
@@ -272,31 +254,18 @@ object StreamingOps {
       spark: SparkSession,
       dir: String,
       queryName: String = "stream_join"): DataFrame = {
-    graft.sources.Tables.tsConf(spark)
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    def side(tpe: String, alias: String): DataFrame = {
-      var s0 = spark.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      if (rawSchema("ts").dataType == LongType)
-        s0 = s0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      s0.filter(col("event_type") === tpe)
+    def side(tpe: String, alias: String): DataFrame =
+      eventsStream(spark, dir).filter(col("event_type") === tpe)
         .select(col("event_id").as(s"${alias}_event_id"),
           col("user_id").as(s"${alias}_user_id"),
           col("ts").as(s"${alias}_ts"),
           col("value").as(s"${alias}_value"))
         .withWatermark(s"${alias}_ts", "40 days")
-    }
     val joined = side("click", "click").join(side("purchase", "purchase"),
       col("click_user_id") === col("purchase_user_id") &&
         col("purchase_ts") >= col("click_ts") &&
         col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-    val query = joined.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName)
+    new StreamRun(spark, queryName).drainToMemory(joined)
       .select(col("click_event_id"), col("purchase_event_id"),
         col("click_user_id").as("user_id"),
         unix_micros(col("click_ts")).as("click_ts_us"),
@@ -315,23 +284,9 @@ object StreamingOps {
   def streamC4Filter(
       spark: SparkSession,
       dir: String,
-      queryName: String = "stream_c4"): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-    val flagged = graft.text.Heuristics.flags(stream, "doc_id", "text")
-    val query = flagged.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName)
-  }
+      queryName: String = "stream_c4"): DataFrame =
+    new StreamRun(spark, queryName).drainToMemory(graft.text.Heuristics.flags(
+      fileStream(spark, dir, "documents.parquet"), "doc_id", "text"))
 
   /** Streaming exact-membership Bloom screen: the base corpus is folded
     * into a bloom bitmap ONCE before the stream starts and the word array
@@ -351,36 +306,20 @@ object StreamingOps {
       k: Int,
       queryName: String = "stream_bloom"): DataFrame = {
     import graft.dedup.Bloom
-    val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    val base = spark.read.parquet(path).filter(col("doc_id") % 5 =!= 0)
+    val base = spark.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") % 5 =!= 0)
       .select(md5(col("text")).as("fp"))
     val words = Bloom.collectWords(Bloom.bitmap(base, col("fp"), mBits, k), mBits)
-    val baseFps = base.distinct().withColumn("__e", lit(1)).cache()
-    baseFps.count() // materialize before the stream starts
-    val outDir = s"target/stream_bloom_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(outDir))
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .filter(col("doc_id") % 5 === 0)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val probe = batch.select(col("doc_id"), md5(col("text")).as("fp"))
-        val exact = probe.join(broadcast(baseFps), Seq("fp"), "left")
-          .select(col("doc_id"), coalesce(col("__e"), lit(0)).as("exact_hit"))
-        Bloom.probeBroadcast(words, probe, col("fp"), mBits, k)
-          .select(col("doc_id"), col("bloom_hit").cast("int").as("bloom_hit"))
-          .join(exact, Seq("doc_id"))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    baseFps.unpersist()
-    spark.read.parquet(outDir).drop("batch")
+    val run = new StreamRun(spark, queryName)
+    val baseFps = run.cached(base.distinct().withColumn("__e", lit(1)))
+    run.drain(fileStream(spark, dir, "documents.parquet").filter(col("doc_id") % 5 === 0)) { b =>
+      val probe = b.df.select(col("doc_id"), md5(col("text")).as("fp"))
+      val exact = probe.join(broadcast(baseFps), Seq("fp"), "left")
+        .select(col("doc_id"), coalesce(col("__e"), lit(0)).as("exact_hit"))
+      b.write("out", Bloom.probeBroadcast(words, probe, col("fp"), mBits, k)
+        .select(col("doc_id"), col("bloom_hit").cast("int").as("bloom_hit"))
+        .join(exact, Seq("doc_id")))
+    }
+    run.all("out")
   }
 
   /** Streaming sub-document (paragraph) screen: the Dolma deployment shape
@@ -398,31 +337,15 @@ object StreamingOps {
       k: Int,
       queryName: String = "stream_paragraph"): DataFrame = {
     import graft.text.ParagraphDedup
-    val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    val base = spark.read.parquet(path).filter(col("doc_id") % 5 =!= 0)
+    val base = spark.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") % 5 =!= 0)
     val index = ParagraphDedup.buildScreenIndex(base, "doc_id", "text",
       paraTokens, mBits, k)
-    index.basePar.cache()
-    index.basePar.count() // materialize before the stream starts
-    val outDir = s"target/stream_paragraph_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(outDir))
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .filter(col("doc_id") % 5 === 0)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ParagraphDedup.screenBatch(index, batch, "doc_id", "text")
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    index.basePar.unpersist()
-    spark.read.parquet(outDir).drop("batch").withColumnRenamed("id", "doc_id")
+    val run = new StreamRun(spark, queryName)
+    run.cached(index.basePar)
+    run.drain(fileStream(spark, dir, "documents.parquet").filter(col("doc_id") % 5 === 0)) { b =>
+      b.write("out", ParagraphDedup.screenBatch(index, b.df, "doc_id", "text"))
+    }
+    run.all("out").withColumnRenamed("id", "doc_id")
   }
 
   /** Streaming ingest near-dup screen: documents arrive as a stream and
@@ -442,36 +365,13 @@ object StreamingOps {
       dir: String,
       queryName: String = "stream_screen"): DataFrame = {
     import graft.dedup.Dedup
-    val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    val base = spark.read.parquet(path).filter(col("doc_id") % 5 =!= 0)
-    val index = Dedup.simhashBandedIndex(base, "doc_id", "text").cache()
-    index.count() // materialize before the stream starts
-    // Stable per-query output root (like the partitioned-sink queries),
-    // wiped at run start — no unbounded temp-dir accumulation. Each batch
-    // writes mode=overwrite into its own batchId-keyed subpath, so a
-    // retried foreachBatch invocation replaces its rows instead of
-    // duplicating them (foreachBatch is at-least-once).
-    val outDir = s"target/stream_screen_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(outDir))
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .filter(col("doc_id") % 5 === 0)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Dedup.screenAgainstIndex(index, batch, "doc_id", "text")
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    index.unpersist()
-    // partition discovery surfaces batchId as a `batch` column — not part
-    // of the screen contract, drop it
-    spark.read.parquet(outDir).drop("batch").withColumnRenamed("id", "doc_id")
+    val base = spark.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") % 5 =!= 0)
+    val run = new StreamRun(spark, queryName)
+    val index = run.cached(Dedup.simhashBandedIndex(base, "doc_id", "text"))
+    run.drain(fileStream(spark, dir, "documents.parquet").filter(col("doc_id") % 5 === 0)) { b =>
+      b.write("out", Dedup.screenAgainstIndex(index, b.df, "doc_id", "text"))
+    }
+    run.all("out").withColumnRenamed("id", "doc_id")
   }
 
   /** Streaming semantic decontamination: embedding micro-batches probed
@@ -481,9 +381,7 @@ object StreamingOps {
     * cached once before the stream starts; each vector's argmax depends
     * only on that static side, so the streamed union is identical to the
     * one-shot batch screen however ingestion is chunked, and the batch
-    * oracle verifies the streaming path verbatim. Batch outputs land in
-    * batchId-keyed subpaths (overwrite) — retried invocations replace,
-    * never duplicate.
+    * oracle verifies the streaming path verbatim.
     */
   def streamSemanticScreen(
       spark: SparkSession,
@@ -491,39 +389,23 @@ object StreamingOps {
       threshold: Double,
       queryName: String = "stream_semantic"): DataFrame = {
     import graft.similarity.Similarity
-    val path = s"$dir/embeddings.parquet"
-    val schema = spark.read.parquet(path).schema
-    val bench = spark.read.parquet(path).filter(col("vec_id") % 20 === 0).cache()
-    bench.count() // materialize before the stream starts
-    val outDir = s"target/stream_semantic_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(outDir))
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .filter(col("vec_id") % 20 =!= 0)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Similarity.screenSemantic(batch, bench, "vec_id", "embedding", threshold)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    bench.unpersist()
-    spark.read.parquet(outDir).drop("batch").withColumnRenamed("id", "vec_id")
+    val run = new StreamRun(spark, queryName)
+    val bench = run.cached(
+      spark.read.parquet(s"$dir/embeddings.parquet").filter(col("vec_id") % 20 === 0))
+    run.drain(fileStream(spark, dir, "embeddings.parquet").filter(col("vec_id") % 20 =!= 0)) { b =>
+      b.write("out", Similarity.screenSemantic(b.df, bench, "vec_id", "embedding", threshold))
+    }
+    run.all("out").withColumnRenamed("id", "vec_id")
   }
 
   /** Generic stream-then-close composition for corpus RELEASE pipelines
     * (round-5 verdict item, deployed by `q_stream_curation`): the
     * per-document prefix (`perDoc` — filters, scoring against static
     * state, redaction) runs inside `foreachBatch` as documents arrive,
-    * each micro-batch landing idempotently in a batchId-keyed subpath
-    * (overwrite — retried invocations replace, never duplicate); the
-    * corpus-GLOBAL `close` step (dedup canonicalization, packing — stages
-    * whose result depends on every survivor) runs ONCE over the
-    * accumulated survivor store after the stream drains.
+    * each micro-batch landing in the survivor store; the corpus-GLOBAL
+    * `close` step (dedup canonicalization, packing — stages whose result
+    * depends on every survivor) runs ONCE over the accumulated survivor
+    * store after the stream drains.
     *
     * Because `perDoc` is per-document given its static sides, the
     * accumulated union equals the batch run of the same prefix no matter
@@ -538,23 +420,9 @@ object StreamingOps {
       perDoc: DataFrame => DataFrame,
       close: DataFrame => DataFrame,
       queryName: String = "stream_release"): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    val outDir = s"target/stream_release_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(outDir))
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        perDoc(batch).write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    close(spark.read.parquet(outDir).drop("batch"))
+    val run = new StreamRun(spark, queryName)
+    run.drain(fileStream(spark, dir, "documents.parquet"))(b => b.write("out", perDoc(b.df)))
+    close(run.all("out"))
   }
 
   /** Streaming crawl ingest: WARC archives arrive one per micro-batch (the
@@ -573,35 +441,13 @@ object StreamingOps {
     import graft.sources.WarcSource
     import graft.text.HtmlExtract
     HtmlExtract.register(spark)
-    import spark.implicits._
-    // the binaryFile schema is fixed by the format but the streaming source
-    // still demands it declared (same discipline as every file stream here)
-    val binarySchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length", LongType),
-      org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType)))
-    val pages = spark.readStream.format("binaryFile")
-      .schema(binarySchema)
-      .option("pathGlobFilter", "*.warc*")
-      .option("maxFilesPerTrigger", "1")
-      .load(warcDir)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap((WarcSource.parseArchive _).tupled)
-      .filter(col("warc_type") === "response")
+    val pages = warcResponses(spark, warcDir)
       .select(
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
         col("http_status"),
         HtmlExtract.htmlToText(WarcSource.decodedBody(col("body"), col("http_content_type"))).as("extracted"),
         HtmlExtract.htmlNoindex(WarcSource.decodedBody(col("body"), col("http_content_type"))).as("noindex"))
-    val query = pages.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName)
+    new StreamRun(spark, queryName).drainToMemory(pages)
   }
 
   /** The STREAMED web release: the whole crawl-to-corpus path deployed on
@@ -632,48 +478,24 @@ object StreamingOps {
     import graft.sources.WarcSource
     import graft.text.HtmlExtract
     HtmlExtract.register(spark)
-    import spark.implicits._
-    val outDir = s"target/stream_webrel_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(outDir))
-    val binarySchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length", LongType),
-      org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType)))
-    val rankFrame = broadcast(ranks).cache()
-    rankFrame.count() // materialize the static side before the stream starts
-    val stream = spark.readStream.format("binaryFile")
-      .schema(binarySchema)
-      .option("pathGlobFilter", "*.warc*")
-      .option("maxFilesPerTrigger", "1")
-      .load(warcDir)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pages = batch
-          .select(col("path"), col("content")).as[(String, Array[Byte])]
-          .flatMap((WarcSource.parseArchive _).tupled)
-          .filter(col("warc_type") === "response")
-          .select(
-            regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
-            regexp_extract(col("target_uri"), "^http://([^/]+)/", 1).as("host"),
-            HtmlExtract.htmlToText(
-              WarcSource.decodedBody(col("body"), col("http_content_type"))).as("extracted"),
-            HtmlExtract.htmlNoindex(
-              WarcSource.decodedBody(col("body"), col("http_content_type"))).as("noindex"))
-          .filter(!col("noindex"))
-          .withColumn("body", regexp_replace(col("extracted"), "^[^\n]*\n[^\n]*\n", ""))
-          .join(rankFrame, "host")
-          .filter(col("rank") >= rankMin)
-          .select(col("doc_id"), col("body"))
-        // batchId-keyed idempotent sink: a replayed batch overwrites its own
-        // directory instead of duplicating rows
-        pages.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    close(spark.read.parquet(outDir).drop("batch"))
+    val run = new StreamRun(spark, queryName)
+    val rankFrame = run.cached(broadcast(ranks))
+    run.drain(warcResponses(spark, warcDir)) { b =>
+      b.write("out", b.df
+        .select(
+          regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
+          regexp_extract(col("target_uri"), "^http://([^/]+)/", 1).as("host"),
+          HtmlExtract.htmlToText(
+            WarcSource.decodedBody(col("body"), col("http_content_type"))).as("extracted"),
+          HtmlExtract.htmlNoindex(
+            WarcSource.decodedBody(col("body"), col("http_content_type"))).as("noindex"))
+        .filter(!col("noindex"))
+        .withColumn("body", regexp_replace(col("extracted"), "^[^\n]*\n[^\n]*\n", ""))
+        .join(rankFrame, "host")
+        .filter(col("rank") >= rankMin)
+        .select(col("doc_id"), col("body")))
+    }
+    close(run.all("out"))
   }
 
   /** Streaming connected-components MAINTENANCE: near-dup cluster labels
@@ -690,11 +512,8 @@ object StreamingOps {
     *      STARS plus the new touching edges — propagation rounds pay for
     *      NEW connectivity only, the CC(star(CC(E)) ∪ E′) = CC(E ∪ E′)
     *      identity makes every snapshot exact;
-    *   3. the label snapshot lands in a batchId-keyed directory, and the
-    *      previous snapshot is read by EXPLICIT batchId — state inputs
-    *      are pure functions of (batchId), so a replayed foreachBatch
-    *      invocation rewrites identical output (idempotent under
-    *      at-least-once).
+    *   3. the label snapshot is written under the batch's id, and the
+    *      next batch reads it as its previous snapshot.
     *
     * The final snapshot therefore equals the one-shot CC of the whole
     * corpus — the batch oracle verifies the streamed path verbatim.
@@ -704,8 +523,8 @@ object StreamingOps {
     * deployment keeps the banded side as the PERSISTENT bucketed index
     * (`Dedup.persistentBandedIndex`) so even that linear pass amortizes
     * to index maintenance. The maintenance identity is the same.
-    */
-  /** @param enrich per-batch enrichment applied ONCE when a batch lands in
+    *
+    * @param enrich per-batch enrichment applied ONCE when a batch lands in
     *   the accumulator (round-8): derived columns that are pure functions
     *   of the row (e.g. the SimHash signature) are computed at arrival and
     *   STORED, so `pairsFn`'s accumulated side never re-derives them for
@@ -719,89 +538,39 @@ object StreamingOps {
       queryName: String = "stream_cc",
       enrich: DataFrame => DataFrame = identity): DataFrame = {
     import graft.dedup.Dedup
+    val run = new StreamRun(spark, queryName)
+    // one file per chunk, so ~nChunks micro-batches; ANY chunking yields the
+    // same final labels (arrival order only changes which batch pays for
+    // which edge)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val root = s"target/stream_cc_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(root))
-    // stage one file per chunk so AvailableNow + maxFilesPerTrigger=1
-    // delivers ~nChunks micro-batches; ANY chunking yields the same final
-    // labels (arrival order only changes which batch pays for which edge)
-    val staging = s"$root/staging"
-    docs.repartition(nChunks, pmod(col("doc_id"), lit(nChunks)))
-      .write.mode("overwrite").parquet(staging)
-    val schema = spark.read.parquet(staging).schema
-    def subdirs(p: String): Seq[String] = {
-      val f = new java.io.File(p)
-      if (!f.exists()) Seq.empty
-      else f.listFiles().filter(_.isDirectory).map(_.toString).toSeq.sorted
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        val batchDocs = enrich(batch).persist()
-        val batchIds = batchDocs.select(col("doc_id"))
-        val acc = subdirs(s"$root/acc")
-        val known = if (acc.isEmpty) batchDocs
-          else sp.read.parquet(acc: _*).unionByName(batchDocs)
-        // pairsFn(known, batchIds) must return exactly the verified pairs
-        // with >= 1 endpoint in the batch — the asymmetric banded probe
-        // (e.g. Dedup.simhashJaccardPairsTouching) does it without the
-        // accumulated side's quadratic self-join
-        val touching = pairsFn(known, batchIds).select("id_a", "id_b").distinct()
-        val prevDir = s"$root/labels/b${batchId - 1}"
-        val prev = if (batchId == 0 || !new java.io.File(prevDir).exists()) {
-          import sp.implicits._
-          Seq.empty[(Long, Long)].toDF("id", "cluster")
-        } else sp.read.parquet(prevDir)
-        val labels = Dedup.incrementalComponents(prev,
-          batchDocs.select(col("doc_id").as("id")), touching)
-        labels.write.mode("overwrite").parquet(s"$root/labels/b$batchId")
-        batchDocs.write.mode("overwrite").parquet(s"$root/acc/b$batchId")
-        batchDocs.unpersist()
-        ()
+    run.drain(run.stage(docs, nChunks, col("doc_id"))) { b =>
+      val sp = b.df.sparkSession
+      val batchDocs = run.hold(enrich(b.df))
+      val batchIds = batchDocs.select(col("doc_id"))
+      val known = if (b.id == 0) batchDocs else b.all("acc").unionByName(batchDocs)
+      // pairsFn(known, batchIds) must return exactly the verified pairs
+      // with >= 1 endpoint in the batch — the asymmetric banded probe
+      // (e.g. Dedup.simhashJaccardPairsTouching) does it without the
+      // accumulated side's quadratic self-join
+      val touching = pairsFn(known, batchIds).select("id_a", "id_b").distinct()
+      val prev = b.previous("labels").getOrElse {
+        import sp.implicits._
+        Seq.empty[(Long, Long)].toDF("id", "cluster")
       }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    val last = subdirs(s"$root/labels")
-      .maxBy(p => p.substring(p.lastIndexOf('b') + 1).toLong)
-    spark.read.parquet(last)
+      val labels = Dedup.incrementalComponents(prev,
+        batchDocs.select(col("doc_id").as("id")), touching)
+      try b.write("labels", labels) finally graft.ops.Iterate.release(labels)
+      b.write("acc", batchDocs)
+    }
+    run.last("labels")
   }
 
-  /** Streaming SCD2 maintenance — the capture-history table kept current
-    * as crawl chunks arrive, completing the maintenance-on-ingest trio
-    * (near-dup screen, cluster labels, now version history). Per
-    * micro-batch:
-    *
-    *   1. the batch's captures (via `captureProj`, a row-local
-    *      projection) land in a batchId-keyed accumulator dir;
-    *   2. ONLY the batch's keys rebuild: the accumulated captures filter
-    *      to the touched keys (a key's history depends on nothing else)
-    *      and [[graft.ops.Scd2.buildHistory]] re-derives those keys'
-    *      intervals — work per batch is proportional to touched keys'
-    *      capture counts, never the table;
-    *   3. the rebuilt slice lands in `hist/batch=<id>`; the CURRENT
-    *      history of a key is its rows from the LATEST batch that
-    *      touched it (resolved at read time by a per-key max-batch
-    *      aggregate + join — decomposable, no window).
-    *
-    * The last batch touching a key saw ALL its captures, so its rebuilt
-    * rows equal the one-shot batch `buildHistory` for that key — the
-    * final table is verbatim-verifiable by the batch oracle. All state
-    * inputs are pure functions of batchId ⇒ idempotent under
-    * foreachBatch's at-least-once replays.
-    */
   /** STREAMING HLL distinct-count maintenance: the mergeable-summaries
     * property ([[graft.functions.DistinctSketch]]) deployed on ingest.
     * Each micro-batch builds its own per-group register table (one
-    * bounded aggregate over the batch, ≤ groups·64 rows) and lands it in
-    * a batchId-keyed staging dir — idempotent under Structured Streaming
-    * batch replay because register max-merge is idempotent and the
-    * per-batch write is an overwrite. The corpus-wide sketch is the
-    * register-wise max across batch dirs, computed once after the drain;
+    * bounded aggregate over the batch, ≤ groups·64 rows) and stores it.
+    * The corpus-wide sketch is the register-wise max across batches,
+    * computed once after the drain;
     * streamed ≡ batch holds by the merge property (spec-proven), under
     * ANY trigger chunking. At 100 TB this is the shape distinct-count
     * dashboards use: per-shard/per-day register tables on disk, merged at
@@ -817,30 +586,15 @@ object StreamingOps {
       nChunks: Int = 5,
       queryName: String = "stream_hll"): DataFrame = {
     import graft.functions.DistinctSketch
+    val run = new StreamRun(spark, queryName)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val root = s"target/stream_hll_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(root))
-    val staging = s"$root/staging"
-    docs.repartition(nChunks, pmod(col("doc_id"), lit(nChunks)))
-      .write.mode("overwrite").parquet(staging)
-    val schema = spark.read.parquet(staging).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DistinctSketch.hllRegisters(batch, col("lang"), col("text"), "hll")
-          .write.mode("overwrite").parquet(s"$root/regs/b$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    val merged = spark.read.parquet(s"$root/regs/*")
+    run.drain(run.stage(docs, nChunks, col("doc_id"))) { b =>
+      b.write("regs", DistinctSketch.hllRegisters(b.df, col("lang"), col("text"), "hll"))
+    }
+    val merged = run.all("regs")
       .groupBy(col("grp"), col("bucket")).agg(max(col("reg")).as("reg"))
     val withAll = merged.unionByName(DistinctSketch.hllMergeAll(merged))
-    val corpus = spark.read.parquet(staging)
+    val corpus = spark.read.parquet(run.staging)
     val exact = corpus.groupBy(col("lang").as("grp"))
       .agg(countDistinct(col("text")).as("n_exact"))
       .unionByName(corpus.agg(countDistinct(col("text")).as("n_exact"))
@@ -857,8 +611,8 @@ object StreamingOps {
     * identity ([[graft.ops.WeightedSample.esKey]]), a weight-proportional
     * without-replacement sample of a growing corpus reduces to "keep the k
     * largest keys seen so far": each micro-batch writes its own local
-    * top-k candidate set (batchId-keyed idempotent store — any global
-    * winner is by definition inside its batch's top-k), and the close
+    * top-k candidate set (any global winner is by definition inside its
+    * batch's top-k), and the close
     * takes the top-k of the candidate union. Per-batch state is ≤ k rows;
     * nothing ever rescans history; streamed result ≡ the one-shot batch
     * sample row for row under any trigger chunking.
@@ -875,30 +629,15 @@ object StreamingOps {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("source"),
         TextFunctions.bpeTokenCount(col("text")).cast("long").as("weight"))
-    val root = s"target/stream_wsample_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(root))
-    val staging = s"$root/staging"
-    docs.repartition(nChunks, pmod(col("doc_id"), lit(nChunks)))
-      .write.mode("overwrite").parquet(staging)
-    val schema = spark.read.parquet(staging).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .withColumn("es_key",
-            WeightedSample.esKey(col("doc_id"), col("weight"), seed))
-          .orderBy(col("es_key").desc, col("doc_id").asc)
-          .limit(k)
-          .write.mode("overwrite").parquet(s"$root/cand/b$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    spark.read.parquet(s"$root/cand/*")
+    val run = new StreamRun(spark, queryName)
+    run.drain(run.stage(docs, nChunks, col("doc_id"))) { b =>
+      b.write("cand", b.df
+        .withColumn("es_key",
+          WeightedSample.esKey(col("doc_id"), col("weight"), seed))
+        .orderBy(col("es_key").desc, col("doc_id").asc)
+        .limit(k))
+    }
+    run.all("cand")
       .orderBy(col("es_key").desc, col("doc_id").asc)
       .limit(k)
       .select(col("doc_id"), col("source"), col("weight"),
@@ -907,8 +646,8 @@ object StreamingOps {
 
   /** STREAMING exact quantiles over a bounded-integer domain: the value
     * histogram is a decomposable aggregate, so each micro-batch writes its
-    * own (grp, v, cnt) cells (batchId-keyed idempotent store) and the
-    * close merges by sum and walks ranks exactly like the batch operator.
+    * own (grp, v, cnt) cells and the close merges by sum and walks ranks
+    * exactly like the batch operator.
     * Contract: the DISTINCT-VALUE axis must be bounded (token counts,
     * score buckets — here ≤ a few hundred cells per group); for wide
     * domains run [[graft.ops.Quantiles.exactQuantiles]]' refinement at
@@ -924,32 +663,16 @@ object StreamingOps {
       queryName: String = "stream_quantile"): DataFrame = {
     import graft.text.TextFunctions
     import org.apache.spark.sql.types._
+    val run = new StreamRun(spark, queryName)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val root = s"target/stream_quantile_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(root))
-    val staging = s"$root/staging"
-    docs.repartition(nChunks, pmod(col("doc_id"), lit(nChunks)))
-      .write.mode("overwrite").parquet(staging)
-    val schema = spark.read.parquet(staging).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
     def cells(df: DataFrame): DataFrame = {
       val tok = TextFunctions.bpeTokenCount(col("text")).cast("long")
       df.select(col("lang").as("grp"), tok.as("v"))
         .unionByName(df.select(lit("ALL").as("grp"), tok.as("v")))
         .groupBy("grp", "v").agg(count(lit(1)).as("cnt"))
     }
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cells(batch).write.mode("overwrite").parquet(s"$root/hist/b$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    val merged = spark.read.parquet(s"$root/hist/*")
+    run.drain(run.stage(docs, nChunks, col("doc_id")))(b => b.write("hist", cells(b.df)))
+    val merged = run.all("hist")
       .groupBy("grp", "v").agg(sum("cnt").as("cnt"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .groupBy(_._1)
@@ -983,8 +706,7 @@ object StreamingOps {
   /** Streaming calibration monitor: reliability bins of a PUBLISHED scorer
     * maintained on ingest. The bin statistics (n, Σp, Σy) are a
     * decomposable aggregate, so the stream reduces to per-batch partial
-    * cells in a batchId-keyed idempotent store (retried batches overwrite
-    * their own directory) merged by sum at close — the
+    * cells merged by sum at close — the
     * [[streamExactQuantiles]] shape; streamed ≡ one-shot batch because
     * the merge is associative-commutative and the conf/acc finalize is a
     * pure function of the merged cells. The scorer's threshold is a
@@ -1002,16 +724,9 @@ object StreamingOps {
       nChunks: Int = 5,
       queryName: String = "stream_calibration"): DataFrame = {
     val events = graft.sources.Tables.cached(spark, dir, "events")
-    val root = s"target/stream_calibration_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(root))
-    val staging = s"$root/staging"
-    events.repartition(nChunks, pmod(col("event_id"), lit(nChunks)))
-      .write.mode("overwrite").parquet(staging)
+    val run = new StreamRun(spark, queryName)
+    val stream = run.stage(events, nChunks, col("event_id"))
     val thr = events.agg(avg(col("value"))).collect().head.getDouble(0)
-    val schema = spark.read.parquet(staging).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
     def cells(df: DataFrame): DataFrame = {
       val p = lit(1.0) / (lit(1.0) + exp(-(col("value") - lit(thr)) / lit(10.0)))
       val y = (col("event_id") % 2).cast("double")
@@ -1020,16 +735,8 @@ object StreamingOps {
         .groupBy("bin")
         .agg(count(lit(1)).as("n"), sum(col("p")).as("sp"), sum(col("y")).as("sy"))
     }
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cells(batch).write.mode("overwrite").parquet(s"$root/cells/b$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    spark.read.parquet(s"$root/cells/*")
+    run.drain(stream)(b => b.write("cells", cells(b.df)))
+    run.all("cells")
       .groupBy("bin")
       .agg(sum("n").as("n_bin"), sum("sp").as("__sp"), sum("sy").as("__sy"))
       .select(col("bin"), col("n_bin"),
@@ -1041,8 +748,8 @@ object StreamingOps {
   /** Streaming drift card: the per-source token-distribution drift
     * ([[graft.text.DriftCard]]) computed against a REFERENCE snapshot as
     * the new snapshot arrives on ingest. Per-(group, word) counts are a
-    * decomposable aggregate → per-batch partial counts in a batchId-keyed
-    * idempotent store, merged by sum at close; the drift arithmetic (exact
+    * decomposable aggregate → per-batch partial counts, merged by sum at
+    * close; the drift arithmetic (exact
     * cross-products, 9-dp KL terms) then runs on the merged frame — so
     * streamed ≡ one-shot batch, and the batch gate's oracle applies
     * verbatim. The reference side is a fixed artifact (here the even-id
@@ -1055,33 +762,38 @@ object StreamingOps {
       queryName: String = "stream_drift"): DataFrame = {
     import graft.text.DriftCard
     val docs = graft.sources.Tables.cached(spark, dir, "documents")
-    val root = s"target/stream_drift_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(root))
-    val staging = s"$root/staging"
-    docs.filter(col("doc_id") % 2 === 1)
-      .repartition(nChunks, pmod(col("doc_id"), lit(nChunks)))
-      .write.mode("overwrite").parquet(staging)
-    val schema = spark.read.parquet(staging).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DriftCard.tokenCounts(batch, "source", "text", "c")
-          .write.mode("overwrite").parquet(s"$root/counts/b$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    val merged = spark.read.parquet(s"$root/counts/*")
+    val run = new StreamRun(spark, queryName)
+    run.drain(run.stage(docs.filter(col("doc_id") % 2 === 1), nChunks, col("doc_id"))) { b =>
+      b.write("counts", DriftCard.tokenCounts(b.df, "source", "text", "c"))
+    }
+    val merged = run.all("counts")
       .groupBy("grp", "word").agg(sum("c").as("cp"))
     DriftCard.driftFromCounts(
       DriftCard.tokenCounts(docs.filter(col("doc_id") % 2 === 0), "source", "text", "cq"),
       merged, "source")
   }
 
+  /** Streaming SCD2 maintenance — the capture-history table kept current
+    * as crawl chunks arrive, completing the maintenance-on-ingest trio
+    * (near-dup screen, cluster labels, now version history). Per
+    * micro-batch:
+    *
+    *   1. the batch's captures (via `captureProj`, a row-local
+    *      projection) land in the capture accumulator;
+    *   2. ONLY the batch's keys rebuild: the accumulated captures filter
+    *      to the touched keys (a key's history depends on nothing else)
+    *      and [[graft.ops.Scd2.buildHistory]] re-derives those keys'
+    *      intervals — work per batch is proportional to touched keys'
+    *      capture counts, never the table;
+    *   3. the rebuilt slice lands in `hist/batch=<id>`; the CURRENT
+    *      history of a key is its rows from the LATEST batch that
+    *      touched it (resolved at read time by a per-key max-batch
+    *      aggregate + join — decomposable, no window).
+    *
+    * The last batch touching a key saw ALL its captures, so its rebuilt
+    * rows equal the one-shot batch `buildHistory` for that key — the
+    * final table is verbatim-verifiable by the batch oracle.
+    */
   def streamScd2(
       spark: SparkSession,
       dir: String,
@@ -1089,40 +801,16 @@ object StreamingOps {
       keyCol: String, tsCol: String, attrCol: String, tieCol: String,
       nChunks: Int = 5,
       queryName: String = "stream_scd2"): DataFrame = {
+    val run = new StreamRun(spark, queryName)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val root = s"target/stream_scd2_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(root))
-    val staging = s"$root/staging"
-    docs.repartition(nChunks, pmod(col("doc_id"), lit(nChunks)))
-      .write.mode("overwrite").parquet(staging)
-    val schema = spark.read.parquet(staging).schema
-    def subdirs(p: String): Seq[String] = {
-      val f = new java.io.File(p)
-      if (!f.exists()) Seq.empty
-      else f.listFiles().filter(_.isDirectory).map(_.toString).toSeq.sorted
+    run.drain(run.stage(docs, nChunks, col("doc_id"))) { b =>
+      val caps = run.hold(captureProj(b.df))
+      b.write("caps", caps)
+      val touched = caps.select(col(keyCol)).distinct()
+      val slice = b.all("caps").join(touched, Seq(keyCol), "left_semi")
+      b.write("hist", graft.ops.Scd2.buildHistory(slice, keyCol, tsCol, attrCol, tieCol))
     }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        val caps = captureProj(batch).persist()
-        caps.write.mode("overwrite").parquet(s"$root/caps/b$batchId")
-        val touched = caps.select(col(keyCol)).distinct()
-        val accDirs = subdirs(s"$root/caps")
-        val allCaps = sp.read.parquet(accDirs: _*)
-        val slice = allCaps.join(touched, Seq(keyCol), "left_semi")
-        graft.ops.Scd2.buildHistory(slice, keyCol, tsCol, attrCol, tieCol)
-          .write.mode("overwrite").parquet(s"$root/hist/batch=$batchId")
-        caps.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    val hist = spark.read.parquet(s"$root/hist")
+    val hist = run.byBatch("hist")
     val latest = hist.groupBy(col(keyCol)).agg(max(col("batch")).as("__maxb"))
     hist.join(latest,
         hist(keyCol) === latest(keyCol) && col("batch") === col("__maxb"))
@@ -1136,7 +824,7 @@ object StreamingOps {
     * Kafka/log consumer replay. Shared by the in-order state machines
     * (funnel, transitions).
     */
-  private def stageTimeOrderedChunks(ev: DataFrame, staging: String, nChunks: Int): Unit = {
+  private def stageTimeOrderedChunks(ev: DataFrame, nChunks: Int)(staging: String): Unit = {
     val maxId = ev.agg(max(col("event_id"))).head.getLong(0)
     val per = maxId / nChunks + 1
     val seen = scala.collection.mutable.Set.empty[String]
@@ -1155,9 +843,8 @@ object StreamingOps {
     * per batch, WITHIN-batch per-user lag pairs (a window over the
     * bounded micro-batch only — never the accumulated axis) plus ONE
     * boundary pair per user from the carried (last ts, type) state joined
-    * to the batch's first event. Pair-count partials are batchId-keyed
-    * (pure function of previous state + batch ⇒ replay-idempotent);
-    * state is one row per user. The close sums partials — streamed ≡
+    * to the batch's first event. Each batch's pair-count partial is a pure
+    * function of (previous state, batch); state is one row per user. The close sums partials — streamed ≡
     * one-shot batch, the `q_event_transitions` oracle verbatim.
     */
   def streamEventTransitions(
@@ -1168,55 +855,34 @@ object StreamingOps {
     import org.apache.spark.sql.expressions.Window
     val ev = graft.sources.Tables.load(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-    val root = s"target/stream_transitions_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(root))
-    val staging = s"$root/staging"
-    stageTimeOrderedChunks(ev, staging, nChunks)
-    val schema = spark.read.parquet(staging).schema
-    def stateDir(b: Long) = s"$root/state/b$b"
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        val b = batch.persist()
-        val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        val internal = b
-          .select(col("user_id"), col("event_type").as("to_type"),
-            lag(col("event_type"), 1).over(w).as("from_type"))
-          .filter(col("from_type").isNotNull)
-          .select(col("from_type"), col("to_type"))
-        val firsts = b.groupBy(col("user_id"))
-          .agg(min_by(col("event_type"), struct(col("ts"), col("event_id"))).as("to_type"))
-        val lasts = b.groupBy(col("user_id"))
-          .agg(max(struct(col("ts"), col("event_id"))).as("k"),
-            max_by(col("event_type"), struct(col("ts"), col("event_id"))).as("last_type"))
-          .select(col("user_id"), col("k.ts").as("last_ts"),
-            col("k.event_id").as("last_id"), col("last_type"))
-        val prev =
-          if (batchId > 0 && new java.io.File(stateDir(batchId - 1)).exists())
-            sp.read.parquet(stateDir(batchId - 1))
-          else lasts.limit(0)
-        val boundary = prev.select(col("user_id"), col("last_type").as("from_type"))
-          .join(firsts, Seq("user_id"))
-          .select(col("from_type"), col("to_type"))
-        internal.unionByName(boundary)
-          .groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$root/pairs/b$batchId")
-        // in-order ingest: the batch's last event per user supersedes any
-        // carried state for that user
-        prev.join(lasts.select("user_id"), Seq("user_id"), "left_anti")
-          .unionByName(lasts)
-          .write.mode("overwrite").parquet(stateDir(batchId))
-        b.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    val counts = spark.read.parquet(s"$root/pairs/*")
+    val run = new StreamRun(spark, queryName)
+    run.drain(run.stage(stageTimeOrderedChunks(ev, nChunks))) { batch =>
+      val b = run.hold(batch.df)
+      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+      val internal = b
+        .select(col("user_id"), col("event_type").as("to_type"),
+          lag(col("event_type"), 1).over(w).as("from_type"))
+        .filter(col("from_type").isNotNull)
+        .select(col("from_type"), col("to_type"))
+      val firsts = b.groupBy(col("user_id"))
+        .agg(min_by(col("event_type"), struct(col("ts"), col("event_id"))).as("to_type"))
+      val lasts = b.groupBy(col("user_id"))
+        .agg(max(struct(col("ts"), col("event_id"))).as("k"),
+          max_by(col("event_type"), struct(col("ts"), col("event_id"))).as("last_type"))
+        .select(col("user_id"), col("k.ts").as("last_ts"),
+          col("k.event_id").as("last_id"), col("last_type"))
+      val prev = batch.previous("state").getOrElse(lasts.limit(0))
+      val boundary = prev.select(col("user_id"), col("last_type").as("from_type"))
+        .join(firsts, Seq("user_id"))
+        .select(col("from_type"), col("to_type"))
+      batch.write("pairs", internal.unionByName(boundary)
+        .groupBy("from_type", "to_type").agg(count(lit(1)).as("n")))
+      // in-order ingest: the batch's last event per user supersedes any
+      // carried state for that user
+      batch.write("state", prev.join(lasts.select("user_id"), Seq("user_id"), "left_anti")
+        .unionByName(lasts))
+    }
+    val counts = run.all("pairs")
       .groupBy("from_type", "to_type").agg(sum(col("n")).as("n"))
     val rowTot = counts.groupBy("from_type").agg(sum(col("n")).as("n_from"))
     counts.join(broadcast(rowTot), Seq("from_type"))
@@ -1229,9 +895,7 @@ object StreamingOps {
     * ingest. Both inputs of the batch operator are decomposable:
     * first-event day is a per-user MIN and the active set is a DISTINCT
     * (user, day) union, so each micro-batch lands its own bounded
-    * partials in a batchId-keyed idempotent store (min-merge and
-    * distinct-union are idempotent under foreachBatch replay) and the
-    * close runs the identical retention tail over the merged frames —
+    * partials and the close runs the identical retention tail over the merged frames —
     * streamed ≡ one-shot batch under ANY chunking, the gate shares
     * `q_cohort_retention`'s oracle verbatim.
     */
@@ -1242,32 +906,15 @@ object StreamingOps {
       queryName: String = "stream_cohort"): DataFrame = {
     val ev = graft.sources.Tables.load(spark, dir, "events")
       .select(col("user_id"), col("ts"))
-    val root = s"target/stream_cohort_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(root))
-    val staging = s"$root/staging"
-    ev.repartition(nChunks, pmod(col("user_id") + unix_micros(col("ts")), lit(nChunks)))
-      .write.mode("overwrite").parquet(staging)
-    val schema = spark.read.parquet(staging).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        b.groupBy(col("user_id")).agg(min(to_date(col("ts"))).as("first_day"))
-          .write.mode("overwrite").parquet(s"$root/first/b$batchId")
-        b.select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-          .write.mode("overwrite").parquet(s"$root/active/b$batchId")
-        b.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    val firstDay = spark.read.parquet(s"$root/first/*")
+    val run = new StreamRun(spark, queryName)
+    run.drain(run.stage(ev, nChunks, col("user_id") + unix_micros(col("ts")))) { batch =>
+      val b = run.hold(batch.df)
+      batch.write("first", b.groupBy(col("user_id")).agg(min(to_date(col("ts"))).as("first_day")))
+      batch.write("active", b.select(col("user_id"), to_date(col("ts")).as("d")).distinct())
+    }
+    val firstDay = run.all("first")
       .groupBy(col("user_id")).agg(min(col("first_day")).as("cohort_day"))
-    val activeDays = spark.read.parquet(s"$root/active/*").distinct()
+    val activeDays = run.all("active").distinct()
     val sizes = firstDay.groupBy(col("cohort_day")).agg(count(lit(1)).as("n_cohort"))
     activeDays.join(firstDay, Seq("user_id"))
       .groupBy(col("cohort_day"), datediff(col("d"), col("cohort_day")).as("offset_days"))
@@ -1291,9 +938,8 @@ object StreamingOps {
     *     sequentially), so whole-funnel completions inside one batch work.
     *
     * Per-batch cost is O(|batch| + |state|) with every join on the user
-    * key; state is batchId-keyed and overwrite-idempotent under
-    * foreachBatch's at-least-once replay (each batch's output is a pure
-    * function of (previous state, batch)). The drained state's report is
+    * key; each batch's state is a pure function of (previous state,
+    * batch). The drained state's report is
     * numerically identical to the one-shot batch funnel — the gate shares
     * `q_funnel`'s DuckDB oracle verbatim.
     *
@@ -1311,55 +957,35 @@ object StreamingOps {
     import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
     val ev = graft.sources.Tables.load(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-    val root = s"target/stream_funnel_${math.abs(queryName.hashCode)}"
-    deleteRecursively(java.nio.file.Paths.get(root))
-    val staging = s"$root/staging"
-    stageTimeOrderedChunks(ev, staging, nChunks)
-    val schema = spark.read.parquet(staging).schema
     val K = steps.length
     val tCols = (1 to K).map(k => s"t$k")
-    def stateDir(b: Long) = s"$root/state/b$b"
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        val b = batch.persist()
-        val prev =
-          if (batchId > 0 && new java.io.File(stateDir(batchId - 1)).exists())
-            sp.read.parquet(stateDir(batchId - 1))
-          else sp.createDataFrame(sp.sparkContext.emptyRDD[Row], StructType(
-            StructField("user_id", org.apache.spark.sql.types.LongType) +:
-              tCols.map(c => StructField(c, TimestampType))))
-        val b1 = b.filter(col("event_type") === steps.head)
-          .groupBy("user_id").agg(min("ts").as("b1"))
-        var st = prev.join(b1, Seq("user_id"), "full")
-          .select(col("user_id") +: coalesce(col("t1"), col("b1")).as("t1") +:
-            (2 to K).map(k => col(s"t$k")): _*)
-        for (k <- 2 to K) {
-          val open = st.filter(col(s"t${k - 1}").isNotNull && col(s"t$k").isNull)
-            .select(col("user_id"), col(s"t${k - 1}").as("__prevt"))
-          val bk = b.filter(col("event_type") === steps(k - 1))
-            .join(open, Seq("user_id"))
-            .where(col("ts") > col("__prevt"))
-            .groupBy("user_id").agg(min("ts").as(s"b$k"))
-          st = st.join(bk, Seq("user_id"), "left")
-            .select(col("user_id") +: (1 to K).map { j =>
-              if (j == k) coalesce(col(s"t$k"), col(s"b$k")).as(s"t$k") else col(s"t$j")
-            }: _*)
-        }
-        st.write.mode("overwrite").parquet(stateDir(batchId))
-        b.unpersist()
-        ()
+    val run = new StreamRun(spark, queryName)
+    run.drain(run.stage(stageTimeOrderedChunks(ev, nChunks))) { batch =>
+      val sp = batch.df.sparkSession
+      val b = run.hold(batch.df)
+      val prev = batch.previous("state").getOrElse(
+        sp.createDataFrame(sp.sparkContext.emptyRDD[Row], StructType(
+          StructField("user_id", org.apache.spark.sql.types.LongType) +:
+            tCols.map(c => StructField(c, TimestampType)))))
+      val b1 = b.filter(col("event_type") === steps.head)
+        .groupBy("user_id").agg(min("ts").as("b1"))
+      var st = prev.join(b1, Seq("user_id"), "full")
+        .select(col("user_id") +: coalesce(col("t1"), col("b1")).as("t1") +:
+          (2 to K).map(k => col(s"t$k")): _*)
+      for (k <- 2 to K) {
+        val open = st.filter(col(s"t${k - 1}").isNotNull && col(s"t$k").isNull)
+          .select(col("user_id"), col(s"t${k - 1}").as("__prevt"))
+        val bk = b.filter(col("event_type") === steps(k - 1))
+          .join(open, Seq("user_id"))
+          .where(col("ts") > col("__prevt"))
+          .groupBy("user_id").agg(min("ts").as(s"b$k"))
+        st = st.join(bk, Seq("user_id"), "left")
+          .select(col("user_id") +: (1 to K).map { j =>
+            if (j == k) coalesce(col(s"t$k"), col(s"b$k")).as(s"t$k") else col(s"t$j")
+          }: _*)
       }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    query.awaitTermination()
-    val dirs = new java.io.File(s"$root/state").listFiles().map(_.getName)
-    val last = dirs.map(_.stripPrefix("b").toLong).max
-    graft.ops.EventAnalytics.reportFromTimes(
-      spark.read.parquet(stateDir(last)), steps)
+      batch.write("state", st)
+    }
+    graft.ops.EventAnalytics.reportFromTimes(run.last("state"), steps)
   }
 }

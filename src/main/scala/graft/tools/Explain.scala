@@ -1,25 +1,40 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Dump formatted physical plans for selected driver-contract queries —
-  * plan-quality review (pushdown, broadcast choice, codegen spans).
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
+
+/** Dump `explain("formatted")` plans for named driver-contract queries into
+  * <planDir>/<query>_<tag>.txt, under the bench's session config
+  * (`GraftExtensions` included) — the before/after plan evidence kept
+  * under `plans/`.
+  * Usage: runMain graft.tools.Explain <planDir> <tag> <sfDir> <query...>
+  * (streaming gates execute on construction — pass batch gates only).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.tail.toSet else Set(
-      "q_train_labels", "q_rel_pricing_summary", "q_rel_nation_orders", "q_snapshots")
+    require(args.length >= 4, "usage: Explain <planDir> <tag> <sfDir> <query...>")
+    val Array(planDir, tag, dir) = args.take(3)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.SparkEntry.queries.filter(q => names.contains(q._1)).foreach { case (name, fn) =>
-      println(s"\n======== $name ========")
-      fn(spark, dir).explain("formatted")
+    Files.createDirectories(Paths.get(planDir))
+    args.drop(3).foreach { name =>
+      try {
+        val df = graft.SparkEntry.queries(name)(spark, dir)
+        val out = Paths.get(planDir, s"${name}_$tag.txt")
+        Files.writeString(out, df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+        println(s"[explain] wrote $out")
+      } catch { case e: Throwable =>
+        System.err.println(s"[explain] $name failed: ${e.getMessage}")
+      }
     }
     spark.stop()
   }
