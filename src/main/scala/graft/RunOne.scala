@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query probe: run one `SparkEntry.queries` entry under the same
   * session config as [[Bench]], with the CC per-round instrumentation
   * visible — `runMain graft.RunOne <query> [sfDir] [reps]`. Diagnostic
@@ -16,15 +14,7 @@ object RunOne {
     val reps = if (args.length > 2) args(2).toInt else 1
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // keep the diagnostic loggers audible under the WARN default
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "graft.dedup.CC", org.apache.logging.log4j.Level.INFO)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -52,15 +51,7 @@ object Verify {
       case Array(s, o, re) => val p = re.r; (s, o, (n: String) => p.findFirstIn(n).isDefined)
       case _ => sys.error("usage: Verify <sfDir> <outDir> [nameRegex]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     val schemas = scala.collection.mutable.Map.empty[String, StructType]
     SparkEntry.queries.filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>

@@ -1,7 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.ops.Iterate
 
 /** Link-graph analytics over crawl edges — beyond-reference. The web graph
   * is a first-class curation signal: Common Crawl publishes harmonic/
@@ -18,9 +20,11 @@ import org.apache.spark.sql.functions._
   *     by |nodes| per partition, and the Zipf-hot dst (everyone links to
   *     the big domains) is exactly the case AQE skew splitting + partial
   *     aggregation absorb.
-  *   - Ranks are localCheckpoint'ed per iteration (same discipline as
-  *     [[graft.dedup.Dedup.connectedComponents]]) so the plan doesn't grow
-  *     by a join per round and stragglers can't replay the whole chain.
+  *   - The rounds run on [[graft.ops.Iterate.rounds]] (the loop
+  *     [[graft.dedup.Dedup.connectedComponents]] runs on too): each round's
+  *     ranks are checkpointed, so the plan doesn't grow by a join per round
+  *     and stragglers can't replay the whole chain, and the round before is
+  *     released.
   *   - CROSS-ENGINE BIT-REPRODUCIBILITY: floating summation order differs
   *     between engines (and between runs, under AQE), so contributions are
   *     pinned to 9 dp and summed EXACTLY as DECIMAL(28,9) (the BM25
@@ -36,6 +40,7 @@ import org.apache.spark.sql.functions._
   *     a constant factor no downstream gate cares about.
   */
 object LinkGraph {
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.graph.LinkGraph")
 
   /** PageRank over distinct (src, dst) edges. Returns (node, out_degree,
     * rank) with rank pinned at 9 dp; callers round to their output
@@ -47,33 +52,9 @@ object LinkGraph {
       dstCol: String,
       iterations: Int = 5,
       damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-    val n = nodes.count() // bounded axis: the domain universe
-    require(n > 0, "pagerank: empty graph")
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // both constants pinned at 9 dp by the SAME expression the oracle uses
-    val base = round(lit(1.0 - damping) / lit(n.toDouble), 9)
-    var ranks = nodes.select(col("node"), round(lit(1.0) / lit(n.toDouble), 9).as("rank"))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contrib = ranks
-        .join(deg, ranks("node") === deg("src"))
-        .join(e, "src")
-        .select(col("dst"), round(col("rank") / col("deg"), 9).as("c"))
-      val sums = contrib.groupBy(col("dst"))
-        .agg(sum(col("c").cast("decimal(28,9)")).as("s"))
-      ranks = nodes
-        .join(sums, nodes("node") === sums("dst"), "left")
-        .select(col("node"),
-          round(base + lit(damping) * coalesce(col("s").cast("double"), lit(0.0)), 9)
-            .as("rank"))
-        .localCheckpoint()
-    }
-    ranks.join(deg, ranks("node") === deg("src"), "left")
-      .select(col("node"), coalesce(col("deg"), lit(0L)).as("out_degree"), col("rank"))
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
+    uniformTeleport("pagerank", e.withColumn("w", lit(1L)), iterations, damping)
+      .withColumnRenamed("deg", "out_degree")
   }
 
   /** Weighted PageRank — [[pagerank]] with edge weights instead of the
@@ -82,14 +63,12 @@ object LinkGraph {
     * the natural weight; any positive integer signal works). Per source
     * the rank splits proportionally, contribution = rank·w/Σw — with
     * uniform weights this is BITWISE [[pagerank]] (spec-asserted), since
-    * w/Σw computes the identical IEEE chain as rank/deg.
+    * rank·1.0/deg computes the identical IEEE chain as rank/deg.
     *
     * Same scale shape and reproducibility discipline: duplicate (src, dst)
-    * rows collapse by weight-SUM in one map-side-combined aggregate;
-    * per-round one ranks⋈edges join + one decomposable by-dst aggregate;
-    * contributions pinned 9 dp, summed as exact DECIMAL(28,9), ranks
-    * re-pinned and localCheckpoint'ed per round; non-positive weights
-    * raise with the offending edge. Returns (node, out_weight, rank).
+    * rows collapse by weight-SUM in one map-side-combined aggregate, then
+    * the shared propagation rounds run; non-positive weights raise with
+    * the offending edge. Returns (node, out_weight, rank).
     */
   def weightedPagerank(
       edges: DataFrame,
@@ -104,33 +83,8 @@ object LinkGraph {
             col(srcCol).cast("string"), lit("->"), col(dstCol).cast("string"))))
           .otherwise(col(weightCol).cast("long")).as("w"))
       .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-    val n = nodes.count() // bounded axis: the domain universe
-    require(n > 0, "weightedPagerank: empty graph")
-    val wdeg = e.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
-    val base = round(lit(1.0 - damping) / lit(n.toDouble), 9)
-    var ranks = nodes.select(col("node"), round(lit(1.0) / lit(n.toDouble), 9).as("rank"))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contrib = ranks
-        .join(wdeg, ranks("node") === wdeg("src"))
-        .join(e, "src")
-        .select(col("dst"),
-          round(col("rank") * col("w").cast("double") / col("wsum").cast("double"), 9)
-            .as("c"))
-      val sums = contrib.groupBy(col("dst"))
-        .agg(sum(col("c").cast("decimal(28,9)")).as("s"))
-      ranks = nodes
-        .join(sums, nodes("node") === sums("dst"), "left")
-        .select(col("node"),
-          round(base + lit(damping) * coalesce(col("s").cast("double"), lit(0.0)), 9)
-            .as("rank"))
-        .localCheckpoint()
-    }
-    ranks.join(wdeg, ranks("node") === wdeg("src"), "left")
-      .select(col("node"), coalesce(col("wsum"), lit(0L)).as("out_weight"), col("rank"))
+    uniformTeleport("weightedPagerank", e, iterations, damping)
+      .withColumnRenamed("deg", "out_weight")
   }
 
   /** TrustRank (Gyöngyi, Garcia-Molina, Pedersen 2004): PageRank with the
@@ -140,11 +94,10 @@ object LinkGraph {
     * standard web-curation quality prior when a vetted seed list exists
     * (vs [[pagerank]]'s neutral centrality).
     *
-    * Same distributed shape and the same 9-dp-pin + DECIMAL(28,9) exact
-    * summation as [[pagerank]] — the oracle unrolls identical rounds.
-    * r0 = teleport; per round r(v) = round((1−d)·t(v) + d·Σ pinned
-    * contributions, 9), with t(v) = round(1/|seeds|, 9) on seeds, else 0.
-    * Dangling mass is dropped (same documented variant).
+    * The same propagation rounds as [[pagerank]] — the oracle unrolls
+    * identical rounds. r0 = teleport; per round r(v) = round((1−d)·t(v) +
+    * d·Σ pinned contributions, 9), with t(v) = round(1/|seeds|, 9) on
+    * seeds, else 0. Dangling mass is dropped (same documented variant).
     */
   def trustRank(
       edges: DataFrame,
@@ -155,37 +108,73 @@ object LinkGraph {
       damping: Double = 0.85): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
     val nSeeds = seeds.distinct().count()
     require(nSeeds > 0, "trustRank: empty seed set")
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val seedFlag = broadcast(
       seeds.select(col(seeds.columns.head).as("node")).distinct()
         .withColumn("__seed", lit(true)))
-    val teleport = nodes.join(seedFlag, Seq("node"), "left")
+    val teleport = nodesOf(e).join(seedFlag, Seq("node"), "left")
       .select(col("node"),
         when(col("__seed"), round(lit(1.0) / lit(nSeeds.toDouble), 9))
           .otherwise(lit(0.0)).as("t"))
       .localCheckpoint()
-    var ranks = teleport.select(col("node"), col("t").as("rank")).localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contrib = ranks
+    propagate("trustRank", e.withColumn("w", lit(1L)), teleport,
+        lit(1.0 - damping) * col("t"), teleport.select(col("node"), col("t").as("rank")),
+        iterations, damping)
+      .withColumnRenamed("deg", "out_degree")
+  }
+
+  /** [[propagate]] over the checkpointed `edges` with the uniform teleport
+    * (1−d)/n and start 1/n, n the number of nodes.
+    */
+  private def uniformTeleport(name: String, edges: DataFrame, iterations: Int,
+      damping: Double): DataFrame = {
+    val e = edges.localCheckpoint()
+    val nodes = nodesOf(e).localCheckpoint()
+    val n = nodes.count() // bounded axis: the domain universe
+    require(n > 0, s"$name: empty graph")
+    // both constants pinned at 9 dp by the SAME expression the oracle uses
+    propagate(name, e, nodes, round(lit(1.0 - damping) / lit(n.toDouble), 9),
+      nodes.select(col("node"), round(lit(1.0) / lit(n.toDouble), 9).as("rank")),
+      iterations, damping)
+  }
+
+  /** The propagation rounds of every PageRank variant, on
+    * [[graft.ops.Iterate.rounds]]: per round one ranks⋈edges join and one
+    * decomposable by-dst aggregate; each contribution rank·w/Σw is pinned
+    * at 9 dp and summed EXACTLY as DECIMAL(28,9); the new rank,
+    * round(teleport + d·sum, 9) over `nodes`, is checkpointed.
+    *
+    * @param e        (src, dst, w) edges, w > 0
+    * @param nodes    one row per node, the columns `teleport` reads;
+    *                 released once the rounds are done
+    * @param teleport per-node teleport term
+    * @param init     (node, rank) before round 1
+    * @return (node, deg = Σw over out-edges (0 when dangling), rank)
+    */
+  private def propagate(name: String, e: DataFrame, nodes: DataFrame, teleport: Column,
+      init: DataFrame, iterations: Int, damping: Double): DataFrame = {
+    val deg = e.groupBy(col("src")).agg(sum(col("w")).as("deg"))
+    val ranks = try Iterate.rounds(init, log, name, iterations) { ranks =>
+      val sums = ranks
         .join(deg, ranks("node") === deg("src"))
         .join(e, "src")
-        .select(col("dst"), round(col("rank") / col("deg"), 9).as("c"))
-      val sums = contrib.groupBy(col("dst"))
-        .agg(sum(col("c").cast("decimal(28,9)")).as("s"))
-      ranks = teleport
-        .join(sums, teleport("node") === sums("dst"), "left")
+        .select(col("dst"),
+          round(col("rank") * col("w").cast("double") / col("deg").cast("double"), 9).as("c"))
+        .groupBy(col("dst")).agg(sum(col("c").cast("decimal(28,9)")).as("s"))
+      nodes
+        .join(sums, nodes("node") === sums("dst"), "left")
         .select(col("node"),
-          round(lit(1.0 - damping) * col("t")
-            + lit(damping) * coalesce(col("s").cast("double"), lit(0.0)), 9).as("rank"))
-        .localCheckpoint()
-    }
+          round(teleport + lit(damping) * coalesce(col("s").cast("double"), lit(0.0)), 9)
+            .as("rank"))
+    } finally Iterate.release(nodes)
     ranks.join(deg, ranks("node") === deg("src"), "left")
-      .select(col("node"), coalesce(col("deg"), lit(0L)).as("out_degree"), col("rank"))
+      .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"), col("rank"))
   }
+
+  /** Every endpoint of the (src, dst) edges, once, as `node`. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
 
   /** HITS (Kleinberg 1999): mutually-reinforcing hub and authority scores
     * — the third classic of the link-analysis triad. Authorities are the
@@ -201,7 +190,10 @@ object LinkGraph {
     * sums under it are exact decimals, so the normalized scores are
     * identical rationals in any engine. The max itself is a one-row
     * broadcast cross join, never a collect. Nodes with no in-links get
-    * authority 0; no out-links, hub 0.
+    * authority 0; no out-links, hub 0. A round's state is one
+    * (node, a, h) frame on [[graft.ops.Iterate.rounds]]: the hub update
+    * reads the round's authorities, and the authority update reads the
+    * previous round's hubs.
     */
   def hits(
       edges: DataFrame,
@@ -211,32 +203,35 @@ object LinkGraph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct().localCheckpoint()
     require(!e.isEmpty, "hits: empty graph")
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-    var hubs = nodes.select(col("node"), lit(1.0).as("h")).localCheckpoint()
-    var auths = nodes.select(col("node"), lit(1.0).as("a")).localCheckpoint()
+    val nodes = nodesOf(e).localCheckpoint()
+    // `scores` with `__s` replaced by `c` = `__s` / max(`__s`)
     def normalized(scores: DataFrame, c: String): DataFrame = {
       val m = scores.agg(max(col("__s")).as("__m"))
       scores.crossJoin(broadcast(m))
-        .select(col("node"),
-          round(col("__s").cast("double") / col("__m").cast("double"), 9).as(c))
+        .withColumn(c, round(col("__s").cast("double") / col("__m").cast("double"), 9))
+        .drop("__s", "__m")
     }
-    for (_ <- 1 to iterations) {
+    val dec = "decimal(28,9)"
+    val state = try Iterate.rounds(nodes.select(col("node"), lit(1.0).as("h")), log, "hits",
+        iterations) { state =>
       val aSums = nodes
-        .join(e.join(hubs, e("src") === hubs("node"))
-            .groupBy(col("dst")).agg(sum(col("h").cast("decimal(28,9)")).as("__s")),
+        .join(e.join(state, e("src") === state("node"))
+            .groupBy(col("dst")).agg(sum(col("h").cast(dec)).as("__s")),
           nodes("node") === col("dst"), "left")
-        .select(col("node"), coalesce(col("__s"), lit(0).cast("decimal(28,9)")).as("__s"))
-      auths = normalized(aSums, "a").localCheckpoint()
-      val hSums = nodes
-        .join(e.join(auths, e("dst") === auths("node"))
-            .groupBy(col("src")).agg(sum(col("a").cast("decimal(28,9)")).as("__s")),
-          nodes("node") === col("src"), "left")
-        .select(col("node"), coalesce(col("__s"), lit(0).cast("decimal(28,9)")).as("__s"))
-      hubs = normalized(hSums, "h").localCheckpoint()
-    }
-    auths.join(hubs, "node")
-      .select(col("node"), col("h").as("hub"), col("a").as("authority"))
+        .select(col("node"), coalesce(col("__s"), lit(0).cast(dec)).as("__s"))
+      // one pass over the authorities, so the plan reads them once: each
+      // node keeps its own and adds it to the hub sum of each in-neighbor
+      val hSums = normalized(aSums, "a").join(e, col("node") === e("dst"), "left")
+        .select(explode(array(
+          struct(col("node"), col("a"), lit(null).cast(dec).as("c")),
+          when(col("src").isNotNull, struct(col("src").as("node"),
+            lit(null).cast("double").as("a"), col("a").cast(dec).as("c"))))).as("r"))
+        .where(col("r").isNotNull).select("r.*")
+        .groupBy("node")
+        .agg(max(col("a")).as("a"), coalesce(sum(col("c")), lit(0).cast(dec)).as("__s"))
+      normalized(hSums, "h")
+    } finally { Iterate.release(nodes); Iterate.release(e) }
+    state.select(col("node"), col("h").as("hub"), col("a").as("authority"))
   }
 
   /** k-core decomposition by iterative peeling (Seidman 1983): repeatedly
@@ -303,8 +298,7 @@ object LinkGraph {
     * integer/string: no floats, no pinning discipline needed at all.
     *
     * Per round: one join (labels onto the symmetrized edge frame's
-    * neighbor side) + two aggregates, labels localCheckpoint'ed (the
-    * PageRank discipline). Self-loops drop (a node voting for itself
+    * neighbor side) + two aggregates, on [[graft.ops.Iterate.rounds]]. Self-loops drop (a node voting for itself
     * would freeze every round); nodes with no non-self edges are absent.
     */
   def lpaCommunities(
@@ -316,18 +310,16 @@ object LinkGraph {
       .where(col("a") =!= col("b"))
     val sym = dir0.union(dir0.select(col("b").as("a"), col("a").as("b")))
       .distinct().localCheckpoint()
-    var labels = sym.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("label")).localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val labels = try Iterate.rounds(sym.select(col("a").as("node")).distinct()
+        .select(col("node"), col("node").as("label")), log, "lpa", rounds) { labels =>
       val votes = sym
         .join(labels.withColumnRenamed("node", "b"), "b")
         .groupBy(col("a").as("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      labels = votes.groupBy("node")
+      votes.groupBy("node")
         .agg(max(struct(col("cnt"), col("label"))).as("m"))
         .select(col("node"), col("m.label").as("label"))
-        .localCheckpoint()
-    }
+    } finally Iterate.release(sym)
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("community_size"))
     labels.join(broadcast(sizes), "label")
       .select(col("node"), col("label"), col("community_size"))

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * Distribution shape: comparisons aggregate ONCE to an (lo, hi, n, w_lo)
   * pair frame — the quadratic raw-comparison axis never survives past the
   * first aggregate. Each MM round is two broadcast-joins of the bounded
-  * strength frame onto the pair frame plus one groupBy on the player key;
-  * the driver loop carries only DataFrame lineage (no collect). At RLHF
+  * strength frame onto the pair frame plus one groupBy on the player key,
+  * run on [[graft.ops.Iterate.rounds]] (no collect). At RLHF
   * scale (millions of prompts × pairs) both frames are data-sized and the
   * same plan holds with the broadcasts replaced by shuffle joins on the
   * player key.
@@ -54,17 +54,19 @@ object BradleyTerry {
     // each MM round joins the strength frame TWICE onto the pair frame, so
     // un-truncated lineage doubles per round (2^iters copies of the pair
     // plan — measured Java-heap death at 4 rounds over a 113k-pair frame).
-    // localCheckpoint per round keeps every plan one-round deep, the same
-    // discipline as Dedup.connectedComponents.
+    // The rounds run on graft.ops.Iterate.rounds, which checkpoints each
+    // round's strengths and releases the round before, so every plan stays
+    // one round deep.
     val p = pairs.localCheckpoint()
     val perPlayer = p.select(col("lo").as("player"), col("n"), col("w_lo").as("w"))
       .unionByName(p.select(col("hi").as("player"), col("n"), (col("n") - col("w_lo")).as("w")))
       .groupBy("player")
       .agg(sum("n").as("n_comp"), sum("w").as("wins"))
       .localCheckpoint()
-    var g = perPlayer.select(col("player"),
+    val init = perPlayer.select(col("player"),
       lit(BigDecimal(1.0)).cast("decimal(18,6)").as("g"))
-    for (_ <- 1 to iters) {
+    val g = try graft.ops.Iterate.rounds(init,
+        org.slf4j.LoggerFactory.getLogger("graft.ml.BradleyTerry"), "bradley-terry", iters) { g =>
       val joined = p
         .join(g.select(col("player").as("lo"), col("g").as("g_lo")), Seq("lo"))
         .join(g.select(col("player").as("hi"), col("g").as("g_hi")), Seq("hi"))
@@ -84,12 +86,11 @@ object BradleyTerry {
       // mean, one per player for the rescale — both re-pinned
       val meanRow = raw.agg(
         round(sum(col("g_raw")).cast("double") / count(lit(1)), 6).as("g_mean"))
-      g = raw.crossJoin(broadcast(meanRow))
+      raw.crossJoin(broadcast(meanRow))
         .select(col("player"),
           round(col("g_raw").cast("double") / col("g_mean"), 6)
             .cast("decimal(18,6)").as("g"))
-        .localCheckpoint()
-    }
+    } finally graft.ops.Iterate.release(p)
     perPlayer.join(g, Seq("player"))
       .select(col("player"), col("wins"), col("n_comp"), col("g").as("strength"))
   }

@@ -2,10 +2,13 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, lit}
 import org.slf4j.Logger
 
-/** Shared driver for iterative DataFrame algorithms that run until a
-  * per-round count says they are done (connected components, k-core).
+/** Shared round loop for iterative DataFrame algorithms: [[fixpoint]] runs
+  * until a per-round count says they are done (connected components,
+  * k-core); [[rounds]] runs a fixed number of rounds on the same loop
+  * (PageRank, TrustRank, HITS, label propagation, Bradley–Terry).
   *
   * Each round:
   *   - builds the next state from the current one (`step`);
@@ -56,6 +59,19 @@ object Iterate {
       case e: Throwable =>
         if (state ne init) release(state)
         throw e
+    }
+  }
+
+  /** Exactly `n` rounds of `step` on [[fixpoint]]'s loop, never stopping
+    * early; each round logs `<name> round N: rows=X, Ys`.
+    */
+  def rounds(init: DataFrame, log: Logger, name: String, n: Int)(
+      step: DataFrame => DataFrame): DataFrame = {
+    require(n >= 1, s"$name needs at least one round: $n")
+    var round = 0
+    fixpoint(init, log, name, "rows" -> count(lit(1)), n, "unreachable")(step) { _ =>
+      round += 1
+      round == n
     }
   }
 

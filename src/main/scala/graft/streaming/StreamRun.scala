@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{lit, pmod}
+import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** One run of one `Trigger.AvailableNow` stream of [[StreamingOps]]: the
@@ -26,10 +26,19 @@ private[streaming] final class StreamRun(spark: SparkSession, queryName: String)
   def cached(df: DataFrame): DataFrame = { hold(df).count(); df }
 
   /** Stages `df` as one file per non-empty `pmod(key, nChunks)` bucket and
-    * streams the files back one per trigger.
+    * streams the files back one per trigger. Each bucket is written as its
+    * own `__chunk=<b>` partition, so an empty bucket writes no file. A
+    * plain write would write one file per shuffle partition, and always
+    * partition 0's, even when it is empty.
     */
   def stage(df: DataFrame, nChunks: Int, key: Column): DataFrame =
-    stage(df.repartition(nChunks, pmod(key, lit(nChunks))).write.mode("overwrite").parquet(_))
+    stage { dir =>
+      df.withColumn("__chunk", pmod(key, lit(nChunks))).repartition(nChunks, col("__chunk"))
+        .write.partitionBy("__chunk").mode("overwrite").parquet(dir)
+      // an empty frame has no bucket: stage it as one empty batch
+      if (!new java.io.File(dir).list().exists(_.startsWith("__chunk=")))
+        df.write.mode("overwrite").parquet(dir)
+    }.drop("__chunk")
 
   /** Streams back, one file per trigger, what `write` puts in [[staging]]. */
   def stage(write: String => Unit): DataFrame = {

@@ -479,7 +479,7 @@ object StreamingOps {
     import graft.text.HtmlExtract
     HtmlExtract.register(spark)
     val run = new StreamRun(spark, queryName)
-    val rankFrame = run.cached(broadcast(ranks))
+    val rankFrame = run.cached(ranks)
     run.drain(warcResponses(spark, warcDir)) { b =>
       b.write("out", b.df
         .select(
@@ -491,7 +491,7 @@ object StreamingOps {
             WarcSource.decodedBody(col("body"), col("http_content_type"))).as("noindex"))
         .filter(!col("noindex"))
         .withColumn("body", regexp_replace(col("extracted"), "^[^\n]*\n[^\n]*\n", ""))
-        .join(rankFrame, "host")
+        .join(broadcast(rankFrame), "host")
         .filter(col("rank") >= rankMin)
         .select(col("doc_id"), col("body")))
     }

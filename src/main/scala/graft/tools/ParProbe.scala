@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-8 calibration probe: print Par.parts and the leaf-stat bytes for
@@ -9,14 +8,7 @@ import org.apache.spark.sql.functions._
 object ParProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     def leafBytes(df: org.apache.spark.sql.DataFrame): BigInt =
       df.queryExecution.optimizedPlan.collectLeaves()
         .map(l => l.stats.sizeInBytes).foldLeft(BigInt(0))(_ + _)

@@ -39,6 +39,33 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     (out, held -- before)
   }
 
+  /** Runs `body` with the messages `logger` writes at INFO collected. */
+  def logged[T](logger: String)(body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val lines = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val appender = new AbstractAppender(s"spec-$logger", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val config = ctx.getConfiguration
+    val lc = new LoggerConfig(logger, org.apache.logging.log4j.Level.INFO, false)
+    lc.addAppender(appender, org.apache.logging.log4j.Level.INFO, null)
+    config.addLogger(logger, lc)
+    ctx.updateLoggers()
+    try {
+      val out = body
+      import scala.jdk.CollectionConverters._
+      (out, lines.asScala.toSeq.sorted)
+    } finally {
+      config.removeLogger(logger)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
   /** Ids of the checkpointed RDDs `df` reads. */
   def checkpointRdds(df: org.apache.spark.sql.DataFrame): Set[Int] =
     df.queryExecution.logical.collectLeaves().collect {
@@ -47,16 +74,5 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.build(4)
 }

@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -218,5 +219,29 @@ class LinkGraphSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     assert(out.forall(_._3 == 3L)) // triangle converges to one community
     assert(out.map(_._2).distinct.length == 1)
+  }
+
+  test("every fixed-round operator leaves held only the blocks its frame reads") {
+    import spark.implicits._
+    import graft.ml.BradleyTerry
+    val g = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "a"), ("a", "a"))
+      .toDF("s", "d")
+    val comps = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (2L, 1L)).toDF("winner", "loser")
+    val operators = Seq[(String, () => DataFrame)](
+      "pagerank" -> (() => LinkGraph.pagerank(g, "s", "d", 3)),
+      "weightedPagerank" -> (() =>
+        LinkGraph.weightedPagerank(g.withColumn("w", lit(2L)), "s", "d", "w", 3)),
+      "trustRank" -> (() => LinkGraph.trustRank(g, "s", "d", Seq("a").toDF("node"), 3)),
+      "hits" -> (() => LinkGraph.hits(g, "s", "d", 3)),
+      "lpaCommunities" -> (() => LinkGraph.lpaCommunities(g, "s", "d", 3)),
+      "BradleyTerry.fit" -> (() =>
+        BradleyTerry.fit(BradleyTerry.pairCounts(comps, "winner", "loser"), 3)))
+    operators.foreach { case (name, run) =>
+      val ((out, cached), held) = rddsHeldAfter(rddsCachedDuring(run()))
+      assert(cached >= 3, s"$name: expected its 3 rounds checkpointed, saw $cached")
+      assert(held.nonEmpty && held.subsetOf(checkpointRdds(out)),
+        s"$name: held $held, its frame reads ${checkpointRdds(out)}")
+      assert(out.count() > 0, name)
+    }
   }
 }

@@ -140,4 +140,50 @@ class StreamRunSpec extends SparkTestBase {
     assert(leaked -- before == Set.empty)
     assert(hll.count() > 0 && sessions.count() > 0)
   }
+
+  test("stage streams one batch per non-empty bucket, holding that bucket only") {
+    import spark.implicits._
+    // at nChunks = 2 both buckets hash to shuffle partition 1: partition 0 is empty
+    Seq(0L until 20L by 2L, 0L until 20L, Seq.empty[Long]).foreach { keys =>
+      val run = new StreamRun(spark, s"stage_${System.nanoTime()}")
+      val batches = new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]()
+      run.drain(run.stage(keys.toDF("k"), 2, col("k"))) { b =>
+        batches.add(b.df.as[Long].collect().toSet)
+      }
+      import scala.jdk.CollectionConverters._
+      // an empty frame still streams, as one empty batch
+      val expected = if (keys.isEmpty) Seq(Set.empty[Long])
+        else keys.groupBy(_ % 2).values.map(_.toSet).toSeq
+      assert(batches.size == expected.size, batches)
+      assert(batches.asScala.toSet == expected.toSet)
+    }
+  }
+
+  test("q_stream_web_release broadcasts its per-batch rank join, with no hint left unused") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val batchPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (plan.contains("/out/batch=")) batchPlans.add(plan)
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // with size-based broadcasts off, only the hint can make the join broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.listenerManager.register(listener)
+    val (n, hintErrors) = try logged("org.apache.spark.sql.catalyst.analysis.HintErrorLogger") {
+      val n = graft.SparkEntry.queries("q_stream_web_release")(spark, "/root/testdata/sf0.01").count()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      n
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+    assert(n > 0)
+    assert(hintErrors.isEmpty, hintErrors)
+    assert(!batchPlans.isEmpty)
+    batchPlans.forEach(p => assert(p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"), p))
+  }
 }
