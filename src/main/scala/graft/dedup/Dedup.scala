@@ -192,14 +192,8 @@ object Dedup {
     }
   }
 
-  /** Per-document MinHash signatures: ONE aggregation with k codegen'd
-    * `min` buffers over the exploded shingle rows (round-7 optimization;
-    * guide §2.3/§2.4) — each shingle row updates all k minima, so there is
-    * no k× crossJoin row blowup and only ONE shuffle, carrying one row of
-    * k longs per (partition, id) after partial aggregation. Per-function
-    * minima are order-independent, so the output is bit-identical to the
-    * old explode × k plan (same (a·x+b) mod p arithmetic).
-    * Output: (id, i, minh) — k rows per document (posexploded row-locally).
+  /** Per-document MinHash signatures, (id, i, minh): k rows per document,
+    * posexploded row-locally from [[minhashSignaturesWide]].
     */
   def minhashSignatures(
       df: DataFrame,
@@ -208,12 +202,14 @@ object Dedup {
       n: Int = 3,
       k: Int = 16): DataFrame =
     minhashSignaturesWide(df, idCol, textCol, n, k)
-      .select(col("id"),
-        posexplode(array((0 until k).map(i => col(s"__m$i")): _*)).as(Seq("i", "minh")))
+      .select(col("id"), posexplode(col("sig")).as(Seq("i", "minh")))
 
-  /** One row per document with the k signature minima as columns
-    * (__m0..__m{k-1}) — the single-shuffle core of [[minhashSignatures]];
-    * [[bandedSignatures]] derives LSH band keys from it ROW-LOCALLY.
+  /** One row per document with its k minima as (id, sig: array<bigint>):
+    * ONE aggregation with k codegen'd `min` buffers over the exploded
+    * shingle rows, so each shingle row updates all k minima and only one
+    * row of k longs per (partition, id) is shuffled after partial
+    * aggregation. Minimum i is min over shingles x of (a_i·x + b_i) mod p,
+    * x = md5-60 of the shingle mod p ([[minhashParams]]).
     */
   private[dedup] def minhashSignaturesWide(
       df: DataFrame,
@@ -228,177 +224,84 @@ object Dedup {
       min(pmod(lit(a) * col("x") + lit(b), lit(MINHASH_P))).as(s"__m$i")
     }
     tok.groupBy(col("id")).agg(mins.head, mins.tail: _*)
+      .select(col("id"), array((0 until k).map(i => col(s"__m$i")): _*).as("sig"))
   }
 
-  /** LSH band signatures derived ROW-LOCALLY from the wide signature frame:
-    * (id, band, band_sig) where band_sig is the comma-joined minh string of
-    * the band's k/nBands functions in index order — character-identical to
-    * the old groupBy(id, band) + sorted collect_list construction, without
-    * its second shuffle.
-    */
-  private[dedup] def bandedSignatures(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      k: Int,
-      nBands: Int): DataFrame = {
-    val bandSize = k / nBands
-    require(bandSize * nBands == k, s"nBands=$nBands must divide k=$k")
-    val sigs = (0 until nBands).map { b =>
-      concat_ws(",", (0 until bandSize).map(j =>
-        col(s"__m${b * bandSize + j}").cast("string")): _*)
-    }
-    minhashSignaturesWide(df, idCol, textCol, n, k)
-      .select(col("id"), posexplode(array(sigs: _*)).as(Seq("band", "band_sig")))
+  /** The LSH banding of k MinHash minima into `nBands` bands. */
+  private def minhashBands(k: Int, nBands: Int): BandedJoin = {
+    require(k % nBands == 0, s"nBands=$nBands must divide k=$k")
+    BandedJoin.minhash(k / nBands, nBands)
   }
 
-  /** One-pass custom Aggregator formulation (identical output): all k
-    * minima live in one aggregation buffer, so the shuffle input is NOT
-    * multiplied by k. Slower than the explode form at local scale (see
-    * [[minhashSignatures]]) but the better shape when shuffle volume, not
-    * CPU, is the binding constraint.
+  /** LSH banding over the documents' MinHash signatures: documents that
+    * share any band's minima exactly become candidate pairs, (id_a, id_b)
+    * distinct with id_a < id_b. Uncapped, this is the triangle-split
+    * [[BandedJoin.self]] join.
+    *
+    * `maxBucketSize` engages the HOT-BUCKET CAP: buckets whose population
+    * exceeds it never enter the all-pairs join. At corpus scale a handful
+    * of degenerate band signatures (boilerplate, empty docs) can hold
+    * O(corpus) members, a quadratic bomb on one shuffle key. Instead of
+    * dropping a hot bucket's members outright (measured on this corpus:
+    * verified-pair recall collapses from ~97% at sf0.01 to 0.33% at sf0.1,
+    * because almost every true pair lives ONLY in mega-buckets), each
+    * over-cap bucket contributes STAR candidates, its minimum id as hub
+    * paired with every member: O(bucket) work instead of O(bucket²). For
+    * the pipelines that consume these candidates (connected-components
+    * clustering) connectivity is what matters: a verified star keeps the
+    * bucket's near-dup cluster connected while per-bucket work stays
+    * linear. Capped-off buckets are observable via [[lshBucketSizes]].
     */
-  def minhashSignaturesAgg(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 3,
-      k: Int = 16): DataFrame = {
-    val sig = graft.functions.MinHashAggregator.column(k, minhashParams(k), MINHASH_P)
-    df.select(col(idCol).as("id"), explode(shingles(col(textCol), n)).as("sh"))
-      .withColumn("x", pmod(hash60(col("sh")), lit(MINHASH_P)))
-      .groupBy(col("id"))
-      .agg(sig(col("x")).as("sig"))
-      .select(col("id"), posexplode(col("sig")).as(Seq("i", "minh")))
-  }
-
-  /** Explode × k hash functions formulation — the measured-fastest local
-    * plan shape and the default.
-    */
-  def minhashSignaturesExploded(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 3,
-      k: Int = 16): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val params = minhashParams(k).toDF("i", "a", "b")
-    df.select(col(idCol).as("id"), explode(shingles(col(textCol), n)).as("sh"))
-      .withColumn("x", pmod(hash60(col("sh")), lit(MINHASH_P)))
-      .crossJoin(broadcast(params))
-      .withColumn("h", pmod(col("a") * col("x") + col("b"), lit(MINHASH_P)))
-      .groupBy(col("id"), col("i"))
-      .agg(min(col("h")).as("minh"))
-  }
-
-  /** LSH banding over minhash signatures: documents sharing any band's full
-    * signature become candidate pairs. bandsize = k / nBands rows per band.
-    * Output: (id_a, id_b) distinct candidate pairs. The self-join is per
-    * (band, band_sig) bucket — bounded, shuffle-on-bucket, no cross join.
-    */
-  def lshCandidates(signatures: DataFrame, nBands: Int, k: Int): DataFrame =
-    lshCandidates(signatures, nBands, k, maxBucketSize = None)
-
-  /** LSH banding with an optional HOT-BUCKET CAP: buckets whose population
-    * exceeds `maxBucketSize` never enter the all-pairs self-join. At corpus
-    * scale a handful of degenerate band signatures (boilerplate, empty
-    * docs) can hold O(corpus) members — a quadratic bomb on one shuffle
-    * key. Instead of dropping a hot bucket's members outright (measured on
-    * this corpus: verified-pair recall collapses from ~97% at sf0.01 to
-    * 0.33% at sf0.1, because almost every true pair lives ONLY in
-    * mega-buckets), each over-cap bucket contributes STAR candidates — its
-    * minimum id as hub paired with every member: O(bucket) work instead of
-    * O(bucket²). For the pipelines that consume these candidates
-    * (connected-components clustering) connectivity is what matters, not
-    * the full pair set: a verified star keeps the bucket's near-dup
-    * cluster connected while per-bucket work stays linear. Capped-off
-    * bucket count is observable via [[lshBucketSizes]].
-    */
-  def lshCandidates(signatures: DataFrame, nBands: Int, k: Int,
-      maxBucketSize: Option[Int]): DataFrame = {
-    val bandSize = k / nBands
-    require(bandSize * nBands == k, s"nBands=$nBands must divide k=$k")
-    val banded = signatures
-      .withColumn("band", (col("i") / bandSize).cast("int"))
-      .groupBy(col("id"), col("band"))
-      .agg(array_join(transform(array_sort(collect_list(struct(col("i"), col("minh")))),
-        x => x.getField("minh").cast("string")), ",").as("band_sig"))
-    lshCandidatesFromBanded(banded, maxBucketSize)
-  }
-
-  /** Candidate generation over a prebuilt (id, band, band_sig) frame — the
-    * shared tail of [[lshCandidates]]; [[minhashLshPairs]] feeds it from the
-    * row-local [[bandedSignatures]] construction instead of the exploded
-    * signature frame (one shuffle fewer).
-    */
-  private[dedup] def lshCandidatesFromBanded(banded0: DataFrame,
-      maxBucketSize: Option[Int]): DataFrame = {
+  def lshCandidates(df: DataFrame, idCol: String, textCol: String, n: Int, k: Int,
+      nBands: Int, maxBucketSize: Option[Int] = None): DataFrame = {
+    val bands = minhashBands(k, nBands)
+    val sigs = minhashSignaturesWide(df, idCol, textCol, n, k)
     val pairs = maxBucketSize match {
       case Some(cap) =>
-        // pin on the bucket keys: the population stats groupBy, the stats
-        // joins, and the within-cap self-join are all keyed
-        // (band, band_sig), so this single pinned exchange serves every
-        // stage — and keeps the expansion off the AQE-coalesced single
-        // partition (Par.pinned); per-bucket work is cap-bounded, so no
-        // further salting is needed here
-        val banded = graft.ops.Par.pinned(banded0, col("band"), col("band_sig"))
-        // one extra count-shuffle on the same key the join shuffles on
-        val sizes = banded.groupBy(col("band"), col("band_sig"))
+        // a bucket is its exact identity (bk, band minima), so a hashed key
+        // that collides never merges two buckets. No first-match filter: a
+        // pair whose first shared band is over the cap must still join
+        // through a later within-cap band. One pinned exchange on the
+        // bucket serves the stats, the stats joins and the within-cap
+        // self-join, and keeps the expansion off an AQE-coalesced single
+        // partition; per-bucket work is cap-bounded, so no salt is needed
+        val banded = graft.ops.Par.pinned(bucketed(sigs, bands, k / nBands), col("bk"), col("bmin"))
+        val sizes = banded.groupBy(col("bk"), col("bmin"))
           .agg(count(lit(1)).as("__bucket_n"), min(col("id")).as("__hub"))
         val kept = banded.join(
-          sizes.filter(col("__bucket_n") <= cap).select(col("band"), col("band_sig")),
-          Seq("band", "band_sig"))
-        val a = kept.select(col("id").as("id_a"), col("band"), col("band_sig"))
-        val b = kept.select(col("id").as("id_b"), col("band"), col("band_sig"))
-        val full = a.join(b, Seq("band", "band_sig"))
+          sizes.filter(col("__bucket_n") <= cap).select(col("bk"), col("bmin")),
+          Seq("bk", "bmin"))
+        val full = kept.select(col("id").as("id_a"), col("bk"), col("bmin"))
+          .join(kept.select(col("id").as("id_b"), col("bk"), col("bmin")), Seq("bk", "bmin"))
           .filter(col("id_a") < col("id_b"))
           .select("id_a", "id_b")
         // hub-star candidates for the over-cap buckets: hub = min id < every
         // other member, so (hub, id) is already in canonical order
         val stars = banded.join(
-          sizes.filter(col("__bucket_n") > cap).select(col("band"), col("band_sig"), col("__hub")),
-          Seq("band", "band_sig"))
+          sizes.filter(col("__bucket_n") > cap).select(col("bk"), col("bmin"), col("__hub")),
+          Seq("bk", "bmin"))
           .filter(col("id") =!= col("__hub"))
           .select(col("__hub").as("id_a"), col("id").as("id_b"))
         full.unionByName(stars)
       case None =>
-        // UNCAPPED: a degenerate mega-bucket's quadratic expansion would run
-        // as one straggler task — triangle-split it like
-        // [[simhashNearDupPairs]] (deterministic pmod(id, g) grid; every
-        // pair joins in exactly one of the g² cells)
-        val spark = banded0.sparkSession
-        import spark.implicits._
-        val g = SELF_JOIN_SPLIT
-        val gDf = (0 until g).map(_.toLong).toList
-        val a = graft.ops.Par.pinned(
-          banded0.select(col("id").as("id_a"), col("band"), col("band_sig"))
-            .withColumn("ga", pmod(col("id_a"), lit(g.toLong)))
-            .crossJoin(broadcast(gDf.toDF("gb"))),
-          col("band"), col("band_sig"), col("ga"), col("gb"))
-        val b = graft.ops.Par.pinned(
-          banded0.select(col("id").as("id_b"), col("band"), col("band_sig"))
-            .withColumn("gb", pmod(col("id_b"), lit(g.toLong)))
-            .crossJoin(broadcast(gDf.toDF("ga"))),
-          col("band"), col("band_sig"), col("ga"), col("gb"))
-        a.join(b, Seq("band", "band_sig", "ga", "gb"))
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b")
+        bands.self(sigs).select("id_a", "id_b")
     }
     pairs.distinct()
   }
 
-  /** Bucket-population histogram for cap tuning: (band, band_sig, n). */
-  def lshBucketSizes(signatures: DataFrame, nBands: Int, k: Int): DataFrame = {
-    val bandSize = k / nBands
-    require(bandSize * nBands == k, s"nBands=$nBands must divide k=$k")
-    signatures
-      .withColumn("band", (col("i") / bandSize).cast("int"))
-      .groupBy(col("id"), col("band"))
-      .agg(array_join(transform(array_sort(collect_list(struct(col("i"), col("minh")))),
-        x => x.getField("minh").cast("string")), ",").as("band_sig"))
-      .groupBy(col("band"), col("band_sig"))
+  /** The banded MinHash frame with each row's band minima: (id, bk, bmin). */
+  private def bucketed(sigs: DataFrame, bands: BandedJoin, rows: Int): DataFrame =
+    bands.frame(sigs).select(col("id"), col("bk"),
+      BandedJoin.minima(col("sig"), bands.band(col("bk")), rows).as("bmin"))
+
+  /** Bucket-population histogram for cap tuning: (band, band_minima, n),
+    * one row per LSH bucket of [[lshCandidates]].
+    */
+  def lshBucketSizes(df: DataFrame, idCol: String, textCol: String, n: Int, k: Int,
+      nBands: Int): DataFrame = {
+    val bands = minhashBands(k, nBands)
+    bucketed(minhashSignaturesWide(df, idCol, textCol, n, k), bands, k / nBands)
+      .groupBy(bands.band(col("bk")).as("band"), col("bmin").as("band_minima"))
       .agg(count(lit(1)).as("n"))
   }
 
@@ -418,8 +321,7 @@ object Dedup {
       nBands: Int = 4,
       threshold: Double = 0.5,
       maxBucketSize: Option[Int] = None): DataFrame = {
-    val cands = lshCandidatesFromBanded(
-      bandedSignatures(df, idCol, textCol, n, k, nBands), maxBucketSize)
+    val cands = lshCandidates(df, idCol, textCol, n, k, nBands, maxBucketSize)
     // measured: letting Catalyst pick the join strategy here beats forcing
     // broadcast (the array payloads make broadcast hash probes slower than
     // the partitioned join at this shape)
@@ -565,103 +467,19 @@ object Dedup {
 
   /** Candidate rows of [[simhashNearDupPairs]] before verify: (id_a, sig_a,
     * id_b, sig_b) for id_a < id_b sharing a band, once per pair (its first
-    * matching band).
-    *
-    * Triangle-split self-join: each side is salted with a deterministic
-    * pmod(id, g) grid cell — side a fixes ga = id_a mod g and enumerates
-    * gb, side b the reverse — so every (a, b) pair joins in EXACTLY ONE of
-    * the g² cells and a hot bucket's quadratic expansion spreads over g²
-    * tasks instead of one straggler (measured: a 92 s taskMax on the sf0.1
-    * flagship without it). (band, bkey, ga, gb) is joined as ONE packed
-    * bigint ([[bandedSigs]]): a single long key makes a broadcast side a
-    * `LongHashedRelation`, where the four-column key built an
-    * `UnsafeHashedRelation` whose 64 MB map page stayed on the heap until
-    * the `ContextCleaner` freed it. The pinned partitioning on that key
-    * also keeps AQE from coalescing the tiny pre-expansion exchanges into
-    * a single partition.
+    * matching band), from the triangle-split [[BandedJoin.self]] join.
     */
-  private[dedup] def selfJoinCandidates(sigs: DataFrame, bits: Int, nBands: Int): DataFrame = {
+  private[dedup] def selfJoinCandidates(sigs: DataFrame, bits: Int, nBands: Int): DataFrame =
+    narrowBands(bits, nBands).self(asSig(sigs))
+
+  /** The banding of narrow `bits`-bit SimHash signatures: key = band bits. */
+  private def narrowBands(bits: Int, nBands: Int): BandedJoin = {
     require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    val bandBits = bits / nBands
-    val g = SELF_JOIN_SPLIT
-    val gBits = bitWidth(g - 1)
-    val banded = bandedSigs(sigs, bandBits, nBands, 2 * gBits)
-    val gDf = (0 until g).map(_.toLong).toList
-    def side(id: String, sig: String, own: String, other: String) = {
-      val salted = banded.select(col("id").as(id), col("simhash").as(sig), col("bk"))
-        .withColumn(own, pmod(col(id), lit(g.toLong)))
-        .crossJoin(broadcast(gDf.toDF(other)))
-      graft.ops.Par.pinned(
-        salted.select(col(id), col(sig), (shiftleft(col("bk"), 2 * gBits) +
-          shiftleft(col("ga"), gBits) + col("gb")).as("key")),
-        col("key"))
-    }
-    side("id_a", "sig_a", "ga", "gb").join(side("id_b", "sig_b", "gb", "ga"), "key")
-      .filter(col("id_a") < col("id_b"))
-      .filter(firstMatchingBand(shiftright(col("key"), bandBits + 2 * gBits),
-        col("sig_a"), col("sig_b"), bandBits, nBands))
-      .select(col("id_a"), col("sig_a"), col("id_b"), col("sig_b"))
+    BandedJoin.narrow(bits / nBands, nBands)
   }
 
-  /** One row per (signature, band): (id, simhash, bk) with the packed key
-    * bk = band · 2^bandBits + the band's bits, so band = bk >> bandBits.
-    * Every narrow banded frame (self-join, touching probe, screen index and
-    * probe, persistent index) is built here, so the key is defined once.
-    * The caller may shift `spare` more bits in below bk; all of it must
-    * fit 63 bits.
-    */
-  private def bandedSigs(sigs: DataFrame, bandBits: Int, nBands: Int, spare: Int): DataFrame = {
-    require(bandBits + bitWidth(nBands - 1) + spare <= 63,
-      s"packed band key needs ${bandBits + bitWidth(nBands - 1) + spare} bits; a bigint holds 63")
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    sigs.crossJoin(broadcast((0 until nBands).toDF("band")))
-      .select(col("id"), col("simhash"), (shiftleft(col("band").cast("long"), bandBits) +
-        expr(s"shiftright(simhash, band * $bandBits) & ${(1L << bandBits) - 1}")).as("bk"))
-  }
-
-  /** Bits needed to hold `maxValue` (0 for 0). */
-  private def bitWidth(maxValue: Int): Int = 32 - Integer.numberOfLeadingZeros(maxValue)
-
-  /** Grid size of the salted self-join split: hot-bucket work divides by
-    * g², input rows multiply by g (tiny frames). 8 splits the worst
-    * measured bucket ~64× while keeping the enumerated side trivial.
-    */
-  private val SELF_JOIN_SPLIT = 8
-
-  /** TRUE iff `band` is the FIRST band whose keys match between the two
-    * narrow (single-BIGINT) signatures — row-local pre-dedup of banded
-    * candidates BEFORE the distinct exchange (round-8; guide §2.3 "shuffle
-    * fewer bytes"): a pair within maxHamming of a near-dup corpus shares
-    * ~all nBands bands, so the candidate join otherwise emits ≈nBands
-    * copies of every pair into the distinct's shuffle (measured on the
-    * sf0.1 clusters head: 28.9M rows shuffled into distinct for 1.2M out).
-    * Both full signatures ride the joined row, so "j matches" is a pure
-    * integer test on their XOR; keeping only the first matching band emits
-    * each (pair, orientation) exactly once. Recall is unchanged: the
-    * joined band itself matches, so a first matching band always exists
-    * and that copy survives. The later `.distinct()` stays as the
-    * orientation/safety net, now over ~nBands× fewer rows.
-    */
-  private def firstMatchingBand(band: Column, sigA: Column, sigB: Column,
-      bandBits: Int, nBands: Int): Column = {
-    val x = sigA.bitwiseXOR(sigB)
-    val mask = (1L << bandBits) - 1
-    (0 until nBands).map { j =>
-      band <= lit(j) || (shiftright(x, j * bandBits).bitwiseAND(lit(mask)) =!= lit(0L))
-    }.reduce(_ && _)
-  }
-
-  /** [[firstMatchingBand]] for WIDE (array-of-words) signatures: band j
-    * matches iff word j is equal — one word per band by construction.
-    */
-  private def firstMatchingBandWide(band: Column, sigA: Column, sigB: Column,
-      nBands: Int): Column =
-    (0 until nBands).map { j =>
-      band <= lit(j) || (element_at(sigA, j + 1) =!= element_at(sigB, j + 1))
-    }.reduce(_ && _)
+  /** [[simhash]] output (id, simhash) as the (id, sig) a [[BandedJoin]] reads. */
+  private def asSig(sigs: DataFrame): DataFrame = sigs.select(col("id"), col("simhash").as("sig"))
 
   /** Incremental ingest screen: probe a NEW batch against a BASE corpus for
     * SimHash near-dups, comparing neither base-to-base nor batch-to-batch.
@@ -691,7 +509,7 @@ object Dedup {
       batch, idCol, textCol, bits, nBands, maxHamming)
 
   /** The base corpus's banded signature index — (base_id, sig_b, bk), bk
-    * the packed band key of [[bandedSigs]]. Build (and cache/materialize)
+    * the packed band key of [[BandedJoin]]. Build (and cache/materialize)
     * ONCE; probe every arriving batch against it with
     * [[screenAgainstIndex]].
     */
@@ -700,12 +518,9 @@ object Dedup {
       idCol: String,
       textCol: String,
       bits: Int = 48,
-      nBands: Int = 12): DataFrame = {
-    require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
-    graft.ops.Par.pinned(
-      bandedSigs(simhash(base, idCol, textCol, bits), bits / nBands, nBands, 0), col("bk"))
-      .select(col("id").as("base_id"), col("simhash").as("sig_b"), col("bk"))
-  }
+      nBands: Int = 12): DataFrame =
+    narrowBands(bits, nBands).index(asSig(simhash(base, idCol, textCol, bits)))
+      .select(col("id").as("base_id"), col("sig").as("sig_b"), col("bk"))
 
   /** Probe a batch against a prebuilt [[simhashBandedIndex]]. */
   def screenAgainstIndex(
@@ -718,24 +533,27 @@ object Dedup {
       maxHamming: Int = 11): DataFrame = {
     require(maxHamming < nBands,
       s"pigeonhole guarantee needs maxHamming ($maxHamming) < nBands ($nBands)")
-    require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
-    val bandBits = bits / nBands
-    val probe = graft.ops.Par.pinned(
-      bandedSigs(simhash(batch, idCol, textCol, bits), bandBits, nBands, 0), col("bk"))
-      .select(col("id"), col("simhash").as("sig_n"), col("bk"))
-    verifyScreenMatches(probe.join(index, "bk")
-      .filter(firstMatchingBand(shiftright(col("bk"), bandBits),
-        col("sig_n"), col("sig_b"), bandBits, nBands)),
+    val bands = narrowBands(bits, nBands)
+    verifyScreenMatches(
+      bands.probe(bands.index(asSig(simhash(batch, idCol, textCol, bits))), asIndex(index)),
       maxHamming)
   }
 
-  /** Shared screen tail: matched (id, sig_n, base_id, sig_b) candidate rows
-    * → hamming verify → per-batch-doc (n_matches, min_hamming, match_id)
-    * with the deterministic (hamming, id) min-encoding tie-break.
+  /** A [[simhashBandedIndex]] (base_id, sig_b, bk) as the (id, sig, bk)
+    * index side of a [[BandedJoin.probe]].
+    */
+  private def asIndex(index: DataFrame): DataFrame =
+    index.select(col("base_id").as("id"), col("sig_b").as("sig"), col("bk"))
+
+  /** Shared screen tail: probe-join rows (id_x, sig_x, id_y, sig_y) of a
+    * batch doc x and a base doc y → hamming verify → per-batch-doc
+    * (n_matches, min_hamming, match_id) with the deterministic
+    * (hamming, id) min-encoding tie-break.
     */
   private def verifyScreenMatches(matched: DataFrame, maxHamming: Int): DataFrame = {
     val ENC = 1000000000000L // hamming ≤ 63 ≪ 10¹², ids < 10¹² by contract
-    matched
+    matched.select(col("id_x").as("id"), col("sig_x").as("sig_n"),
+        col("id_y").as("base_id"), col("sig_y").as("sig_b"))
       // enforce the id contract at runtime: an out-of-range base_id would
       // silently corrupt the (hamming, id) min-encoding tie-break below —
       // fail the job instead
@@ -759,8 +577,7 @@ object Dedup {
   }
 
   /** Persist the banded signature index as an on-disk BUCKETED table,
-    * hash-bucketed on its packed band key `bk` ([[bandedSigs]]; injective
-    * in (band, band bits), so a join on `bk` alone is exact) — the
+    * hash-bucketed on its packed band key `bk` ([[BandedJoin]]) — the
     * cross-JOB layout the incremental screen needs at 100 TB: the base
     * corpus is hashed and banded ONCE, lives on disk, and every future
     * probe joins it CO-LOCATED (zero shuffle on either side, asserted by
@@ -804,17 +621,13 @@ object Dedup {
     require(graft.sources.PartitionedSink.isShuffleFree(joined),
       "persistent-index probe join introduced a shuffle exchange — " +
         "index and probe must be co-bucketed on bk")
-    // band = bk >> bandBits (row-local)
-    val bandBits = bits / nBands
-    verifyScreenMatches(joined
-      .filter(firstMatchingBand(shiftright(col("bk"), bandBits),
-        col("sig_n"), col("sig_b"), bandBits, nBands)),
-      maxHamming)
+    verifyScreenMatches(joined, maxHamming)
   }
 
-  /** The matched-candidates join of [[screenAgainstPersistentIndex]],
-    * exposed so callers can runtime-assert its plan has no shuffle
-    * exchange before aggregating.
+  /** The matched-candidates join of [[screenAgainstPersistentIndex]]
+    * (a [[BandedJoin.probe]]: id_x, sig_x, id_y, sig_y), exposed so
+    * callers can runtime-assert its plan has no shuffle exchange before
+    * aggregating.
     */
   def probeJoinAgainstPersistentIndex(
       index: DataFrame,
@@ -825,13 +638,10 @@ object Dedup {
       bits: Int = 48,
       nBands: Int = 12,
       nBuckets: Int = 16): DataFrame = {
-    require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
-    val probe = bandedSigs(simhash(batch, idCol, textCol, bits), bits / nBands, nBands, 0)
-      .select(col("id"), col("simhash").as("sig_n"), col("bk"))
+    val bands = narrowBands(bits, nBands)
     val probeTbl = graft.sources.PartitionedSink.writeBucketedTable(
-      probe, "bk", nBuckets, probeTable)
-    probeTbl.hint("merge")
-      .join(index.select(col("bk"), col("base_id"), col("sig_b")), Seq("bk"))
+      bands.frame(asSig(simhash(batch, idCol, textCol, bits))), "bk", nBuckets, probeTable)
+    bands.probe(probeTbl.hint("merge"), asIndex(index))
   }
 
   /** SimHash-headed Jaccard near-dup pairs: banded SimHash multi-index
@@ -940,24 +750,16 @@ object Dedup {
 
   /** Candidate rows of the touching head before verify: (id_x, sig_x,
     * id_y, sig_y) for every batch doc x and other doc y sharing a band,
-    * once per ordered pair (its first matching band). The banded frame is
-    * pinned on the packed (band, bkey) bigint and both sides join on it,
-    * for the same reason as in [[selfJoinCandidates]].
+    * once per ordered pair (its first matching band): the batch's rows of
+    * the pinned banded frame probe the whole frame ([[BandedJoin.probe]]).
     */
   private[dedup] def probeCandidates(sigs: DataFrame, batchIds: DataFrame,
       bits: Int, nBands: Int): DataFrame = {
-    require(bits % nBands == 0, s"nBands=$nBands must divide bits=$bits")
-    val bandBits = bits / nBands
-    val banded = graft.ops.Par.pinned(bandedSigs(sigs, bandBits, nBands, 0), col("bk"))
+    val bands = narrowBands(bits, nBands)
+    val banded = bands.index(asSig(sigs))
     val ids = batchIds.select(col(batchIds.columns.head).as("id"))
-    val probe = banded.join(ids, Seq("id"), "left_semi")
-      .select(col("id").as("id_x"), col("simhash").as("sig_x"), col("bk"))
-    val index = banded.select(col("id").as("id_y"), col("simhash").as("sig_y"), col("bk"))
-    probe.join(index, "bk")
+    bands.probe(banded.join(ids, Seq("id"), "left_semi"), banded)
       .filter(col("id_x") =!= col("id_y"))
-      .filter(firstMatchingBand(shiftright(col("bk"), bandBits),
-        col("sig_x"), col("sig_y"), bandBits, nBands))
-      .select(col("id_x"), col("sig_x"), col("id_y"), col("sig_y"))
   }
 
   /** Candidate pairs (id_a, id_b) kept when the n-gram Jaccard of their
@@ -1063,9 +865,9 @@ object Dedup {
   /** Near-duplicate candidate pairs over [[simhashWide]] signatures — the
     * ≥64-bit scale path of [[simhashNearDupPairs]], same pigeonhole recall
     * guarantee (any pair within `maxHamming` < `nBands` differing bits
-    * shares at least one full band/word). Banding is `posexplode` over the
-    * signature words; verify is Σ bit_count(xor) over zipped words.
-    * Output: (id_a, id_b, hamming).
+    * shares at least one full band/word). Candidates come from the
+    * triangle-split [[BandedJoin.self]] join keyed on each word; verify is
+    * Σ bit_count(xor) over zipped words. Output: (id_a, id_b, hamming).
     */
   def simhashWideNearDupPairs(
       df: DataFrame,
@@ -1076,16 +878,8 @@ object Dedup {
       maxHamming: Int = 11): DataFrame = {
     require(maxHamming < nBands,
       s"pigeonhole guarantee needs maxHamming ($maxHamming) < nBands ($nBands)")
-    val sigs = simhashWide(df, idCol, textCol, bits, nBands)
-    val banded = graft.ops.Par.pinned(
-      sigs.select(col("id"), col("simhash"),
-        posexplode(col("simhash")).as(Seq("band", "bkey"))),
-      col("band"), col("bkey"))
-    val a = banded.select(col("id").as("id_a"), col("simhash").as("sig_a"), col("band"), col("bkey"))
-    val b = banded.select(col("id").as("id_b"), col("simhash").as("sig_b"), col("band"), col("bkey"))
-    a.join(b, Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(firstMatchingBandWide(col("band"), col("sig_a"), col("sig_b"), nBands))
+    BandedJoin.wide(bits / nBands, nBands)
+      .self(asSig(simhashWide(df, idCol, textCol, bits, nBands)))
       .withColumn("hamming",
         expr("aggregate(zip_with(sig_a, sig_b, (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)"))
       .filter(col("hamming") <= maxHamming)

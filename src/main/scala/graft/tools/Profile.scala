@@ -19,12 +19,11 @@ object Profile {
     val docs = Tables.documents(spark, dir).cache()
     println(s"docs: ${docs.count()}")
 
-    val sigs = time("signatures") {
-      val s = Dedup.minhashSignatures(docs, "doc_id", "text", 1, 16).cache()
-      s.count(); s
+    time("signatures") {
+      Dedup.minhashSignatures(docs, "doc_id", "text", 1, 16).count()
     }
     val cands = time("lsh candidates") {
-      val c = Dedup.lshCandidates(sigs, 4, 16).cache()
+      val c = Dedup.lshCandidates(docs, "doc_id", "text", 1, 16, 4).cache()
       println(s"  candidates: ${c.count()}"); c
     }
     time("verify (array jaccard)") {

@@ -57,26 +57,6 @@ object ProfileSim {
     // --- SimHash head (q_dedup_clusters / q_curation_pipeline) ---
     time("simhash48")(Dedup.simhash(docs, "doc_id", "text", 48).count())
     time("simhash48 again")(Dedup.simhash(docs, "doc_id", "text", 48).count())
-    locally {
-      // fine-grained candidate-join stages
-      import org.apache.spark.sql.DataFrame
-      val bandBits = 4; val mask = (1L << bandBits) - 1
-      val sigs = Dedup.simhash(docs, "doc_id", "text", 48).cache()
-      time("sig cache")(sigs.count())
-      val spark2 = docs.sparkSession
-      import spark2.implicits._
-      val banded = sigs.crossJoin(broadcast((0 until 12).toDF("band")))
-        .withColumn("bkey", expr(s"shiftright(simhash, band * $bandBits) & $mask"))
-      val a = banded.select(col("id").as("id_a"), col("simhash").as("sig_a"), col("band"), col("bkey"))
-      val b = banded.select(col("id").as("id_b"), col("simhash").as("sig_b"), col("band"), col("bkey"))
-      val joined = a.join(b, Seq("band", "bkey")).filter(col("id_a") < col("id_b"))
-      time("cand join raw")(println(s"  raw joined: ${joined.count()}"))
-      val ham = joined.withColumn("hamming", expr("bit_count(sig_a ^ sig_b)"))
-        .filter(col("hamming") <= 11)
-      time("cand join + hamming")(println(s"  after hamming: ${ham.count()}"))
-      time("cand join + hamming + distinct")(println(s"  distinct: ${ham.select(col("id_a"), col("id_b"), col("hamming")).distinct().count()}"))
-      sigs.unpersist()
-    }
     val nd = time("simhashNearDupPairs (cand join + hamming + distinct)") {
       val p = Dedup.simhashNearDupPairs(docs, "doc_id", "text",
         bits = 48, nBands = 12, maxHamming = 11)
@@ -95,8 +75,7 @@ object ProfileSim {
       Dedup.minhashSignatures(docs, "doc_id", "text", 1, 16).count()
     }
     time("lsh cands uncapped") {
-      val c = Dedup.lshCandidates(
-        Dedup.minhashSignatures(docs, "doc_id", "text", 1, 16), 4, 16, None)
+      val c = Dedup.lshCandidates(docs, "doc_id", "text", 1, 16, 4)
       println(s"  cands: ${c.count()}")
     }
     time("minhashLshPairs thr0.8 uncapped (q_dedup_minhash_lsh)") {

@@ -68,11 +68,13 @@ class DedupSpec extends SparkTestBase {
       (0L, "alpha beta gamma delta epsilon zeta", "s0"),
       (1L, "alpha beta gamma delta epsilon zeta", "s0")) ++ boiler)
       .toDF("doc_id", "text", "source")
-    val sigs = Dedup.minhashSignatures(df, "doc_id", "text", 1, 16).cache()
-    val uncapped = Dedup.lshCandidates(sigs, 4, 16)
+    val uncapped = Dedup.lshCandidates(df, "doc_id", "text", 1, 16, 4)
       .as[(Long, Long)].collect().toSet
-    val capped = Dedup.lshCandidates(sigs, 4, 16, maxBucketSize = Some(10))
+    val capped = Dedup.lshCandidates(df, "doc_id", "text", 1, 16, 4, maxBucketSize = Some(10))
       .as[(Long, Long)].collect().toSet
+    val ref = minhashRef(df, 1, 16)
+    assert(uncapped == lshRef(ref, 4, None))
+    assert(capped == lshRef(ref, 4, Some(10)))
     // uncapped: C(20,2)=190 boilerplate pairs; capped: only the 19-edge hub
     // star (min id 100 vs each member) — O(bucket), connectivity preserved
     assert(uncapped.count { case (a, b) => a >= 100 && b >= 100 } == 190)
@@ -82,7 +84,7 @@ class DedupSpec extends SparkTestBase {
     // the planted pair survives the cap untouched
     assert(capped.contains((0L, 1L)))
     // histogram exposes the mega-bucket for tuning
-    val sizes = Dedup.lshBucketSizes(sigs, 4, 16)
+    val sizes = Dedup.lshBucketSizes(df, "doc_id", "text", 1, 16, 4)
       .filter(col("n") > 10).select("n").as[Long].collect()
     assert(sizes.nonEmpty && sizes.forall(_ == 20L))
     // the cap threads through the end-to-end pipeline (what the flagship
@@ -122,19 +124,84 @@ class DedupSpec extends SparkTestBase {
     assert(byDoc(0L) == byDoc(1L)) // same shingle set -> same signature
   }
 
-  test("aggregator-based signatures equal the explode formulation exactly") {
-    val df = corpus
-    val viaAgg = Dedup.minhashSignaturesAgg(df, "doc_id", "text", n = 1, k = 16)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("i"), r.getAs[Long]("minh"))).toSet
-    val viaExplode = Dedup.minhashSignaturesExploded(df, "doc_id", "text", n = 1, k = 16)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("i"), r.getAs[Long]("minh"))).toSet
-    assert(viaAgg == viaExplode)
-    assert(viaAgg.size == 4 * 16)
-    // round-7: the DEFAULT path is the one-aggregation wide form — it must
-    // reproduce the explode formulation value-for-value too
-    val viaWide = Dedup.minhashSignatures(df, "doc_id", "text", n = 1, k = 16)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("i"), r.getAs[Long]("minh"))).toSet
-    assert(viaWide == viaExplode)
+  /** Driver-side MinHash signatures: distinct n-token shingles (split on
+    * " " keeping empty tokens), x = md5-60 of the shingle mod p, minimum i
+    * = min over x of (a_i·x + b_i) mod p. Null text gives no signature.
+    */
+  private def minhashRef(df: DataFrame, n: Int, k: Int): Map[Long, Vector[Long]] = {
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    def hash60(s: String) = java.nio.ByteBuffer.wrap(
+      md5.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))).getLong >>> 4
+    val params = Dedup.minhashParams(k)
+    df.select("doc_id", "text").as[(Long, String)].collect().collect {
+      case (id, text) if text != null && text.split(" ", -1).length >= n =>
+        val xs = text.split(" ", -1).toSeq.sliding(n).map(_.mkString(" ")).toSeq.distinct
+          .map(sh => hash60(sh) % Dedup.MINHASH_P)
+        id -> params.map { case (_, a, b) => xs.map(x => (a * x + b) % Dedup.MINHASH_P).min }.toVector
+    }.toMap
+  }
+
+  /** Driver-side LSH candidates: every pair sharing some band's minima;
+    * under a cap, the pairs of within-cap buckets plus each over-cap
+    * bucket's hub star (its min id with every other member).
+    */
+  private def lshRef(sigs: Map[Long, Vector[Long]], nBands: Int, cap: Option[Int]): Set[(Long, Long)] = {
+    val rows = sigs.values.head.size / nBands
+    val buckets = sigs.toSeq.flatMap { case (id, sig) =>
+      (0 until nBands).map(b => (b, sig.slice(b * rows, (b + 1) * rows)) -> id)
+    }.groupBy(_._1).values.map(_.map(_._2).sorted)
+    buckets.flatMap { ids =>
+      if (cap.exists(ids.size > _)) ids.tail.map(ids.head -> _)
+      else for (a <- ids; b <- ids if a < b) yield (a, b)
+    }.toSet
+  }
+
+  test("minhashSignatures equal a driver-side md5-60 reference") {
+    for ((df, n, k) <- Seq((corpus, 1, 16), (hotBucketCorpus, 2, 8))) {
+      val got = Dedup.minhashSignatures(df, "doc_id", "text", n, k)
+        .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("i"), r.getAs[Long]("minh"))).toSet
+      val ref = minhashRef(df, n, k)
+      assert(got == ref.toSet[(Long, Vector[Long])].flatMap { case (id, sig) =>
+        sig.zipWithIndex.map { case (m, i) => (id, i, m) } }, s"n=$n k=$k")
+      assert(got.size == ref.size * k && ref.nonEmpty)
+    }
+  }
+
+  test("lshCandidates equal the driver-side bucket reference, uncapped and capped") {
+    for (df <- Seq(corpus, hotBucketCorpus)) {
+      val ref = minhashRef(df, 1, 16)
+      for (cap <- Seq(None, Some(3), Some(10))) {
+        val got = Dedup.lshCandidates(df, "doc_id", "text", 1, 16, 4, cap).as[(Long, Long)].collect()
+        assert(got.length == got.distinct.length)
+        assert(got.toSet == lshRef(ref, 4, cap), s"cap=$cap")
+      }
+    }
+  }
+
+  test("colliding band keys never become candidates") {
+    // two 8-bit bands; band 0 keys its bits, band 1 sends every signature
+    // to one key, so all band-1 rows collide
+    val bands = new BandedJoin(2, 8, (sig, band) => when(band === 0, sig).otherwise(lit(0L)),
+      (j, a, b) => shiftright(a.bitwiseXOR(b), 8 * j).bitwiseAND(lit(255L)) === lit(0L))
+    // band bytes (band 1, band 0): 1 and 2 share nothing; 3 and 4 match in
+    // band 0 only; 5 and 6 in band 1 only
+    val sigs = Seq(1L -> 0x0102L, 2L -> 0x0304L, 3L -> 0x0501L, 4L -> 0x0601L,
+      5L -> 0x0710L, 6L -> 0x0720L).toDF("id", "sig")
+    assert(bands.self(sigs).select("id_a", "id_b").as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((3L, 4L), (5L, 6L)))
+    // hand-built frames: bk = band·2^8 + key
+    def frame(rows: (Long, Long, Long)*) = rows.toDF("id", "sig", "bk")
+    def probe(p: DataFrame, i: DataFrame) =
+      bands.probe(p, i).select("id_x", "id_y").as[(Long, Long)].collect().toSeq
+    // same bk, different band-1 bits: nothing
+    assert(probe(frame((1L, 0x0102L, 256L)), frame((2L, 0x0304L, 256L))).isEmpty)
+    assert(probe(frame((3L, 0x0501L, 256L)), frame((4L, 0x0601L, 256L))).isEmpty)
+    // with their matching band-0 rows added, the pair comes out once
+    assert(probe(frame((3L, 0x0501L, 256L), (3L, 0x0501L, 1L)),
+      frame((4L, 0x0601L, 256L), (4L, 0x0601L, 1L))) == Seq((3L, 4L)))
+    // a band-0 collision does not hide a later matching band
+    assert(probe(frame((5L, 0x0710L, 0L), (5L, 0x0710L, 256L)),
+      frame((6L, 0x0720L, 0L), (6L, 0x0720L, 256L))) == Seq((5L, 6L)))
   }
 
   test("connectedComponents: chains collapse to min id, singletons keep their own") {
@@ -349,11 +416,12 @@ class DedupSpec extends SparkTestBase {
       assert(touching == touchingOld, tag)
       assert(touching.nonEmpty && touching.forall(t => batchSet(t._1) || batchSet(t._2)), tag)
     }
-    // the packed key must fit a bigint
-    val e = intercept[IllegalArgumentException] {
-      Dedup.simhashNearDupPairs(df, "doc_id", "text", bits = 64, nBands = 1, maxHamming = 0)
-    }
-    assert(e.getMessage.contains("packed band key"))
+    // a 64-bit band is wider than the packed key's free bits: its key is
+    // masked, and the exact band test still gives the brute-force pairs
+    val sigs64 = Dedup.simhash(df, "doc_id", "text", 64).as[(Long, Long)].collect()
+    assert(Dedup.simhashNearDupPairs(df, "doc_id", "text", bits = 64, nBands = 1, maxHamming = 0)
+      .as[(Long, Long, Int)].collect().toSet ==
+      (for ((a, x) <- sigs64; (b, y) <- sigs64 if a < b && x == y) yield (a, b, 0)).toSet)
   }
 
   test("simhash: identical texts equal; near-dup within small hamming distance; unrelated far") {
@@ -489,18 +557,25 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("simhashWideNearDupPairs: pigeonhole recall vs brute-force over wide signatures") {
-    val pairs = Dedup.simhashWideNearDupPairs(corpus, "doc_id", "text",
-      bits = 96, nBands = 12, maxHamming = 11)
+    // 96/12 gives 8-bit words; 720/12 gives 60-bit words, wider than the
+    // free bits of the packed key, so the self-join masks them
+    for ((df, bits) <- Seq((corpus, 96), (hotBucketCorpus, 96), (hotBucketCorpus, 720))) {
+      val pairs = Dedup.simhashWideNearDupPairs(df, "doc_id", "text",
+        bits = bits, nBands = 12, maxHamming = 11)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
+      val sigs = Dedup.simhashWide(df, "doc_id", "text", bits = bits, nBands = 12)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      val truth = (for {
+        a <- sigs.keys; b <- sigs.keys if a < b
+        h = sigs(a).zip(sigs(b)).map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum
+        if h <= 11
+      } yield (a, b) -> h).toMap
+      assert(pairs == truth, s"bits=$bits: wide banded pairs $pairs != brute-force truth $truth")
+      assert(pairs.nonEmpty)
+    }
+    val exact = Dedup.simhashWideNearDupPairs(corpus, "doc_id", "text", 96, 12, 11)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
-    val sigs = Dedup.simhashWide(corpus, "doc_id", "text", bits = 96, nBands = 12)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val truth = (for {
-      a <- sigs.keys; b <- sigs.keys if a < b
-      h = sigs(a).zip(sigs(b)).map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum
-      if h <= 11
-    } yield (a, b) -> h).toMap
-    assert(pairs == truth, s"wide banded pairs $pairs != brute-force truth $truth")
-    assert(pairs.get((0L, 1L)).contains(0)) // exact dup at hamming 0
+    assert(exact.get((0L, 1L)).contains(0)) // exact dup at hamming 0
   }
 
   test("wide Jaccard head: verified pairs subset of narrow head's at equal maxHamming; exact dups always survive") {

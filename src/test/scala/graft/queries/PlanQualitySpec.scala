@@ -311,4 +311,22 @@ class PlanQualitySpec extends SparkTestBase {
       s"triangles must join on keys only:\n$plan")
     assert(!plan.contains("Window"), s"triangles must not window:\n$plan")
   }
+
+  test("banded self-joins (narrow, wide SimHash, uncapped MinHash) equi-join on one bigint") {
+    import graft.dedup.Dedup
+    import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+    import org.apache.spark.sql.types.LongType
+    val docs = (0L until 40L).map(i => (i, s"w${i % 5} w${i % 7} shared words here"))
+      .toDF("doc_id", "text")
+    for ((name, df) <- Seq(
+        "narrow" -> Dedup.simhashNearDupPairs(docs, "doc_id", "text", 48, 12, 11),
+        "wide" -> Dedup.simhashWideNearDupPairs(docs, "doc_id", "text", 96, 12, 11),
+        "minhash" -> Dedup.lshCandidates(docs, "doc_id", "text", 1, 16, 4))) {
+      val keys = df.queryExecution.optimizedPlan.collect {
+        case ExtractEquiJoinKeys(_, left, _, _, _, _, _, _) => left.map(_.dataType)
+      }
+      assert(keys == Seq(Seq(LongType)), s"$name candidate join keys: $keys")
+      assert(df.count() > 0, name)
+    }
+  }
 }
