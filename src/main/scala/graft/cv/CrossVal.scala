@@ -1,6 +1,7 @@
 package graft.cv
 
 import org.apache.spark.ml.{Estimator, Model, Transformer}
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,17 +10,26 @@ import graft.ops.FanOut
 /** Per-fold fit / predict over `spark.ml` estimators — the Spark re-expression
   * of the reference's application layer (`panelsplit/application.py:160-371`).
   *
-  * joblib process fan-out (`application.py:216-223`) becomes driver-thread
-  * fan-out: each fold's fit is an independent Spark job over a shared (cache
-  * the input!) DataFrame; the cluster scheduler does the real parallelism.
-  * Positional index arrays become predicate-filtered DataFrames; out-of-fold
-  * reassembly (`application.py:142-157` argsort) becomes a `fold`-tagged
-  * union — callers who need original order carry their own `row_id`.
+  * [[crossValFit]] is the one place folds are fitted: plain cross-validation,
+  * every CV step of a [[graft.pipeline.SequentialCVPipeline]], and so every
+  * search candidate, fit through it. An estimator whose fit needs only summed
+  * moments (`StandardScaler`; `LinearRegression` with squared loss, no
+  * penalty and the normal-equation solver) fits all its folds from one
+  * aggregation job ([[FoldMoments]]). Any other estimator gets one fit per
+  * fold, an independent Spark job over the shared (cache the input!)
+  * DataFrame; joblib's process fan-out (`application.py:216-223`) becomes
+  * driver-thread fan-out, and the cluster scheduler does the real
+  * parallelism. Positional index arrays become predicate-filtered
+  * DataFrames; out-of-fold reassembly (`application.py:142-157` argsort)
+  * becomes a `fold`-tagged union — callers who need original order carry
+  * their own `row_id`.
   */
 object CrossVal {
 
   /** Fit a clone of `estimator` per fold on that fold's train rows.
     *
+    * @param labelCol    the label whose nulls `dropNaInY` drops; unread
+    *                    otherwise
     * @param dropNaInY   filter null labels from train before fitting
     *                    (`application.py:96-105`)
     * @param weightCol   set on the estimator only if it declares a weightCol
@@ -36,17 +46,21 @@ object CrossVal {
       dropNaInY: Boolean = false,
       parallelism: Int = 1): Seq[Transformer] = {
 
-    val tasks: Seq[() => Transformer] = cv.folds.map { f => () =>
-      val base = df.filter(f.trainPredicate(cv.periodsCol, cv.snapshotCol))
-      val train = if (dropNaInY) base.filter(col(labelCol).isNotNull) else base
-      val est = estimator.copy(org.apache.spark.ml.param.ParamMap.empty)
-        .asInstanceOf[Estimator[_ <: Model[_]]]
+    def configured(): Estimator[_ <: Model[_]] = {
+      val est = estimator.copy(ParamMap.empty).asInstanceOf[Estimator[_ <: Model[_]]]
       weightCol.foreach { w =>
         if (est.hasParam("weightCol")) est.set(est.getParam("weightCol"), w)
       }
-      est.fit(train).asInstanceOf[Transformer]
+      est
     }
-    FanOut(tasks, parallelism)
+    val nonNull = if (dropNaInY) Some(labelCol) else None
+    def fitFold(f: PeriodFold): Transformer = {
+      val base = df.filter(f.trainPredicate(cv.periodsCol, cv.snapshotCol))
+      val train = nonNull.fold(base)(c => base.filter(col(c).isNotNull))
+      configured().fit(train).asInstanceOf[Transformer]
+    }
+    FoldMoments.fit(configured(), df, cv, nonNull, fitFold)
+      .getOrElse(FanOut(cv.folds.map(f => () => fitFold(f)), parallelism))
   }
 
   /** Out-of-fold prediction: each fold's model transforms exactly that fold's

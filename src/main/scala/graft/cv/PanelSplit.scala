@@ -289,7 +289,9 @@ object PanelSplit {
       uniquePeriods: Option[Vector[Any]] = None): PanelSplit = {
 
     val axis: Vector[Any] = uniquePeriods.getOrElse {
-      df.select(col(periodsCol)).na.drop().distinct().orderBy(col(periodsCol))
+      // one partition sorted locally: no range-sampling job, no second shuffle
+      df.select(col(periodsCol)).na.drop().distinct()
+        .coalesce(1).sortWithinPartitions(col(periodsCol))
         .collect().map(_.get(0)).toVector
     }
     val minSnapshot: Option[Any] = snapshotCol.map { sc =>

@@ -752,7 +752,7 @@ object Metrics {
     val (spec, sign) = resolve(scorer)
     preds.groupBy(col(foldCol))
       .agg((spec.agg(col(labelCol).cast("double"), col(predictionCol).cast("double")) * sign).as("score"))
-      .orderBy(col(foldCol))
+      .coalesce(1).sortWithinPartitions(col(foldCol)) // one row per fold: no range sort needed
   }
 
   // ---- sample-weighted metrics ------------------------------------------

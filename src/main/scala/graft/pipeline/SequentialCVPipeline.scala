@@ -64,8 +64,8 @@ final class SequentialCVPipeline(
 
   /** Fit every step and return the last step's output, still carrying the
     * internal `__fold` marker. Each CV step's out-of-fold output is
-    * persisted while a later step fits on it, so that step's per-fold fits
-    * read it instead of recomputing it; all of them are released once the
+    * persisted while a later step fits on it, so that step's fit reads it
+    * instead of recomputing it; all of them are released once the
     * last step is fitted. The returned frame itself is not persisted.
     */
   private[graft] def fitOutput(df: DataFrame): DataFrame = {
@@ -83,10 +83,8 @@ final class SequentialCVPipeline(
             acc += name -> Some(FittedWhole(model))
             current = model.transform(current)
           case Some(cv) =>
-            val foldModels = cv.folds.map { f =>
-              val train = current.filter(f.trainPredicate(cv.periodsCol, cv.snapshotCol))
-              f -> cloneEst(est).fit(train).asInstanceOf[Transformer]
-            }
+            // no label filter: a pipeline step fits on every train row
+            val foldModels = cv.folds.zip(CrossVal.crossValFit(est, current, cv, labelCol = ""))
             acc += name -> Some(FittedPerFold(cv, foldModels))
             current = applyPerFold(cv, foldModels, current)
             if (i < lastEstimator && current.storageLevel == StorageLevel.NONE)

@@ -28,6 +28,28 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Runs `body` and returns its result with the Spark jobs it ran and the
+    * stages those jobs completed (skipped stages do not count).
+    */
+  def jobsDuring[T](body: => T): (T, SparkTestBase.Work) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, SparkTestBase.Work(jobs.get, stages.get))
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Runs `body` and returns its result with the ids of the RDDs it left
     * behind: new in `getPersistentRDDs` or holding `rdd_` blocks.
     */
@@ -75,4 +97,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkTestBase {
   lazy val session: SparkSession = GraftSession.build(4)
+
+  /** Spark jobs run, and stages completed, during a measured block. */
+  final case class Work(jobs: Int, stages: Int)
 }

@@ -46,4 +46,13 @@ class PeriodDtypeSpec extends SparkTestBase {
     val ps = PanelSplit(df, "period", nSplits = 2, testSize = 1)
     assert(ps.folds.map(_.testPeriods) == Vector(Vector(2), Vector(3)))
   }
+
+  test("the axis of a cached multi-partition frame is collected sorted, in two jobs") {
+    val df = (0 until 120).map(i => (i, (i * 37) % 29)).toDF("id", "period").repartition(4).cache()
+    df.count()
+    val (ps, work) = jobsDuring(PanelSplit(df, "period", nSplits = 28, testSize = 1))
+    assert(work.jobs == 2)
+    assert(ps.folds.map(_.testPeriods.head) == (1 until 29).toVector)
+    df.unpersist()
+  }
 }

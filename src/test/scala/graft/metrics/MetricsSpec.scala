@@ -125,4 +125,16 @@ class MetricsSpec extends SparkTestBase {
       assert(r.getAs[Double](c) === 0.5, c)
     }
   }
+
+  test("perFoldScores returns its rows in fold order, in two jobs") {
+    val df = (0 until 260).map(i => ((i * 7) % 13, i.toDouble, i + 1.0))
+      .toDF("fold", "label", "prediction").repartition(4).cache()
+    df.count()
+    val (rows, work) = jobsDuring(
+      Metrics.perFoldScores(df, "neg_mean_squared_error", "label", "prediction").collect())
+    assert(work.jobs == 2)
+    assert(rows.map(_.getInt(0)).toSeq == (0 until 13))
+    assert(rows.forall(_.getDouble(1) == -1.0))
+    df.unpersist()
+  }
 }

@@ -201,21 +201,11 @@ class SearchSpec extends SparkTestBase {
 
   test("fused scoring: 4 plain metrics cost no more stages than 1 (stage-count evidence)") {
     val df = panel.cache(); df.count()
-    def stagesFor(scoring: Seq[String]): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
+    def stagesFor(scoring: Seq[String]): Int =
+      jobsDuring {
         new GridSearch(pipe(df), Map("mu__shift" -> Seq(0.0)),
           scoring = scoring, labelCol = "y", refit = false).fit(df)
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      counter.get
-    }
+      }._2.stages
     val one = stagesFor(Seq("neg_mean_squared_error"))
     val four = stagesFor(Seq("neg_mean_squared_error", "neg_mean_absolute_error",
       "neg_root_mean_squared_error", "neg_mean_absolute_percentage_error"))
