@@ -1,14 +1,20 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.ops.Iterate
 
 import graft.text.TextFunctions._
 
 /** Deduplication operators for training-data pipelines — beyond-reference
   * (builder prompt). Designed for 100 TB: every stage is a shuffle-on-key
-  * DataFrame op (groupBy doc hash / band bucket), no driver materialization,
-  * no cross joins except within LSH candidate buckets.
+  * DataFrame op (groupBy doc hash / band bucket), no cross joins except
+  * within LSH candidate buckets, and no driver materialization but one,
+  * bounded: [[connectedComponentsFrom]] collects an edge list no larger
+  * than `spark.sql.autoBroadcastJoinThreshold` (16 B per edge) to solve it
+  * by union-find on the driver.
   */
 object Dedup {
 
@@ -329,12 +335,13 @@ object Dedup {
   }
 
   /** Connected components over the near-duplicate pair graph — the final
-    * step of a real dedup pipeline (one canonical doc per cluster).
-    * Iterative min-label propagation with pointer jumping, one aggregation
-    * per round (see [[connectedComponentsFrom]]); hash-partitioned joins,
-    * no driver graph. Rounds grow with component diameter; near-dup
-    * clusters are dense, so a handful. Throws if `maxIters` is hit
-    * unconverged.
+    * step of a real dedup pipeline (one canonical doc per cluster):
+    * [[connectedComponentsFrom]] from the labeling id → id. A small edge
+    * list is solved by union-find on the driver; a larger one by
+    * min-label propagation with pointer jumping, one aggregation per round
+    * over hash-partitioned joins. Rounds grow with component diameter;
+    * near-dup clusters are dense, so a handful. Throws if the propagation
+    * hits `maxIters` unconverged.
     *
     * @param nodes DataFrame with an `id` column (every doc, incl. singletons)
     * @param pairs DataFrame with `id_a`, `id_b` edges
@@ -347,10 +354,31 @@ object Dedup {
   /** [[connectedComponents]] from a seeded labeling: `seeds` is
     * (id, cluster) where every seed label is the id of a node in the same
     * component with label ≤ id (the trivial cluster = id always qualifies;
-    * a previous converged clustering qualifies by construction).
+    * a previous converged clustering qualifies by construction). The
+    * result has one row per distinct seed id, labelled with the minimum
+    * seed label of its component; edges to ids outside `seeds` are
+    * ignored.
     *
-    * Each round is ONE `groupBy(id)` over the union of three messages per
-    * node x, all read from the previous round's labels L:
+    * The edge list `(id_a, id_b)` is materialized once, by an eager
+    * `localCheckpoint` whose job also counts it, and released before
+    * returning. Then one of two paths runs; both return the same rows and
+    * schema:
+    *   - '''local''', when 16 B × edges ≤ `spark.sql.autoBroadcastJoinThreshold`
+    *     (−1 turns it off) and every id and label is an integer: the
+    *     edges are collected into a primitive array, one broadcast
+    *     semi-join (a filter on the sorted endpoint ids, broadcast and
+    *     destroyed after it) reads the seed labels of their endpoints,
+    *     union-find on the driver gives each component its minimum label,
+    *     and only the labels that changed go back, folded into the seeds
+    *     by a min aggregation. The result is lazy over `seeds` and holds
+    *     no blocks.
+    *     Logs `CC local: edges=E, nodes=N, Xs` to `graft.dedup.CC`;
+    *     `maxIters` does not apply.
+    *   - '''fixpoint''', otherwise: the rounds below, over edges cached from
+    *     the checkpoint. The result is the last round's checkpoint.
+    *
+    * Each fixpoint round is ONE `groupBy(id)` over the union of three
+    * messages per node x, all read from the previous round's labels L:
     *   - L(n) for every neighbour n (edges ⋈ labels on `dst`);
     *   - L(L(x)), the pointer jump (labels ⋈ labels on cluster = id,
     *     reusing the first join's labels exchange);
@@ -359,11 +387,11 @@ object Dedup {
     * the label of a node in x's component that is ≤ x's, so labels only
     * decrease, stay in-component, and every non-fixpoint state has a
     * decreasing step: any valid seed converges to the SAME fixpoint, the
-    * component-wide min id. The jump shortens paths (O(log length) rounds
-    * on a chain with ids in order, O(length) in random order); reading the
-    * previous labels, it may take a round or two more than a min-then-jump
-    * round. A previous clustering as seed saves the rounds that would
-    * re-derive it. Edges to ids outside `seeds` are ignored.
+    * component-wide min label. The jump shortens paths (O(log length)
+    * rounds on a chain with ids in order, O(length) in random order);
+    * reading the previous labels, it may take a round or two more than a
+    * min-then-jump round. A previous clustering as seed saves the rounds
+    * that would re-derive it.
     *
     * The rounds run on [[graft.ops.Iterate.fixpoint]]: one eager
     * checkpoint job per round counts the changed labels, and the previous
@@ -372,23 +400,114 @@ object Dedup {
     */
   def connectedComponentsFrom(seeds: DataFrame, pairs: DataFrame,
       maxIters: Int = 20): DataFrame = {
-    // symmetrize via explode, not union: a self-union would run the pair
-    // plan twice. Cached hash-partitioned on dst at the session's shuffle
-    // partition count, the count the labels exchange gets, so no round
-    // re-shuffles the edges. (Par.pinned leaves a small edge set
-    // unpartitioned, and a pin to one partition plans as a single
-    // partition; either way every round re-shuffled the cached edges.)
-    // Round 1's job materializes the cache.
-    val edges = pairs.select(explode(array(
+    val (edges, nEdges) = Iterate.checkpoint(pairs.select(col("id_a"), col("id_b")), count(lit(1)))
+    // symmetrize via explode, not union: a self-union would read the
+    // edges twice
+    val sym = edges.select(explode(array(
           struct(col("id_a").as("src"), col("id_b").as("dst")),
           struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("dst"))
-      .cache()
+    val limit = seeds.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val integral = Seq(sym.schema("src"), seeds.schema("id"), seeds.schema("cluster"))
+      .forall(f => Set[DataType](ByteType, ShortType, IntegerType, LongType)(f.dataType))
+    try {
+      if (limit >= 0 && 16 * nEdges <= limit && integral)
+        localComponents(seeds, edges, sym.schema("src"), nEdges)
+      else fixpointComponents(seeds, sym, maxIters)
+    } finally Iterate.release(edges)
+  }
+
+  private val ccLog = org.slf4j.LoggerFactory.getLogger("graft.dedup.CC")
+
+  /** [[connectedComponentsFrom]]'s local path over the checkpointed
+    * `edges`; `idField` is the id field the fixpoint's edges carry, so
+    * both paths' unions widen the same way.
+    */
+  private def localComponents(seeds: DataFrame, edges: DataFrame, idField: StructField,
+      nEdges: Long): DataFrame = {
+    val t0 = System.nanoTime()
+    val spark = seeds.sparkSession
+    val ends = longPairs(edges) // a0, b0, a1, b1, …
+    val nodes = sortedDistinct(ends)
+    def index(id: Long) = java.util.Arrays.binarySearch(nodes, id)
+    // the seed labels of the endpoints, by a semi-join against the sorted
+    // ids broadcast by hand: a broadcast hash join would leave its 1 MB
+    // hash page held until the context cleaner runs, this is destroyed now
+    val read = if (nodes.isEmpty) Array.emptyLongArray else {
+      val ids = spark.sparkContext.broadcast(nodes)
+      val isEndpoint = udf((id: Long) => java.util.Arrays.binarySearch(ids.value, id) >= 0)
+      try longPairs(seeds.where(isEndpoint(col("id").cast(LongType))).select(col("id"), col("cluster")))
+      finally ids.destroy()
+    }
+    val seeded = new Array[Boolean](nodes.length)
+    val label = new Array[Long](nodes.length)
+    for (i <- read.indices by 2) {
+      val k = index(read(i))
+      label(k) = if (seeded(k)) math.min(label(k), read(i + 1)) else read(i + 1)
+      seeded(k) = true
+    }
+    // union-find over edges between seeds: the root with the smaller label
+    // stays root, so every root carries its component's minimum
+    val parent = Array.range(0, nodes.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    for (i <- ends.indices by 2) {
+      val (a, b) = (index(ends(i)), index(ends(i + 1)))
+      if (seeded(a) && seeded(b)) {
+        val (ra, rb) = (find(a), find(b))
+        if (label(ra) < label(rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    val changed = new java.util.ArrayList[Row]()
+    for (k <- nodes.indices if seeded(k) && label(find(k)) < label(k))
+      changed.add(Row(nodes(k), label(find(k))))
+    val patch = spark.createDataFrame(changed, StructType(Seq(
+        idField.copy(name = "id", dataType = LongType), StructField("cluster", LongType))))
+      .select(col("id").cast(idField.dataType).as("id"),
+        col("cluster").cast(seeds.schema("cluster").dataType).as("cluster"))
+    ccLog.info(f"CC local: edges=$nEdges, nodes=${nodes.length}, ${(System.nanoTime() - t0) / 1e9}%.2fs")
+    seeds.select(col("id"), col("cluster")).unionByName(patch)
+      .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
+      .where(col("cluster").isNotNull)
+  }
+
+  /** The two columns of every row of `df` with neither null, as longs
+    * flattened a0, b0, a1, b1, …, collected in one job without a boxed row.
+    */
+  private def longPairs(df: DataFrame): Array[Long] = {
+    val two = df.select(df.columns.map(c => col(c).cast(LongType)).toSeq: _*).na.drop()
+    Array.concat(two.queryExecution.toRdd.mapPartitions { rows =>
+      val out = Array.newBuilder[Long]
+      rows.foreach { r => out += r.getLong(0); out += r.getLong(1) }
+      Iterator.single(out.result())
+    }.collect().toSeq: _*)
+  }
+
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    val s = xs.clone()
+    java.util.Arrays.sort(s)
+    var n = 0
+    for (i <- s.indices if n == 0 || s(i) != s(n - 1)) { s(n) = s(i); n += 1 }
+    java.util.Arrays.copyOf(s, n)
+  }
+
+  /** [[connectedComponentsFrom]]'s fixpoint path over the symmetrized
+    * edges `sym` (src, dst).
+    */
+  private def fixpointComponents(seeds: DataFrame, sym: DataFrame, maxIters: Int): DataFrame = {
+    // cached hash-partitioned on dst at the session's shuffle partition
+    // count, the count the labels exchange gets, so no round re-shuffles
+    // the edges. (Par.pinned leaves a small edge set unpartitioned, and a
+    // pin to one partition plans as a single partition; either way every
+    // round re-shuffled the cached edges.) Round 1's job materializes the
+    // cache.
+    val edges = sym.repartition(col("dst")).cache()
     val noOld = lit(null).cast(seeds.schema("cluster").dataType)
     try {
-      graft.ops.Iterate.fixpoint(seeds.select(col("id"), col("cluster")),
-          org.slf4j.LoggerFactory.getLogger("graft.dedup.CC"), "CC",
+      Iterate.fixpoint(seeds.select(col("id"), col("cluster")), ccLog, "CC",
           "changed" -> count_if(col("chg")), maxIters,
           s"connectedComponents did not converge in $maxIters iterations") { state =>
         val labels = state.select(col("id"), col("cluster"))
@@ -424,6 +543,11 @@ object Dedup {
     * round. Identity (spec-proven):
     * CC(star(CC(E)) ∪ E_new) = CC(E ∪ E_new), so the output is exactly the
     * full-graph min-label clustering.
+    *
+    * The star plus the new edges is the edge list that picks the path: it
+    * is solved on the driver while 16 B × (labeled non-root nodes + new
+    * edges) ≤ `spark.sql.autoBroadcastJoinThreshold` (at the 10 MB default,
+    * ~655k edges), and by fixpoint rounds beyond that.
     *
     * @param labels existing (id, cluster) labeling — CC output
     * @param newNodes ids arriving in this batch (an `id` column)

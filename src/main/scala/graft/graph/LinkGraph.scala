@@ -21,7 +21,7 @@ import graft.ops.Iterate
   *     the big domains) is exactly the case AQE skew splitting + partial
   *     aggregation absorb.
   *   - The rounds run on [[graft.ops.Iterate.rounds]] (the loop
-  *     [[graft.dedup.Dedup.connectedComponents]] runs on too): each round's
+  *     [[graft.dedup.Dedup.connectedComponents]]' fixpoint runs on too): each round's
   *     ranks are checkpointed, so the plan doesn't grow by a join per round
   *     and stragglers can't replay the whole chain, and the round before is
   *     released.

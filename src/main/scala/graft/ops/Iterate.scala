@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.slf4j.Logger
 
 /** Shared round loop for iterative DataFrame algorithms: [[fixpoint]] runs
@@ -45,11 +46,9 @@ object Iterate {
       while (!converged && round < maxRounds) {
         val t0 = System.nanoTime()
         round += 1
-        val obs = Observation()
-        val next = step(state).observe(obs, metric._2.as("m")).localCheckpoint(true)
+        val (next, m) = checkpoint(step(state), metric._2)
         if (round > 1) release(state)
         state = next
-        val m = obs.get("m").asInstanceOf[Number].longValue
         converged = done(m)
         log.info(f"$name round $round: ${metric._1}=$m, ${(System.nanoTime() - t0) / 1e9}%.1fs")
       }
@@ -73,6 +72,17 @@ object Iterate {
       round += 1
       round == n
     }
+  }
+
+  /** Eagerly `localCheckpoint`s `df` and returns it with `agg` over its
+    * rows, taken by a `Dataset.observe` on the checkpoint job itself. The
+    * checkpoint's size estimate is capped, so it cannot compound across
+    * rounds.
+    */
+  def checkpoint(df: DataFrame, agg: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val out = df.observe(obs, agg.as("m")).localCheckpoint(true)
+    (GraftSqlBridge.capStats(out), obs.get("m").asInstanceOf[Number].longValue)
   }
 
   /** Drops the blocks of a frame made by `localCheckpoint`; reading it

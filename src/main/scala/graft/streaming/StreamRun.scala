@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** One run of one `Trigger.AvailableNow` stream of [[StreamingOps]]: the
   * run's root, its staging, its drain and its batchId-keyed state. The
@@ -32,7 +33,7 @@ private[streaming] final class StreamRun(spark: SparkSession, queryName: String)
     * partition 0's, even when it is empty.
     */
   def stage(df: DataFrame, nChunks: Int, key: Column): DataFrame =
-    stage { dir =>
+    stage(df.schema.add("__chunk", IntegerType)) { dir =>
       df.withColumn("__chunk", pmod(key, lit(nChunks))).repartition(nChunks, col("__chunk"))
         .write.partitionBy("__chunk").mode("overwrite").parquet(dir)
       // an empty frame has no bucket: stage it as one empty batch
@@ -40,11 +41,13 @@ private[streaming] final class StreamRun(spark: SparkSession, queryName: String)
         df.write.mode("overwrite").parquet(dir)
     }.drop("__chunk")
 
-  /** Streams back, one file per trigger, what `write` puts in [[staging]]. */
-  def stage(write: String => Unit): DataFrame = {
+  /** Streams back, one file per trigger, what `write` puts in [[staging]]
+    * as parquet of `schema`; the schema is given, so reading it back runs
+    * no job.
+    */
+  def stage(schema: StructType)(write: String => Unit): DataFrame = {
     write(staging)
-    spark.readStream.schema(spark.read.parquet(staging).schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging)
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(staging)
   }
 
   /** Runs `body` on each micro-batch of `stream` until its available input
@@ -77,6 +80,15 @@ private[streaming] final class StreamRun(spark: SparkSession, queryName: String)
 
   private def path(name: String, batchId: Long) = s"$root/$name/batch=$batchId"
 
+  /** The schema [[Batch.write]] last wrote under each name. */
+  private val written = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** One batch's output under `name`, read with the schema it was written
+    * with, so no schema-inference job runs.
+    */
+  private def read(session: SparkSession, name: String, batchId: Long): DataFrame =
+    session.read.schema(written.get(name)).parquet(path(name, batchId))
+
   /** Every batch's output under `name`, with its batch id in column `batch`. */
   def byBatch(name: String): DataFrame = spark.read.parquet(s"$root/$name")
 
@@ -84,16 +96,18 @@ private[streaming] final class StreamRun(spark: SparkSession, queryName: String)
   def all(name: String): DataFrame = byBatch(name).drop("batch")
 
   /** The output of the last batch that wrote under `name`. */
-  def last(name: String): DataFrame = spark.read.parquet(path(name,
-    new java.io.File(s"$root/$name").list().map(_.stripPrefix("batch=").toLong).max))
+  def last(name: String): DataFrame = read(spark, name,
+    new java.io.File(s"$root/$name").list().map(_.stripPrefix("batch=").toLong).max)
 
   /** One micro-batch: its rows, its id, and the run's state read in the
     * batch's own session.
     */
   final class Batch private[StreamRun] (val df: DataFrame, val id: Long) {
     /** Overwrites this batch's output under `name`. */
-    def write(name: String, out: DataFrame): Unit =
+    def write(name: String, out: DataFrame): Unit = {
       out.write.mode("overwrite").parquet(path(name, id))
+      written.put(name, out.schema)
+    }
 
     /** Every output written under `name` so far. */
     def all(name: String): DataFrame =
@@ -101,7 +115,7 @@ private[streaming] final class StreamRun(spark: SparkSession, queryName: String)
 
     /** The previous batch's output under `name`, if it wrote one. */
     def previous(name: String): Option[DataFrame] =
-      Some(path(name, id - 1)).filter(p => id > 0 && new java.io.File(p).exists)
-        .map(df.sparkSession.read.parquet(_))
+      Some(id - 1).filter(prev => id > 0 && new java.io.File(path(name, prev)).exists)
+        .map(read(df.sparkSession, name, _))
   }
 }

@@ -510,8 +510,10 @@ object StreamingOps {
     *      touching-pairs over batches is exactly the full pair set;
     *   2. `incrementalComponents` folds the previous labels in as label
     *      STARS plus the new touching edges — propagation rounds pay for
-    *      NEW connectivity only, the CC(star(CC(E)) ∪ E′) = CC(E ∪ E′)
-    *      identity makes every snapshot exact;
+    *      NEW connectivity only (and while the stars plus the edges fit
+    *      the broadcast threshold, union-find on the driver runs instead),
+    *      the CC(star(CC(E)) ∪ E′) = CC(E ∪ E′) identity makes every
+    *      snapshot exact;
     *   3. the label snapshot is written under the batch's id, and the
     *      next batch reads it as its previous snapshot.
     *
@@ -856,7 +858,7 @@ object StreamingOps {
     val ev = graft.sources.Tables.load(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
     val run = new StreamRun(spark, queryName)
-    run.drain(run.stage(stageTimeOrderedChunks(ev, nChunks))) { batch =>
+    run.drain(run.stage(ev.schema)(stageTimeOrderedChunks(ev, nChunks))) { batch =>
       val b = run.hold(batch.df)
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val internal = b
@@ -960,7 +962,7 @@ object StreamingOps {
     val K = steps.length
     val tCols = (1 to K).map(k => s"t$k")
     val run = new StreamRun(spark, queryName)
-    run.drain(run.stage(stageTimeOrderedChunks(ev, nChunks))) { batch =>
+    run.drain(run.stage(ev.schema)(stageTimeOrderedChunks(ev, nChunks))) { batch =>
       val sp = batch.df.sparkSession
       val b = run.hold(batch.df)
       val prev = batch.previous("state").getOrElse(

@@ -217,9 +217,10 @@ class DedupSpec extends SparkTestBase {
     val n = 12
     val nodes = (0L until n.toLong).toDF("id")
     val pairs = (0 until n - 1).map(i => (i.toLong, (i + 1).toLong)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(nodes, pairs)
-      .collect().map(_.getAs[Long]("cluster")).distinct
+    val (cc, log) = logged("graft.dedup.CC")(fixpointOnly(Dedup.connectedComponents(nodes, pairs)
+      .collect().map(_.getAs[Long]("cluster")).distinct))
     assert(cc.toSeq == Seq(0L))
+    assert(log.count(_.startsWith("CC round ")) > 1, log)
   }
 
   test("incrementalComponents == full recompute; merges, bridges, new singletons") {
@@ -323,23 +324,87 @@ class DedupSpec extends SparkTestBase {
     assert(ccMap(seeded) == unionFind(nodes, edges))
   }
 
+  /** Runs `body` with driver-side CC turned off, so CC runs its rounds. */
+  private def fixpointOnly[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body finally spark.conf.set(key, old)
+  }
+
+  /** Rows (sorted by id) and schema of a CC result. */
+  private def ccRows(df: DataFrame) =
+    (df.collect().toSeq.sortBy(_.getAs[Number]("id").longValue), df.schema)
+
+  test("property: the driver and the fixpoint path return identical rows and schema, both union-find's") {
+    for (seed <- 1L to 6L; asInt <- Seq(false, true)) {
+      val rnd = new scala.util.Random(seed)
+      val (nodes, inside) = randomGraph(seed)
+      // edges to ids that are no seed, also between two such ids
+      val outside = Seq.fill(10)((nodes(rnd.nextInt(nodes.size)), 5000L + rnd.nextInt(5)))
+        .map(p => if (rnd.nextBoolean()) p else p.swap) :+ ((5000L, 5001L))
+      // even seeds start from an earlier clustering of half the edges,
+      // with a duplicate id → id row for some ids; every third runs on an
+      // empty edge set
+      val earlierEdges = if (seed % 2 == 0) rnd.shuffle(inside).take(inside.size / 2) else Seq.empty
+      val seedRows = unionFind(nodes, earlierEdges).toSeq ++ nodes.take(20).map(n => n -> n)
+      val edges = if (seed % 3 == 0) Seq.empty else rnd.shuffle(inside ++ outside)
+      def frame(rows: Seq[(Long, Long)], a: String, b: String) =
+        if (asInt) rows.map { case (x, y) => (x.toInt, y.toInt) }.toDF(a, b) else rows.toDF(a, b)
+      def cc = Dedup.connectedComponentsFrom(frame(seedRows, "id", "cluster"),
+        frame(edges, "id_a", "id_b"), Rounds)
+      val (local, localLog) = logged("graft.dedup.CC")(ccRows(cc))
+      val (rounds, roundsLog) = logged("graft.dedup.CC")(fixpointOnly(ccRows(cc)))
+      val what = s"seed $seed, int ids $asInt"
+      assert(localLog.size == 1 && localLog.head.startsWith("CC local: "), what)
+      assert(roundsLog.nonEmpty && roundsLog.forall(_.startsWith("CC round ")), what)
+      assert(local == rounds, what)
+      assert(local._1.map(r => r.getAs[Number]("id").longValue -> r.getAs[Number]("cluster").longValue).toMap ==
+        unionFind(nodes, earlierEdges ++ edges.filterNot(outside.contains)), what)
+      assert(local._1.size == nodes.size, what)
+    }
+  }
+
   test("connectedComponents: running out of maxIters throws; nothing but the result stays held") {
     val chain = (0L until 40L).map(i => (i, i + 1))
     val nodes = (0L to 40L).toDF("id")
-    // a multi-round run caches the edges and checkpoints every round; only
-    // the returned labels' checkpoint may remain afterwards, also after a
-    // failed run
-    val ((out, cached), held) = rddsHeldAfter(rddsCachedDuring {
+    // a multi-round run checkpoints the edge list, caches the edges and
+    // checkpoints every round; only the returned labels' checkpoint may
+    // remain afterwards, also after a failed run
+    val ((out, cached), held) = fixpointOnly(rddsHeldAfter(rddsCachedDuring {
       val e = intercept[IllegalArgumentException] {
         Dedup.connectedComponents(nodes, chain.toDF("id_a", "id_b"), maxIters = 2)
       }
       assert(e.getMessage == "requirement failed: connectedComponents did not converge in 2 iterations")
       Dedup.connectedComponents(nodes, chain.toDF("id_a", "id_b"))
-    })
+    }))
     assert(cached >= 6, s"expected the edges and several rounds cached, saw $cached")
     assert(checkpointRdds(out).size == 1)
     assert(held == checkpointRdds(out))
     assert(out.select("cluster").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
+  }
+
+  test("connectedComponents on the driver: maxIters does not apply; nothing stays held") {
+    val chain = (0L until 40L).map(i => (i, i + 1))
+    val nodes = (0L to 40L).toDF("id")
+    // the edge list's checkpoint is the one block written, and it is
+    // released before the lazy result returns
+    val (((out, log), cached), held) = rddsHeldAfter(rddsCachedDuring(logged("graft.dedup.CC")(
+      Dedup.connectedComponents(nodes, chain.toDF("id_a", "id_b"), maxIters = 2))))
+    assert(log.size == 1 && log.head.startsWith("CC local: edges=40, nodes=41, "), log)
+    assert(cached == 1)
+    assert(held.isEmpty && checkpointRdds(out).isEmpty)
+    assert(out.select("cluster").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
+  }
+
+  test("a small-graph connectedComponents runs at most 3 jobs") {
+    val nodes = (0L to 6L).toDF("id")
+    val pairs = Seq((0L, 1L), (1L, 2L), (3L, 4L)).toDF("id_a", "id_b")
+    // the edge list's checkpoint, its collect and the seed labels'
+    // collect; the lazy result runs its own jobs when read
+    val (cc, work) = jobsDuring(Dedup.connectedComponents(nodes, pairs))
+    assert(work.jobs <= 3, work)
+    assert(ccMap(cc) == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 3L, 5L -> 5L, 6L -> 6L))
   }
 
   /** Corpus with a hot bucket (24 identical boilerplate docs share every

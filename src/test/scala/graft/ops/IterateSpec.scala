@@ -36,6 +36,19 @@ class IterateSpec extends SparkTestBase {
     assert(init.count() == 50)
   }
 
+  test("a state that joins itself every round keeps a size estimate within a long") {
+    val log = org.slf4j.LoggerFactory.getLogger("graft.ops.IterateSpec")
+    // a join's estimate is the product of its sides': uncapped, 12 rounds
+    // would leave an estimate of thousands of digits
+    val out = Iterate.rounds((0L until 50L).toDF("x"), log, "square", 12) { s =>
+      s.join(s.select(col("x").as("y")), col("x") === col("y")).select(col("x"))
+    }
+    try {
+      assert(out.queryExecution.optimizedPlan.stats.sizeInBytes <= Long.MaxValue)
+      assert(out.count() == 50)
+    } finally Iterate.release(out)
+  }
+
   test("rounds: fewer than one round is refused") {
     val log = org.slf4j.LoggerFactory.getLogger("graft.ops.IterateSpec")
     val e = intercept[IllegalArgumentException] {
