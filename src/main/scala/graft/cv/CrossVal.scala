@@ -21,8 +21,9 @@ import graft.ops.FanOut
   * driver-thread fan-out, and the cluster scheduler does the real
   * parallelism. Positional index arrays become predicate-filtered
   * DataFrames; out-of-fold reassembly (`application.py:142-157` argsort)
-  * becomes a `fold`-tagged union — callers who need original order carry
-  * their own `row_id`.
+  * becomes the `fold`-tagged union of [[PanelSplit.foldRows]], the one place
+  * a fold becomes rows — callers who need original order carry their own
+  * `row_id`.
   */
 object CrossVal {
 
@@ -64,9 +65,10 @@ object CrossVal {
   }
 
   /** Out-of-fold prediction: each fold's model transforms exactly that fold's
-    * `returnGroup` ("test" | "train") rows; results union with a `fold`
-    * column. A row landing in several folds' groups (overlapping trains) is
-    * predicted once per fold, as in the reference (`application.py:228-297`).
+    * `returnGroup` ("test" | "train") rows; [[PanelSplit.foldRows]] unions
+    * the results with a `fold` column. A row landing in several folds'
+    * groups (overlapping trains) is predicted once per fold, as in the
+    * reference (`application.py:228-297`).
     */
   def crossValPredict(
       models: Seq[Transformer],
@@ -75,17 +77,8 @@ object CrossVal {
       returnGroup: String = "test"): DataFrame = {
     require(models.size == cv.nSplits,
       s"models (${models.size}) must match folds (${cv.nSplits})")
-    require(returnGroup == "test" || returnGroup == "train",
-      s"returnGroup must be 'test' or 'train', got $returnGroup")
-
-    val parts: Seq[DataFrame] = cv.folds.zip(models).map { case (f, m) =>
-      val pred =
-        if (returnGroup == "test") f.testPredicate(cv.periodsCol, cv.snapshotCol)
-        else f.trainPredicate(cv.periodsCol, cv.snapshotCol)
-      m.transform(df.filter(pred)).withColumn("fold", lit(f.index))
-    }
-    parts.reduceOption(_ unionByName _)
-      .getOrElse(df.sparkSession.emptyDataFrame)
+    val model = cv.folds.zip(models).toMap
+    cv.foldRows(df, returnGroup, (f, rows) => model(f).transform(rows))
   }
 
   def crossValFitPredict(
@@ -106,9 +99,7 @@ object CrossVal {
     * `np.unique(np.concatenate([...]))`). One scan, sorted for determinism.
     */
   def classesUnion(df: DataFrame, cv: PanelSplit, labelCol: String): Seq[Any] = {
-    val pred = cv.folds.map(_.trainPredicate(cv.periodsCol, cv.snapshotCol))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    df.filter(pred).select(col(labelCol)).na.drop().distinct()
+    cv.genTrainLabels(df).select(col(labelCol)).na.drop().distinct()
       .orderBy(col(labelCol)).collect().map(_.get(0)).toSeq
   }
 }

@@ -95,9 +95,7 @@ private[cv] object FoldMoments {
       perFold: PeriodFold => Transformer): Option[Seq[Transformer]] = {
     val keys = col(cv.periodsCol) +: cv.snapshotCol.map(col).toSeq
     val at = keys.size
-    val anyTrain = cv.folds.map(_.trainPredicate(cv.periodsCol, cv.snapshotCol))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val train = nonNull.foldLeft(df.filter(anyTrain))((d, c) => d.filter(col(c).isNotNull))
+    val train = nonNull.foldLeft(cv.genTrainLabels(df))((d, c) => d.filter(col(c).isNotNull))
     val groups = train.select(keys ++ step.columns: _*).rdd
       .treeAggregate(mutable.HashMap.empty[(Any, Any), M])(
         (acc, row) => {

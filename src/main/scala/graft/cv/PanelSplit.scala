@@ -1,7 +1,10 @@
 package graft.cv
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** One cross-validation fold expressed in *period space*: the sets of period
   * values whose rows belong to the train / test side, plus the resolved
@@ -80,6 +83,47 @@ final class PanelSplit private (
   def genTestLabels(df: DataFrame): DataFrame =
     genLabels(df, _.testPredicate(periodsCol, snapshotCol))
 
+  /** The union, by name, of every fold's `group` ("test" or "train") rows:
+    * each fold's rows are mapped by `perFold` (for example through that
+    * fold's model), then tagged with the fold's index in `fold` by
+    * `withColumn`, which replaces a `fold` column the rows already have. A
+    * row in several folds' groups appears once per fold; out-of-fold
+    * reassembly (`application.py:142-157,228-297`) is this union. No folds
+    * give an empty frame.
+    */
+  def foldRows(
+      df: DataFrame,
+      group: String = "test",
+      perFold: (PeriodFold, DataFrame) => DataFrame = (_, rows) => rows): DataFrame = {
+    require(group == "test" || group == "train", s"group must be 'test' or 'train', got $group")
+    folds.map { f =>
+      val pred =
+        if (group == "test") f.testPredicate(periodsCol, snapshotCol)
+        else f.trainPredicate(periodsCol, snapshotCol)
+      perFold(f, df.filter(pred)).withColumn("fold", lit(f.index))
+    }.reduceOption(_ unionByName _).getOrElse(df.sparkSession.emptyDataFrame)
+  }
+
+  /** `df` joined on its period to a broadcast fold-membership table of
+    * `entries` (period, fold index named `foldCol`, then `fields`), keeping a
+    * fold's rows only where the snapshot column equals that fold's snapshot.
+    * The join adds no shuffle: the table is tiny (periods × folds).
+    */
+  private def joinMembership(
+      df: DataFrame, foldCol: String, fields: Seq[StructField], entries: Seq[Row]): DataFrame = {
+    val schema = StructType(StructField("__m_period", df.schema(periodsCol).dataType) +:
+      StructField(foldCol, IntegerType, nullable = false) +: fields)
+    val membership = df.sparkSession.createDataFrame(entries.asJava, schema)
+    val joined = df.join(broadcast(membership), col(periodsCol) === col("__m_period"), "inner")
+      .drop("__m_period")
+    snapshotCol.fold(joined) { sc =>
+      joined.filter(folds.map { f =>
+        val inFold = col(foldCol) === f.index
+        f.snapshot.fold(inFold)(sv => inFold && col(sc) === lit(sv))
+      }.reduceOption(_ || _).getOrElse(lit(true)))
+    }
+  }
+
   /** Fold expansion: every fold's (train ∪ test) rows tagged with `split` and
     * `snapshot_period` — rows deliberately duplicate across folds
     * (`cross_validation.py:355-428`).
@@ -95,7 +139,6 @@ final class PanelSplit private (
     * over the fold spec), computed from the tiny distinct-period set of `df`.
     */
   def genSnapshots(df: DataFrame, periodCol: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
     val pc = periodCol.getOrElse(periodsCol)
     // distinct (fold-period, snapshot-period, snapshot-filter value) triples
     // actually present — tiny. The third element carries the snapshot column
@@ -107,8 +150,7 @@ final class PanelSplit private (
       df.select(col(periodsCol), col(pc), snapExpr).distinct().collect()
         .map(r => (r.get(0), r.get(1), r.get(2))).toSeq
 
-    import scala.jdk.CollectionConverters._
-    val rows = folds.flatMap { f =>
+    val entries = folds.flatMap { f =>
       val foldPeriods = (f.trainPeriods ++ f.testPeriods).distinct
       val present = presentTriples.filter { case (p, _, s) =>
         foldPeriods.contains(p) && ((snapshotCol, f.snapshot) match {
@@ -119,33 +161,10 @@ final class PanelSplit private (
       if (present.isEmpty) Nil
       else {
         val last = present.map(_._2).max(PanelSplit.anyOrdering)
-        foldPeriods.map(p => org.apache.spark.sql.Row(p, f.index, last))
+        foldPeriods.map(p => Row(p, f.index, last))
       }
     }
-    val periodType = df.schema(periodsCol).dataType
-    val pcType = df.schema(pc).dataType
-    val memSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__ps_period", periodType),
-      org.apache.spark.sql.types.StructField("split", org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("snapshot_period", pcType)))
-    val membership = spark.createDataFrame(rows.asJava, memSchema)
-
-    val joined = df.join(
-      broadcast(membership),
-      col(periodsCol) === col("__ps_period"),
-      "inner").drop("__ps_period")
-    snapshotCol match {
-      case Some(sc) =>
-        // snapshot equality must hold per fold
-        val keep = folds.map { f =>
-          f.snapshot match {
-            case Some(sv) => col("split") === f.index && col(sc) === lit(sv)
-            case None     => col("split") === f.index
-          }
-        }.reduceOption(_ || _).getOrElse(lit(true))
-        joined.filter(keep)
-      case None => joined
-    }
+    joinMembership(df, "split", Seq(StructField("snapshot_period", df.schema(pc).dataType)), entries)
   }
 
   /** Intended semantics of the reference's `drop_splits`
@@ -205,36 +224,15 @@ final class PanelSplit private (
     }.toMap
   }
 
-  /** Same counts via a broadcast (period → fold, side, snapshot) membership
-    * join and a single constant-width aggregation — scales to any fold
-    * count. Sides missing from the result are genuinely empty.
+  /** Same counts via the broadcast (period → fold, side) membership join
+    * and a single constant-width aggregation — scales to any fold count.
+    * Sides missing from the result are genuinely empty.
     */
   private[cv] def dropSplitCountsExploded(df: DataFrame, yCol: String): Map[(Int, String), (Long, Long)] = {
-    val spark = df.sparkSession
-    import scala.jdk.CollectionConverters._
-    val periodType = df.schema(periodsCol).dataType
-    val rows = folds.flatMap { f =>
-      f.trainPeriods.map(p => org.apache.spark.sql.Row(p, f.index, "train")) ++
-        f.testPeriods.map(p => org.apache.spark.sql.Row(p, f.index, "test"))
+    val entries = folds.flatMap { f =>
+      f.trainPeriods.map(p => Row(p, f.index, "train")) ++ f.testPeriods.map(p => Row(p, f.index, "test"))
     }
-    val memSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__ds_period", periodType),
-      org.apache.spark.sql.types.StructField("__ds_fold", org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("__ds_side", org.apache.spark.sql.types.StringType, nullable = false)))
-    val membership = spark.createDataFrame(rows.asJava, memSchema)
-    // per-fold snapshot equality must still hold where configured
-    val snapKeep: Column = snapshotCol match {
-      case Some(sc) =>
-        folds.map { f =>
-          f.snapshot match {
-            case Some(sv) => col("__ds_fold") === f.index && col(sc) === lit(sv)
-            case None     => col("__ds_fold") === f.index
-          }
-        }.reduceOption(_ || _).getOrElse(lit(true))
-      case None => lit(true)
-    }
-    df.join(broadcast(membership), col(periodsCol) === col("__ds_period"), "inner")
-      .filter(snapKeep)
+    joinMembership(df, "__ds_fold", Seq(StructField("__ds_side", StringType, nullable = false)), entries)
       .groupBy(col("__ds_fold"), col("__ds_side"))
       .agg(
         count(lit(1)).as("__n"),

@@ -750,10 +750,16 @@ object Metrics {
       predictionCol: String = "prediction",
       foldCol: String = "fold"): DataFrame = {
     val (spec, sign) = resolve(scorer)
-    preds.groupBy(col(foldCol))
-      .agg((spec.agg(col(labelCol).cast("double"), col(predictionCol).cast("double")) * sign).as("score"))
-      .coalesce(1).sortWithinPartitions(col(foldCol)) // one row per fold: no range sort needed
+    byFold(preds, foldCol,
+      (spec.agg(col(labelCol).cast("double"), col(predictionCol).cast("double")) * sign).as("score"))
   }
+
+  /** `aggs` per fold, one row per fold in fold order. The rows are few, so
+    * one partition sorted locally replaces a range sort: two jobs.
+    */
+  private[metrics] def byFold(preds: DataFrame, foldCol: String, aggs: Column*): DataFrame =
+    preds.groupBy(col(foldCol)).agg(aggs.head, aggs.tail: _*)
+      .coalesce(1).sortWithinPartitions(col(foldCol))
 
   // ---- sample-weighted metrics ------------------------------------------
 
@@ -840,10 +846,8 @@ object Metrics {
       foldCol: String = "fold"): DataFrame = {
     val (spec, sign) = resolve(scorer)
     val agg0 = weightedAgg(spec.name)
-    preds.groupBy(col(foldCol))
-      .agg((agg0(col(labelCol).cast("double"), col(predictionCol).cast("double"),
-        col(weightCol).cast("double")) * sign).as("score"))
-      .orderBy(col(foldCol))
+    byFold(preds, foldCol, (agg0(col(labelCol).cast("double"), col(predictionCol).cast("double"),
+      col(weightCol).cast("double")) * sign).as("score"))
   }
 
   /** Per-fold scores of an explicit (possibly user-supplied) [[MetricSpec]]
@@ -855,9 +859,7 @@ object Metrics {
       labelCol: String = "label",
       predictionCol: String = "prediction",
       foldCol: String = "fold"): DataFrame =
-    preds.groupBy(col(foldCol))
-      .agg(spec.agg(col(labelCol).cast("double"), col(predictionCol).cast("double")).as("score"))
-      .orderBy(col(foldCol))
+    byFold(preds, foldCol, spec.agg(col(labelCol).cast("double"), col(predictionCol).cast("double")).as("score"))
 
   /** Driver-side convenience: fold-ordered score vector. */
   def perFoldScoreSeq(

@@ -77,11 +77,8 @@ final case class Scorer(
   /** Per-fold scores, fold-ordered; single-element when the pipeline's last
     * step has no CV (`metrics.py:352-398`).
     */
-  def score(pipeline: SequentialCVPipeline, df: DataFrame, labelCol: String): Seq[Double] = {
-    val out0 = pipeline.transform(df)
-    val hasCv = pipeline.lastCv.isDefined
-    scoreTransformed(if (hasCv) out0 else out0.withColumn("fold", lit(0)), labelCol)
-  }
+  def score(pipeline: SequentialCVPipeline, df: DataFrame, labelCol: String): Seq[Double] =
+    scoreTransformed(pipeline.scoringFrame(pipeline.transform(df)), labelCol)
 
   /** Score an already-transformed, fold-tagged frame — the cached-response
     * path (reference `metrics.py:173-194`): the per-fold pipeline is not
@@ -246,9 +243,8 @@ object Scorers {
   /** Per-fold scores of every scorer on one frame tagged with an integer
     * `fold` (the frame [[Scorer.scoreTransformed]] takes). All plain aggregate scorers — a
     * registry metric without a dedicated path or a custom MetricSpec, with
-    * no pos_label — are computed in ONE `groupBy(fold).agg(…)` whose rows
-    * are sorted by fold on the driver, so m metrics cost one job set, not
-    * m. The others (rank, averaged, clustering, top-k, d2, pos_label) run
+    * no pos_label — are computed in ONE per-fold aggregation, on the plan
+    * of [[Metrics.perFoldScores]], so m metrics cost one job set, not m. The others (rank, averaged, clustering, top-k, d2, pos_label) run
     * their own path. The frame is persisted only while more than one of
     * these passes reads it.
     */
@@ -261,8 +257,7 @@ object Scorers {
     try {
       val fused = if (plain.isEmpty) Map.empty[String, Seq[Double]] else {
         val cols = plain.zipWithIndex.map { case ((_, _, agg), i) => agg.get.as(s"score$i") }
-        val rows = out.groupBy(col("fold")).agg(cols.head, cols.tail: _*).collect()
-          .sortBy(_.getAs[Number](0).longValue)
+        val rows = Metrics.byFold(out, "fold", cols: _*).collect()
         plain.zipWithIndex.map { case ((name, sc, _), i) =>
           name -> rows.map(_.getDouble(i + 1) * sc.sign).toSeq
         }.toMap

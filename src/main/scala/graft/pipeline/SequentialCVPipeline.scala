@@ -27,7 +27,11 @@ final case class FittedPerFold(cv: PanelSplit, models: Seq[(PeriodFold, Transfor
   *  - sklearn's dynamic method injection (`pipeline.py:368-397`) becomes
   *    plain methods (`transform`, `score`);
   *  - rows outside every fold's returnGroup side simply drop out of the
-  *    emitted frame (same visible semantics as the reference's index union).
+  *    emitted frame (same visible semantics as the reference's index union);
+  *  - each CV step's out-of-fold output is [[CrossVal.crossValPredict]],
+  *    the union [[PanelSplit.foldRows]] builds, so it carries that step's
+  *    `fold` column, replacing any `fold` column its input had; the emitted
+  *    `fold` is the last CV step's.
   *
   * @param steps       (name, estimator) pairs; estimator may be null for
   *                    "passthrough" (reference `pipeline.py:686-719`)
@@ -54,21 +58,16 @@ final class SequentialCVPipeline(
   /** Fit all steps sequentially; step i+1 sees step i's (out-of-fold, for CV
     * steps) output (`pipeline.py:686-719`).
     */
-  def fit(df: DataFrame): this.type = { fitOutput(df); this }
+  def fit(df: DataFrame): this.type = { fitTransform(df); this }
 
   /** Fit, and return what `transform(df)` would return, taken from the
     * out-of-fold frame the fit already built rather than from a second pass
-    * through the fitted steps.
-    */
-  def fitTransform(df: DataFrame): DataFrame = withFoldCol(fitOutput(df))
-
-  /** Fit every step and return the last step's output, still carrying the
-    * internal `__fold` marker. Each CV step's out-of-fold output is
+    * through the fitted steps. Each CV step's out-of-fold output is
     * persisted while a later step fits on it, so that step's fit reads it
-    * instead of recomputing it; all of them are released once the
-    * last step is fitted. The returned frame itself is not persisted.
+    * instead of recomputing it; all of them are released once the last step
+    * is fitted. The returned frame itself is not persisted.
     */
-  private[graft] def fitOutput(df: DataFrame): DataFrame = {
+  def fitTransform(df: DataFrame): DataFrame = {
     val lastEstimator = steps.lastIndexWhere(_._2 != null)
     var current = df
     val held = Vector.newBuilder[DataFrame]
@@ -84,9 +83,9 @@ final class SequentialCVPipeline(
             current = model.transform(current)
           case Some(cv) =>
             // no label filter: a pipeline step fits on every train row
-            val foldModels = cv.folds.zip(CrossVal.crossValFit(est, current, cv, labelCol = ""))
-            acc += name -> Some(FittedPerFold(cv, foldModels))
-            current = applyPerFold(cv, foldModels, current)
+            val models = CrossVal.crossValFit(est, current, cv, labelCol = "")
+            acc += name -> Some(FittedPerFold(cv, cv.folds.zip(models)))
+            current = CrossVal.crossValPredict(models, current, cv, returnGroup)
             if (i < lastEstimator && current.storageLevel == StorageLevel.NONE)
               held += current.persist()
         })
@@ -96,26 +95,8 @@ final class SequentialCVPipeline(
     current
   }
 
-  /** Out-of-fold application: each fold's model transforms that fold's
-    * returnGroup rows; results union with a `__fold` marker dropped at the
-    * end (rows keep their identity columns).
-    */
-  private def applyPerFold(
-      cv: PanelSplit,
-      foldModels: Seq[(PeriodFold, Transformer)],
-      df: DataFrame): DataFrame = {
-    val parts = foldModels.map { case (f, m) =>
-      val pred =
-        if (returnGroup == "test") f.testPredicate(cv.periodsCol, cv.snapshotCol)
-        else f.trainPredicate(cv.periodsCol, cv.snapshotCol)
-      m.transform(df.filter(pred)).withColumn("__fold", lit(f.index))
-    }
-    parts.reduce(_ unionByName _)
-  }
-
-  /** Apply fitted steps to (possibly new) data. The final CV step's output
-    * keeps the `__fold` column as `fold` for per-fold scoring; intermediate
-    * `__fold` markers are dropped before the next step.
+  /** Apply fitted steps to (possibly new) data; the output's `fold` is the
+    * last CV step's, for per-fold scoring.
     */
   def transform(df: DataFrame): DataFrame = {
     var current = df
@@ -124,16 +105,14 @@ final class SequentialCVPipeline(
         case FittedWhole(m) =>
           current = m.transform(current)
         case FittedPerFold(cv, models) =>
-          // a later CV step's marker overwrites an earlier one (withColumn
-          // replaces) — `fold` always reflects the LAST CV step, matching
-          // the reference's cv_steps[-1] scoring alignment (metrics.py:82-99)
-          current = applyPerFold(cv, models, current)
+          // a later CV step's `fold` replaces an earlier one — it always
+          // reflects the LAST CV step, matching the reference's cv_steps[-1]
+          // scoring alignment (metrics.py:82-99)
+          current = CrossVal.crossValPredict(models.map(_._2), current, cv, returnGroup)
       }
     }
-    withFoldCol(current)
+    current
   }
-
-  private def withFoldCol(out: DataFrame): DataFrame = out.withColumnRenamed("__fold", "fold")
 
   def predict(df: DataFrame): DataFrame = transform(df)
 
@@ -145,16 +124,15 @@ final class SequentialCVPipeline(
       df: DataFrame,
       scorer: String,
       labelCol: String,
-      predictionCol: String = "prediction"): Seq[Double] = {
-    val out = transform(df)
-    if (lastCv.isDefined)
-      Metrics.perFoldScoreSeq(out, scorer, labelCol, predictionCol)
-    else {
-      val (spec, sign) = Metrics.resolve(scorer)
-      Seq(out.agg((spec.agg(col(labelCol).cast("double"), col(predictionCol).cast("double")) * sign)
-        .as("score")).head().getDouble(0))
-    }
-  }
+      predictionCol: String = "prediction"): Seq[Double] =
+    Metrics.perFoldScoreSeq(scoringFrame(transform(df)), scorer, labelCol, predictionCol)
+
+  /** `out` as scorers read it: its `fold` is the last CV step's, and when
+    * the last step has no CV every row is in one fold 0
+    * (`metrics.py:352-398`).
+    */
+  private[graft] def scoringFrame(out: DataFrame): DataFrame =
+    if (lastCv.isDefined) out else out.withColumn("fold", lit(0))
 
   /** Step access by index or name (`pipe[i]` / `named_steps`,
     * `pipeline.py:454-467,997-1018`).
@@ -216,23 +194,13 @@ final class SequentialCVPipeline(
 }
 
 object SequentialCVPipeline {
-  /** Load a pipeline persisted with [[SequentialCVPipeline.save]]. Accepts
-    * the versioned directory format; single-file paths from the legacy
-    * whole-object Java serialization still load for back-compat.
+  /** Load a pipeline persisted with [[SequentialCVPipeline.save]]: the
+    * versioned directory (`manifest.json` plus one `step<i>` directory per
+    * step).
     */
   def load(path: String): SequentialCVPipeline = {
-    val f = new java.io.File(path)
-    if (f.isDirectory) PipelinePersistence.load(path)
-    else { // legacy format (round-1 saves)
-      val ois = new java.io.ObjectInputStream(new java.io.FileInputStream(path))
-      try {
-        val (steps, cvSteps, returnGroup, fitted) = ois.readObject()
-          .asInstanceOf[(Seq[(String, Estimator[_ <: Model[_]])], Seq[Option[graft.cv.PanelSplit]],
-            String, Option[Seq[(String, Option[FittedStep])]])]
-        val pipe = new SequentialCVPipeline(steps, cvSteps, returnGroup)
-        fitted.foreach(s => pipe.restoreFitted(s))
-        pipe
-      } finally ois.close()
-    }
+    require(new java.io.File(path).isDirectory,
+      s"$path is not a pipeline directory (manifest.json plus step<i>/ directories, as save writes)")
+    PipelinePersistence.load(path)
   }
 }

@@ -101,11 +101,8 @@ object MetricQueries extends QueryPack {
   private def aucScores(spark: SparkSession, dir: String): DataFrame = {
     val df = events(spark, dir)
       .withColumn("label", (col("event_id") % 2).cast("double"))
-    val ps = panelSplit(df)
     // fold membership for test rows only, tagged
-    val folds = ps.folds.map { f =>
-      df.filter(f.testPredicate(ps.periodsCol, None)).withColumn("fold", lit(f.index))
-    }.reduce(_ unionByName _)
+    val folds = panelSplit(df).foldRows(df)
     Metrics.rocAuc(folds, "label", "value")
       .select(col("fold"), round(col("score"), 6).as("score"))
   }
@@ -143,10 +140,7 @@ object MetricQueries extends QueryPack {
       .withColumn("label", pmod(col("event_id"), lit(3)))
       .withColumn("scores", array((0 until 3).map(c =>
         lit(1.0) / (lit(1.0) + abs(col("value") / 30.0 - c))): _*))
-    val ps = panelSplit(df)
-    val folds = ps.folds.map { f =>
-      df.filter(f.testPredicate(ps.periodsCol, None)).withColumn("fold", lit(f.index))
-    }.reduce(_ unionByName _).cache()
+    val folds = panelSplit(df).foldRows(df).cache()
     val parts = Seq(
       ("roc_auc_ovr", Metrics.rocAucOvr(folds, "label", "scores", weighted = false)),
       ("roc_auc_ovr_weighted", Metrics.rocAucOvr(folds, "label", "scores", weighted = true)),

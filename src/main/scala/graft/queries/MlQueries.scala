@@ -57,10 +57,7 @@ object MlQueries extends QueryPack {
     val df = events(spark, dir)
       .withColumn("label", pmod(col("event_id"), lit(3)))
       .withColumn("cluster", floor(col("value") / 25.0).cast("long"))
-    val ps = panelSplit(df)
-    val folds = ps.folds.map { f =>
-      df.filter(f.testPredicate(ps.periodsCol, None)).withColumn("fold", lit(f.index))
-    }.reduce(_ unionByName _).cache()
+    val folds = panelSplit(df).foldRows(df).cache()
     val ari = Metrics.adjustedRandIndex(folds, "label", "cluster")
       .select(col("fold"), lit("adjusted_rand").as("metric"), round(col("score"), 6).as("score"))
     val nmi = Metrics.normalizedMutualInfo(folds, "label", "cluster")
@@ -82,20 +79,14 @@ object MlQueries extends QueryPack {
     val df = events(spark, dir)
       .withColumn("label", pmod(col("event_id"), lit(3)))
       .withColumn("cluster", floor(col("value") / 25.0).cast("long"))
-    val ps = panelSplit(df)
-    val folds = ps.folds.map { f =>
-      df.filter(f.testPredicate(ps.periodsCol, None)).withColumn("fold", lit(f.index))
-    }.reduce(_ unionByName _)
+    val folds = panelSplit(df).foldRows(df)
     Metrics.adjustedMutualInfo(folds, "label", "cluster")
       .select(col("fold"), round(col("score"), 6).as("score"))
   }
 
   private def avgPrecision(spark: SparkSession, dir: String): DataFrame = {
     val df = events(spark, dir).withColumn("label", (col("event_id") % 2).cast("double"))
-    val ps = panelSplit(df)
-    val folds = ps.folds.map { f =>
-      df.filter(f.testPredicate(ps.periodsCol, None)).withColumn("fold", lit(f.index))
-    }.reduce(_ unionByName _)
+    val folds = panelSplit(df).foldRows(df)
     Metrics.averagePrecision(folds, "label", "value")
       .select(col("fold"), round(col("score"), 6).as("score"))
   }
@@ -104,10 +95,7 @@ object MlQueries extends QueryPack {
     val df = events(spark, dir)
       .withColumn("label", pmod(col("event_id"), lit(3)))
       .withColumn("pred", pmod(floor(col("value") / 30.0).cast("long"), lit(3)))
-    val ps = panelSplit(df)
-    val folds = ps.folds.map { f =>
-      df.filter(f.testPredicate(ps.periodsCol, None)).withColumn("fold", lit(f.index))
-    }.reduce(_ unionByName _).cache()
+    val folds = panelSplit(df).foldRows(df).cache()
     Seq("macro", "micro", "weighted", "samples").map { avg =>
       Metrics.multiclassScores(folds, "label", "pred", avg)
         .select(col("fold"), lit(avg).as("average"),

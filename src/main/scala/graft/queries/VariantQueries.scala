@@ -47,10 +47,7 @@ object VariantQueries extends QueryPack {
   private def snapshotSplit(spark: SparkSession, dir: String): DataFrame = {
     val df = eventsWithSnap(spark, dir)
     val ps = PanelSplit(df, "period", snapshotCol = Some("snap"), nSplits = 3, testSize = 1)
-    ps.folds.map { f =>
-      df.filter(f.trainPredicate(ps.periodsCol, ps.snapshotCol))
-        .select(lit(f.index).as("split"), col("event_id"), col("period"), col("snap"))
-    }.reduce(_ unionByName _)
+    ps.foldRows(df, "train").select(col("fold").as("split"), col("event_id"), col("period"), col("snap"))
   }
 
   /** Per-fold mean imputation with stock spark.ml Imputer: the reference's

@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -128,7 +127,7 @@ abstract class BaseSearch(
       Try {
         val t0 = System.nanoTime()
         val prefix = pipeline.copyWith(params).subPipeline(0, split)
-        val out = prefix.fitOutput(df)
+        val out = prefix.fitTransform(df)
         val owned = prefix.steps.exists(_._2 != null) && out.storageLevel == StorageLevel.NONE
         if (owned) out.persist()
         new Prefix(out, (System.nanoTime() - t0) / 1e9, members.size, owned)
@@ -145,7 +144,7 @@ abstract class BaseSearch(
             val t0 = System.nanoTime()
             val out0 = pipeline.copyWith(params).subPipeline(split, pipeline.steps.size).fitTransform(p.out)
             val t1 = System.nanoTime()
-            val out = if (pipeline.lastCv.isDefined) out0 else out0.withColumn("fold", lit(0))
+            val out = pipeline.scoringFrame(out0)
             val scores = Scorers.scoreAll(scorers, out, labelCol)
             (scores, p.fitSec / members.size + (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9)
           } finally p.release()

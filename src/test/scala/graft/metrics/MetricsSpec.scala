@@ -127,14 +127,37 @@ class MetricsSpec extends SparkTestBase {
   }
 
   test("perFoldScores returns its rows in fold order, in two jobs") {
-    val df = (0 until 260).map(i => ((i * 7) % 13, i.toDouble, i + 1.0))
-      .toDF("fold", "label", "prediction").repartition(4).cache()
+    // fold f's rows miss by f + 1, so its squared error is (f + 1)²
+    val df = (0 until 260).map { i => val f = (i * 7) % 13; (f, i.toDouble, i + f + 1.0, 2.0) }
+      .toDF("fold", "label", "prediction", "w").repartition(4).cache()
     df.count()
-    val (rows, work) = jobsDuring(
-      Metrics.perFoldScores(df, "neg_mean_squared_error", "label", "prediction").collect())
-    assert(work.jobs == 2)
-    assert(rows.map(_.getInt(0)).toSeq == (0 until 13))
-    assert(rows.forall(_.getDouble(1) == -1.0))
+    val mse = (1 to 13).map(e => e.toDouble * e)
+    def inFoldOrder(scores: org.apache.spark.sql.DataFrame): Seq[Double] = {
+      val rows = scores.collect()
+      assert(rows.map(_.getInt(0)).toSeq == (0 until 13))
+      rows.map(_.getDouble(1)).toSeq
+    }
+    // every per-fold entry point, with the scores it must give in fold order
+    val entryPoints: Seq[(String, () => Seq[Seq[Double]], Seq[Seq[Double]])] = Seq(
+      ("perFoldScores",
+        () => Seq(inFoldOrder(Metrics.perFoldScores(df, "neg_mean_squared_error", "label", "prediction"))),
+        Seq(mse.map(-_))),
+      ("perFoldScoresOf",
+        () => Seq(inFoldOrder(Metrics.perFoldScoresOf(df, Metrics.registry("mean_squared_error"), "label", "prediction"))),
+        Seq(mse)),
+      ("perFoldScoresWeighted",
+        () => Seq(inFoldOrder(Metrics.perFoldScoresWeighted(df, "neg_mean_squared_error", "label", "prediction", "w"))),
+        Seq(mse.map(-_))),
+      ("Scorers.scoreAll", () => {
+        val s = Scorers.scoreAll(Seq("mse" -> Scorers.get("neg_mean_squared_error"),
+          "mae" -> Scorers.get("neg_mean_absolute_error")), df, "label")
+        Seq(s("mse"), s("mae"))
+      }, Seq(mse.map(-_), (1 to 13).map(-_.toDouble))))
+    entryPoints.foreach { case (name, run, want) =>
+      val (got, work) = jobsDuring(run())
+      assert(work.jobs == 2, name)
+      assert(got == want, name)
+    }
     df.unpersist()
   }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.SparkTestBase
 import graft.cv.PanelSplit
 import graft.ml.{IdentityRegressor, MeanRegressor}
+import graft.search.GridSearch
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.sql.functions._
 
@@ -198,5 +199,25 @@ class SequentialCVPipelineSpec extends SparkTestBase {
       assert(sc.getPersistentRDDs.size == before)
     }
     df.unpersist()
+  }
+
+  test("an input that already has a fold column gives the scores of the same input without it") {
+    val plain = identityPanel
+    val tagged = plain.withColumn("fold", lit(9))
+    stackedPipes(plain).foreach { mk =>
+      val out = mk().fit(tagged).transform(tagged)
+      assert(out.columns.count(_ == "fold") == 1)
+      assert(mk().fitTransform(tagged).columns.count(_ == "fold") == 1)
+      def scores(df: org.apache.spark.sql.DataFrame) = mk().fit(df).score(df, "mean_squared_error", "y")
+      assert(scores(tagged) == scores(plain))
+      def searched(df: org.apache.spark.sql.DataFrame) = {
+        val search = new GridSearch(mk(), Map("out__shift" -> Seq(0.0, 1.0)),
+          Seq("neg_mean_squared_error"), "y", refit = false)
+        search.fit(df).results.map(r => (r.failed, r.splitScores))
+      }
+      val viaSearch = searched(tagged)
+      assert(viaSearch.forall(!_._1))
+      assert(viaSearch == searched(plain))
+    }
   }
 }
