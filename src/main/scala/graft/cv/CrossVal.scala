@@ -19,11 +19,14 @@ import graft.ops.FanOut
   * fold, an independent Spark job over the shared (cache the input!)
   * DataFrame; joblib's process fan-out (`application.py:216-223`) becomes
   * driver-thread fan-out, and the cluster scheduler does the real
-  * parallelism. Positional index arrays become predicate-filtered
-  * DataFrames; out-of-fold reassembly (`application.py:142-157` argsort)
-  * becomes the `fold`-tagged union of [[PanelSplit.foldRows]], the one place
-  * a fold becomes rows — callers who need original order carry their own
-  * `row_id`.
+  * parallelism. Positional index arrays become fold predicates; out-of-fold
+  * reassembly (`application.py:142-157` argsort) becomes the `fold`-tagged
+  * rows of [[PanelSplit.foldRows]], the one place a fold becomes rows —
+  * callers who need original order carry their own `row_id`.
+  * [[crossValPredict]] predicts the folds of a scaler, OLS or mean model in
+  * that one scan, one column applying each row's fold's model
+  * ([[FoldPredict]]); any other model transforms each fold's rows apart,
+  * and the folds are unioned.
   */
 object CrossVal {
 
@@ -64,11 +67,15 @@ object CrossVal {
       .getOrElse(FanOut(cv.folds.map(f => () => fitFold(f)), parallelism))
   }
 
-  /** Out-of-fold prediction: each fold's model transforms exactly that fold's
-    * `returnGroup` ("test" | "train") rows; [[PanelSplit.foldRows]] unions
-    * the results with a `fold` column. A row landing in several folds'
-    * groups (overlapping trains) is predicted once per fold, as in the
-    * reference (`application.py:228-297`).
+  /** Out-of-fold prediction: each fold's model predicts exactly that fold's
+    * `returnGroup` ("test" | "train") rows, tagged with a `fold` column. A
+    * row landing in several folds' groups (overlapping trains) is predicted
+    * once per fold, as in the reference (`application.py:228-297`). Folds
+    * of a `StandardScalerModel`, `LinearRegressionModel` or
+    * [[graft.ml.MeanRegressorModel]] (exact classes, equal params) are
+    * predicted in one scan of `df`, with as many partitions as `df`; any
+    * other models give the union of one transformed scan per fold. Both
+    * give the same rows, values and schema.
     */
   def crossValPredict(
       models: Seq[Transformer],
@@ -77,8 +84,11 @@ object CrossVal {
       returnGroup: String = "test"): DataFrame = {
     require(models.size == cv.nSplits,
       s"models (${models.size}) must match folds (${cv.nSplits})")
-    val model = cv.folds.zip(models).toMap
-    cv.foldRows(df, returnGroup, (f, rows) => model(f).transform(rows))
+    val byFold = cv.folds.zip(models)
+    FoldPredict(byFold, df, cv, returnGroup).getOrElse {
+      val model = byFold.toMap
+      cv.foldRows(df, returnGroup, (f, rows) => model(f).transform(rows))
+    }
   }
 
   def crossValFitPredict(

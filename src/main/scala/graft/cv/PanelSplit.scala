@@ -83,24 +83,49 @@ final class PanelSplit private (
   def genTestLabels(df: DataFrame): DataFrame =
     genLabels(df, _.testPredicate(periodsCol, snapshotCol))
 
-  /** The union, by name, of every fold's `group` ("test" or "train") rows:
-    * each fold's rows are mapped by `perFold` (for example through that
-    * fold's model), then tagged with the fold's index in `fold` by
-    * `withColumn`, which replaces a `fold` column the rows already have. A
-    * row in several folds' groups appears once per fold; out-of-fold
-    * reassembly (`application.py:142-157,228-297`) is this union. No folds
-    * give an empty frame.
+  private def groupPredicate(f: PeriodFold, group: String): Column =
+    if (group == "test") f.testPredicate(periodsCol, snapshotCol)
+    else f.trainPredicate(periodsCol, snapshotCol)
+
+  private def checkGroup(group: String): Unit =
+    require(group == "test" || group == "train", s"group must be 'test' or 'train', got $group")
+
+  /** Every fold's `group` ("test" or "train") rows of `df`, tagged with the
+    * fold's index in a non-nullable `fold` column, which replaces in place
+    * a `fold` column the rows already have. A row in several folds' groups
+    * appears once per fold; out-of-fold reassembly
+    * (`application.py:142-157,228-297`) is these rows. One scan of `df`
+    * with the folds' predicates inline: the rows of any group pass (so a
+    * source can still prune by them), then each row is exploded into the
+    * folds whose predicates hold, under the same SQL semantics as each
+    * fold's own filter. No folds give an empty frame.
+    */
+  def foldRows(df: DataFrame, group: String = "test"): DataFrame = {
+    checkGroup(group)
+    val preds = folds.map(f => f.index -> groupPredicate(f, group))
+    if (preds.isEmpty) df.sparkSession.emptyDataFrame
+    else {
+      // the non-null -1 keeps `fold` non-nullable; a filter after the
+      // explode drops it, where a lambda filter inside would leave
+      // whole-stage codegen
+      val tag = explode(array(preds.map { case (i, p) => when(p, i).otherwise(-1) }: _*))
+      df.filter(preds.map(_._2).reduce(_ || _)).withColumn("fold", tag).filter(col("fold") >= 0)
+    }
+  }
+
+  /** The union, by name, of every fold's `group` rows, each fold's mapped
+    * by `perFold` (for example through that fold's model), then tagged as
+    * [[foldRows]] tags them. Each fold is its own scan of `df`, so the
+    * union has every fold's partitions: use it only where `perFold` cannot
+    * be one column over the tagged rows.
     */
   def foldRows(
       df: DataFrame,
-      group: String = "test",
-      perFold: (PeriodFold, DataFrame) => DataFrame = (_, rows) => rows): DataFrame = {
-    require(group == "test" || group == "train", s"group must be 'test' or 'train', got $group")
+      group: String,
+      perFold: (PeriodFold, DataFrame) => DataFrame): DataFrame = {
+    checkGroup(group)
     folds.map { f =>
-      val pred =
-        if (group == "test") f.testPredicate(periodsCol, snapshotCol)
-        else f.trainPredicate(periodsCol, snapshotCol)
-      perFold(f, df.filter(pred)).withColumn("fold", lit(f.index))
+      perFold(f, df.filter(groupPredicate(f, group))).withColumn("fold", lit(f.index))
     }.reduceOption(_ unionByName _).getOrElse(df.sparkSession.emptyDataFrame)
   }
 

@@ -170,7 +170,8 @@ object Metrics {
     * round-2 verdict's scale-killer; this never materializes per-row ranks.
     *
     * A fold with a single class has an undefined AUC: sklearn raises, and so
-    * do we (raise_error) rather than silently emitting null.
+    * do we (raise_error) rather than silently emitting null. One row per
+    * fold, in fold order.
     */
   def rocAuc(preds: DataFrame, labelCol: String, scoreCol: String, foldCol: String = "fold"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -193,6 +194,7 @@ object Metrics {
           raise_error(concat(lit("roc_auc undefined: single-class fold "), col(foldCol).cast("string"))))
           .otherwise((col("__sum_pos_rank") - col("__npos") * (col("__npos") + 1) / 2.0)
             / (col("__npos") * col("__nneg"))).as("score"))
+      .transform(inFoldOrder(_, foldCol, shuffle = true))
   }
 
   /** Multiclass averaged precision/recall/F1/jaccard from the per-class
@@ -224,7 +226,7 @@ object Metrics {
         .withColumn("recall", col("precision"))
         .withColumn("f1", col("precision"))
         .withColumn("jaccard", col("precision"))
-        .orderBy(col(foldCol))
+        .transform(inFoldOrder(_, foldCol))
     }
     // per (fold, class): tp, predicted-count, actual-count — via two tagged passes
     val perClass = preds.select(col(foldCol), l.as("cls"), p.as("pred"))
@@ -247,7 +249,7 @@ object Metrics {
         perClass.groupBy(col(foldCol))
           .agg(avg(prec).as("precision"), avg(rec).as("recall"), avg(f1c).as("f1"),
             avg(jac).as("jaccard"))
-          .orderBy(col(foldCol))
+          .transform(inFoldOrder(_, foldCol))
       case "weighted" =>
         perClass.groupBy(col(foldCol))
           .agg(
@@ -255,7 +257,7 @@ object Metrics {
             (sum(rec * col("support")) / sum(col("support"))).as("recall"),
             (sum(f1c * col("support")) / sum(col("support"))).as("f1"),
             (sum(jac * col("support")) / sum(col("support"))).as("jaccard"))
-          .orderBy(col(foldCol))
+          .transform(inFoldOrder(_, foldCol))
       case "micro" =>
         // micro precision == recall == f1 == accuracy for single-label
         // multiclass; micro jaccard = Σtp / (Σpred + Σsupp − Σtp)
@@ -265,7 +267,7 @@ object Metrics {
           .withColumn("recall", col("precision"))
           .withColumn("f1", col("precision"))
           .select(col(foldCol), col("precision"), col("recall"), col("f1"), col("jaccard"))
-          .orderBy(col(foldCol))
+          .transform(inFoldOrder(_, foldCol))
     }
   }
 
@@ -343,7 +345,7 @@ object Metrics {
     preds.groupBy(col(foldCol))
       .agg(avg(prec).as("precision"), avg(rec).as("recall"),
         avg(f1).as("f1"), avg(jac).as("jaccard"))
-      .orderBy(col(foldCol))
+      .transform(inFoldOrder(_, foldCol))
   }
 
   /** Average precision (area under the precision-recall curve, step
@@ -367,7 +369,7 @@ object Metrics {
       .withColumn("__cum_cnt", sum(col("__cnt")).over(w))
       .groupBy(col(foldCol))
       .agg((sum(col("__pos") * col("__cum_pos") / col("__cum_cnt")) / sum(col("__pos"))).as("score"))
-      .orderBy(col(foldCol))
+      .transform(inFoldOrder(_, foldCol, shuffle = true))
   }
 
   /** Adjusted Rand Index from the (label, cluster) contingency table —
@@ -391,7 +393,7 @@ object Metrics {
         when(maxIdx === expected, 1.0) // degenerate: single cluster == single class
           .otherwise((col("sum_nij2") - expected) / (maxIdx - expected)).as("score")
       })
-      .orderBy(col(foldCol))
+      .transform(inFoldOrder(_, foldCol))
   }
 
   /** Normalized Mutual Information (arithmetic mean normalization, the
@@ -415,7 +417,7 @@ object Metrics {
       .select(col(foldCol),
         when(col("hu") + col("hv") === 0, 1.0)
           .otherwise(col("mi") / ((col("hu") + col("hv")) / 2.0)).as("score"))
-      .orderBy(col(foldCol))
+      .transform(inFoldOrder(_, foldCol, shuffle = true))
   }
 
   /** D² of the absolute error: 1 − Σ|y−p| / Σ|y−median(y)| per fold
@@ -437,7 +439,7 @@ object Metrics {
         val den = sum(abs(col(labelCol).cast("double") - col("__med")))
         when(den === 0, 0.0).otherwise(lit(1.0) - num / den).as("score")
       })
-      .orderBy(col(foldCol))
+      .transform(inFoldOrder(_, foldCol, shuffle = true))
   }
 
   /** The full supervised clustering-metric family from one contingency-table
@@ -477,7 +479,7 @@ object Metrics {
       when(h + c === 0, 0.0).otherwise(lit(2.0) * h * c / (h + c)).as("v_measure"),
       when(col("pk") * col("qk") === 0, 0.0)
         .otherwise(col("tk") / sqrt(col("pk") * col("qk"))).as("fowlkes_mallows"))
-      .orderBy(col(foldCol))
+      .transform(inFoldOrder(_, foldCol, shuffle = true))
   }
 
   /** Adjusted Mutual Information (arithmetic-mean normalization, sklearn
@@ -571,7 +573,7 @@ object Metrics {
         when(col("hu") + col("hv") === 0, 1.0)
           .otherwise((col("mi") - col("emi")) / denom).as("score")
       })
-      .orderBy(col(foldCol))
+      .transform(inFoldOrder(_, foldCol, shuffle = true))
   }
 
   /** Top-k accuracy over an array-of-class-scores column: the true label's
@@ -587,7 +589,7 @@ object Metrics {
     val hit = exists(slice(ranked, 1, k), x => x.getField("c") === col(labelCol).cast("int"))
     preds.groupBy(col(foldCol))
       .agg(avg(when(hit, 1.0).otherwise(0.0)).as("score"))
-      .orderBy(col(foldCol))
+      .transform(inFoldOrder(_, foldCol))
   }
 
   /** One-vs-rest multiclass ROC-AUC over an array-of-class-scores column
@@ -627,7 +629,7 @@ object Metrics {
     val agg0 =
       if (weighted) perClass.groupBy(col(foldCol)).agg((sum(col("auc") * col("np")) / sum(col("np"))).as("score"))
       else perClass.groupBy(col(foldCol)).agg(avg(col("auc")).as("score"))
-    agg0.orderBy(col(foldCol))
+    inFoldOrder(agg0, foldCol)
   }
 
   /** One-vs-one multiclass ROC-AUC (sklearn `multi_class="ovo"`): for each
@@ -690,7 +692,7 @@ object Metrics {
     val agg0 =
       if (weighted) pairScores.groupBy(col(foldCol)).agg((sum(col("pauc") * col("npair")) / sum(col("npair"))).as("score"))
       else pairScores.groupBy(col(foldCol)).agg(avg(col("pauc")).as("score"))
-    agg0.orderBy(col(foldCol))
+    inFoldOrder(agg0, foldCol)
   }
 
   val registry: Map[String, MetricSpec] = {
@@ -754,12 +756,21 @@ object Metrics {
       (spec.agg(col(labelCol).cast("double"), col(predictionCol).cast("double")) * sign).as("score"))
   }
 
-  /** `aggs` per fold, one row per fold in fold order. The rows are few, so
-    * one partition sorted locally replaces a range sort: two jobs.
-    */
+  /** `aggs` per fold, one row per fold in fold order: two jobs. */
   private[metrics] def byFold(preds: DataFrame, foldCol: String, aggs: Column*): DataFrame =
-    preds.groupBy(col(foldCol)).agg(aggs.head, aggs.tail: _*)
-      .coalesce(1).sortWithinPartitions(col(foldCol))
+    inFoldOrder(preds.groupBy(col(foldCol)).agg(aggs.head, aggs.tail: _*), foldCol)
+
+  /** `perFold`'s rows, one per fold, in fold order. The rows are few, so
+    * one partition sorted locally replaces a range sort and its sampling
+    * job. `coalesce(1)` adds no shuffle, so `perFold`'s whole last stage
+    * runs in the one task: fit only where that stage merely merges a final
+    * aggregate's shuffled partial rows. Where the per-fold aggregate reuses
+    * a window's or a join's partitioning by fold, that stage holds
+    * row-level work, and `shuffle = true` moves just the fold rows into
+    * the one partition, for one job more.
+    */
+  private[metrics] def inFoldOrder(perFold: DataFrame, foldCol: String, shuffle: Boolean = false): DataFrame =
+    (if (shuffle) perFold.repartition(1) else perFold.coalesce(1)).sortWithinPartitions(col(foldCol))
 
   // ---- sample-weighted metrics ------------------------------------------
 

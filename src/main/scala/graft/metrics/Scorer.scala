@@ -105,7 +105,7 @@ final case class Scorer(
   private def dedicatedPath(out: DataFrame, labelCol: String, responseCol: String)
       : PartialFunction[String, DataFrame] = {
     case "roc_auc" =>
-      Metrics.rocAuc(out, labelCol, responseCol).orderBy(col("fold"))
+      Metrics.rocAuc(out, labelCol, responseCol)
     case "roc_auc_ovr" =>
       Metrics.rocAucOvr(out, labelCol, responseCol, weighted = false)
     case "roc_auc_ovr_weighted" =>

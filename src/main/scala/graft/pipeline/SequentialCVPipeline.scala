@@ -28,10 +28,11 @@ final case class FittedPerFold(cv: PanelSplit, models: Seq[(PeriodFold, Transfor
   *    plain methods (`transform`, `score`);
   *  - rows outside every fold's returnGroup side simply drop out of the
   *    emitted frame (same visible semantics as the reference's index union);
-  *  - each CV step's out-of-fold output is [[CrossVal.crossValPredict]],
-  *    the union [[PanelSplit.foldRows]] builds, so it carries that step's
-  *    `fold` column, replacing any `fold` column its input had; the emitted
-  *    `fold` is the last CV step's.
+  *  - each CV step's out-of-fold output is [[CrossVal.crossValPredict]]'s,
+  *    the fold-tagged rows of [[PanelSplit.foldRows]] (one scan for scaler,
+  *    OLS and mean steps, a per-fold union otherwise), so it carries that
+  *    step's `fold` column, replacing any `fold` column its input had; the
+  *    emitted `fold` is the last CV step's.
   *
   * @param steps       (name, estimator) pairs; estimator may be null for
   *                    "passthrough" (reference `pipeline.py:686-719`)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
 /** One run of one `Trigger.AvailableNow` stream of [[StreamingOps]]: the
   * run's root, its staging, its drain and its batchId-keyed state. The
@@ -80,17 +80,30 @@ private[streaming] final class StreamRun(spark: SparkSession, queryName: String)
 
   private def path(name: String, batchId: Long) = s"$root/$name/batch=$batchId"
 
-  /** The schema [[Batch.write]] last wrote under each name. */
-  private val written = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+  /** The schema [[Batch.write]] last wrote under each name, and the type
+    * partition inference gives its `batch=<id>` column: int while every id
+    * written fits one, else long.
+    */
+  private val written = new java.util.concurrent.ConcurrentHashMap[String, (StructType, DataType)]()
 
   /** One batch's output under `name`, read with the schema it was written
     * with, so no schema-inference job runs.
     */
   private def read(session: SparkSession, name: String, batchId: Long): DataFrame =
-    session.read.schema(written.get(name)).parquet(path(name, batchId))
+    session.read.schema(written.get(name)._1).parquet(path(name, batchId))
+
+  /** Every batch's output under `name`, with its batch id in column
+    * `batch`, read with the recorded schema and batch type, so no
+    * schema-inference job runs. A name nothing was written under fails as
+    * the read of a missing path does.
+    */
+  private def readAll(session: SparkSession, name: String): DataFrame =
+    Option(written.get(name)).fold(session.read) { case (schema, batch) =>
+      session.read.schema(schema.add("batch", batch))
+    }.parquet(s"$root/$name")
 
   /** Every batch's output under `name`, with its batch id in column `batch`. */
-  def byBatch(name: String): DataFrame = spark.read.parquet(s"$root/$name")
+  def byBatch(name: String): DataFrame = readAll(spark, name)
 
   /** Every batch's output under `name`. */
   def all(name: String): DataFrame = byBatch(name).drop("batch")
@@ -106,12 +119,14 @@ private[streaming] final class StreamRun(spark: SparkSession, queryName: String)
     /** Overwrites this batch's output under `name`. */
     def write(name: String, out: DataFrame): Unit = {
       out.write.mode("overwrite").parquet(path(name, id))
-      written.put(name, out.schema)
+      written.compute(name, (_, before) => {
+        val intIds = id.isValidInt && (before == null || before._2 == IntegerType)
+        (out.schema, if (intIds) IntegerType else LongType)
+      })
     }
 
     /** Every output written under `name` so far. */
-    def all(name: String): DataFrame =
-      df.sparkSession.read.parquet(s"$root/$name").drop("batch")
+    def all(name: String): DataFrame = readAll(df.sparkSession, name).drop("batch")
 
     /** The previous batch's output under `name`, if it wrote one. */
     def previous(name: String): Option[DataFrame] =

@@ -9,8 +9,9 @@ import org.apache.spark.ml.util.DatasetUtils
 import org.apache.spark.sql.Column
 
 /** The summary buffer, solvers and model constructors behind
-  * `StandardScaler.fit` and `LinearRegression.fit` are private to spark.ml
-  * and its `optim` package, hence this package. A moments object summarizes
+  * `StandardScaler.fit` and `LinearRegression.fit`, and the row function
+  * behind `StandardScalerModel.transform`, are private to spark.ml and its
+  * `optim` package, hence this package. A moments object summarizes
   * some rows as that estimator's own `fit` does; `merge` adds another's rows
   * into it.
   */
@@ -27,6 +28,17 @@ object MomentFit {
   def scalerModel(est: StandardScaler, m: ScalerMoments): StandardScalerModel =
     copyValues(est, new StandardScalerModel(est.uid, m.buf.std.compressed, m.buf.mean.compressed))
       .setParent(est)
+
+  /** The row function `StandardScalerModel.transform` applies: spark.ml's
+    * own `getTransformFunc`, over the shift and scale `transform` derives
+    * from the model.
+    */
+  def scalerTransform(m: StandardScalerModel): Vector => Vector = {
+    val shift = if (m.getWithMean) m.mean.toArray else Array.emptyDoubleArray
+    val scale =
+      if (m.getWithStd) m.std.toArray.map(v => if (v == 0) 0.0 else 1.0 / v) else Array.emptyDoubleArray
+    StandardScalerModel.getTransformFunc(shift, scale, m.getWithMean, m.getWithStd)
+  }
 
   /** The normal-equation sums `WeightedLeastSquares.fit` aggregates, kept
     * in the same form as its `Aggregator`, which is private to its object.

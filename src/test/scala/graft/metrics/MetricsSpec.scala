@@ -160,4 +160,24 @@ class MetricsSpec extends SparkTestBase {
     }
     df.unpersist()
   }
+
+  test("dedicated per-fold metrics return their rows in fold order without a range sort") {
+    val df = (0 until 260).map { i =>
+      ((i * 7) % 13, (i % 2).toDouble, ((i * 31) % 17) / 17.0, i % 3, (i / 2) % 3)
+    }.toDF("fold", "label", "probability", "cls", "pred").repartition(4).cache()
+    df.count()
+    val (multi, multiWork) = jobsDuring(Metrics.multiclassScores(df, "cls", "pred", "macro").collect())
+    assert(multi.map(_.getInt(0)).toSeq == (0 until 13))
+    val (auc, aucWork) = jobsDuring(Scorers.scoreAll(Seq("auc" -> Scorers.get("roc_auc")), df, "label"))
+    val want = Metrics.rocAuc(df, "label", "probability").collect()
+      .map(r => r.getInt(0) -> r.getDouble(1)).sortBy(_._1).map(_._2).toSeq
+    assert(auc("auc") == want)
+    // a range sort of the fold rows adds two jobs to each: 6 and 5. roc_auc
+    // gathers its fold rows through a one-partition shuffle, one job more
+    // than a coalesce, since its aggregate reuses the rank window's
+    // partitioning (PlanQualitySpec)
+    assert(multiWork.jobs == 4, "multiclassScores")
+    assert(aucWork.jobs == 4, "roc_auc")
+    df.unpersist()
+  }
 }

@@ -220,4 +220,40 @@ class SequentialCVPipelineSpec extends SparkTestBase {
       assert(viaSearch == searched(plain))
     }
   }
+
+  test("a scaler -> OLS pipeline predicts out of fold in one scan; other per-fold models keep the union") {
+    import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
+    import org.apache.spark.ml.regression.LinearRegression
+    val raw = for (p <- 1 to 12; e <- 0 to 5) yield (p * 10 + e, p, p * 0.5 + e, math.sin(p * e), p + e * e * 0.1)
+    val df = new VectorAssembler().setInputCols(Array("x1", "x2")).setOutputCol("features")
+      .transform(raw.toDF("id", "period", "x1", "x2", "y")).repartition(4).cache()
+    df.count()
+    val cv1 = PanelSplit(df, "period", nSplits = 2, testSize = 4)
+    val cv2 = PanelSplit(df, "period", nSplits = 2, testSize = 2,
+      uniquePeriods = Some(cv1.folds.flatMap(_.testPeriods)))
+    def hasUnion(out: org.apache.spark.sql.DataFrame) =
+      out.queryExecution.optimizedPlan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union])
+    val scale = est(new StandardScaler().setInputCol("features").setOutputCol("scaled"))
+    val ols = est(new LinearRegression().setFeaturesCol("scaled").setLabelCol("y").setSolver("normal"))
+    val pipe = new SequentialCVPipeline(Seq("scale" -> scale, "ols" -> ols), Seq(Some(cv1), Some(cv2)))
+    Seq(pipe.fitTransform(df), pipe.transform(df)).foreach { out =>
+      assert(!hasUnion(out))
+      assert(out.rdd.getNumPartitions == df.rdd.getNumPartitions)
+      assert(out.count() == 4 * 6)
+    }
+    // a per-fold model of another kind: predictions are x1, scored per cv2 fold
+    val ident = new SequentialCVPipeline(
+      Seq("scale" -> scale, "ident" -> est(new IdentityRegressor().setFeatureCol("x1"))),
+      Seq(Some(cv1), Some(cv2)))
+    val out = ident.fitTransform(df)
+    assert(hasUnion(out))
+    val want = cv2.folds.map { f =>
+      val rows = raw.filter(r => f.testPeriods.contains(r._2))
+      rows.map(r => (r._5 - r._3) * (r._5 - r._3)).sum / rows.size
+    }
+    val got = ident.score(df, "mean_squared_error", "y")
+    assert(got.size == want.size)
+    got.zip(want).foreach { case (g, w) => assert(math.abs(g - w) <= 1e-12 * w) }
+    df.unpersist()
+  }
 }

@@ -66,6 +66,83 @@ class PlanQualitySpec extends SparkTestBase {
     }
   }
 
+  test("per-fold metric rows meet in one task only after their final aggregate") {
+    // Each per-fold metric returns its fold rows in one partition, and the
+    // plan's last stage runs in that one task. So that stage may hold only
+    // the merge of per-fold aggregates: no window, and every shuffle it
+    // reads is read by a final aggregate, or is the one-partition shuffle
+    // of the fold rows themselves. Joins are sort-merge here, as on inputs
+    // too large to broadcast.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.window.WindowExec
+    def finalAgg(p: SparkPlan) = p match {
+      case a: BaseAggregateExec => a.aggregateExpressions.forall(_.mode == Final)
+      case _ => false
+    }
+    def reads(reader: SparkPlan, e: ShuffleExchangeLike) =
+      if (finalAgg(reader) || e.outputPartitioning.numPartitions == 1) Nil
+      else Seq(s"${reader.nodeName} reads a shuffle")
+    /** What the last stage below `p` does that is not a per-fold merge;
+      * `reader` is the nearest operator above that is not a sort.
+      */
+    def rowWork(p: SparkPlan, reader: SparkPlan): Seq[String] = p.children.flatMap {
+      case e: ShuffleExchangeLike => reads(reader, e)
+      case q: ShuffleQueryStageExec => reads(reader, q.shuffle)
+      case _: BroadcastExchangeLike => Nil
+      case s @ (_: SortExec | _: AQEShuffleReadExec) => rowWork(s, reader)
+      case w: WindowExec => w.nodeName +: rowWork(w, w)
+      case c => rowWork(c, c)
+    }
+    /** The plan as planned, exchanges included, before adaptive execution. */
+    def lastStage(df: DataFrame): Seq[String] = {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      rowWork(plan, plan)
+    }
+    val preds = (0 until 300).map { i =>
+      ((i / 7) % 3, (i % 2).toDouble, ((i * 31) % 17) / 17.0, i % 3, (i * 5 / 3) % 3,
+        Array.tabulate(3)(j => ((i + 2 * j) % 7) / 7.0), Seq(i % 3, i % 5), Seq(i % 4))
+    }.toDF("fold", "label", "score", "y", "yhat", "scores", "ys", "ps").cache()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val frames = Seq(
+        "perFoldScores" -> Metrics.perFoldScores(preds, "mean_squared_error", "label", "score"),
+        "rocAuc" -> Metrics.rocAuc(preds, "label", "score"),
+        "averagePrecision" -> Metrics.averagePrecision(preds, "label", "score"),
+        "d2AbsoluteError" -> Metrics.d2AbsoluteError(preds, "label", "score"),
+        "d2AbsoluteError approx" -> Metrics.d2AbsoluteError(preds, "label", "score", approx = true),
+        "multilabelSamplesScores" -> Metrics.multilabelSamplesScores(preds, "ys", "ps"),
+        "adjustedRandIndex" -> Metrics.adjustedRandIndex(preds, "y", "yhat"),
+        "normalizedMutualInfo" -> Metrics.normalizedMutualInfo(preds, "y", "yhat"),
+        "clusteringMetrics" -> Metrics.clusteringMetrics(preds, "y", "yhat"),
+        "adjustedMutualInfo" -> Metrics.adjustedMutualInfo(preds, "y", "yhat"),
+        "topKAccuracy" -> Metrics.topKAccuracy(preds, "y", "scores", 2)) ++
+        Seq("macro", "micro", "weighted", "samples").map(a =>
+          s"multiclassScores $a" -> Metrics.multiclassScores(preds, "y", "yhat", a)) ++
+        Seq(false, true).flatMap(w => Seq(
+          s"rocAucOvr weighted=$w" -> Metrics.rocAucOvr(preds, "y", "scores", weighted = w),
+          s"rocAucOvo weighted=$w" -> Metrics.rocAucOvo(preds, "y", "scores", weighted = w)))
+      val wrong = frames.flatMap { case (name, df) =>
+        val work = lastStage(df).map(w => s"$name: $w")
+        val folds = df.collect().map(_.getInt(0)).toSeq
+        work ++ (if (folds == (0 until 3)) Nil else Seq(s"$name: fold rows $folds"))
+      }
+      assert(wrong.isEmpty, wrong.mkString("\n"))
+    } finally {
+      spark.conf.set(key, before)
+      preds.unpersist()
+    }
+  }
+
   test("single-class fold raises on AUC instead of silently averaging nulls") {
     val oneClass = (1 to 50).map(i => (0, 1, i / 50.0)).toDF("fold", "label", "score")
     val e = intercept[Exception] { Metrics.rocAuc(oneClass, "label", "score").collect() }

@@ -141,6 +141,27 @@ class StreamRunSpec extends SparkTestBase {
     assert(hll.count() > 0 && sessions.count() > 0)
   }
 
+  test("all and byBatch read what inference reads, running no inference job") {
+    import spark.implicits._
+    val run = new StreamRun(spark, s"schema_${System.nanoTime()}")
+    val inBatch = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    run.drain(run.stage((0L until 30L).toDF("k"), 3, col("k"))) { b =>
+      b.write("out", b.df.select(col("k"), (col("k") * 2).as("k2"), lit("x").as("s"), array(col("k")).as("a")))
+      val (_, work) = jobsDuring(b.all("out").schema)
+      inBatch.add(work.jobs)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(inBatch.asScala.toSeq == Seq(0, 0, 0))
+    val (byBatch, byBatchWork) = jobsDuring(run.byBatch("out"))
+    val (all, allWork) = jobsDuring(run.all("out"))
+    assert(byBatchWork.jobs == 0 && allWork.jobs == 0)
+    val inferred = spark.read.parquet(s"${run.checkpoint.stripSuffix("/checkpoint")}/out")
+    assert(byBatch.schema == inferred.schema)
+    assert(all.schema == inferred.drop("batch").schema)
+    def sorted(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(sorted(byBatch).size == 30 && sorted(byBatch) == sorted(inferred))
+  }
+
   test("stage streams one batch per non-empty bucket, holding that bucket only") {
     import spark.implicits._
     // at nChunks = 2 both buckets hash to shuffle partition 1: partition 0 is empty
