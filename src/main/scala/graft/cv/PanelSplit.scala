@@ -1,10 +1,7 @@
 package graft.cv
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** One cross-validation fold expressed in *period space*: the sets of period
   * values whose rows belong to the train / test side, plus the resolved
@@ -40,13 +37,13 @@ final case class PeriodFold(
 }
 
 /** Panel-data cross-validation splitter: expanding-window folds over the
-  * distinct sorted period axis, broadcast back to row space as predicates.
+  * distinct sorted period axis, mapped back to row space as predicates.
   *
   * Mirrors the reference `PanelSplit` (`panelsplit/cross_validation.py:41-201`)
   * including the include-train-in-test variants (`:139-157`) and snapshot
   * clamping (`:172-184`), re-expressed Spark-first: the period axis (small by
   * construction) is collected once on the driver; all row-level work stays
-  * lazy DataFrame predicates / broadcast joins.
+  * lazy DataFrame predicates.
   */
 final class PanelSplit private (
     val folds: Vector[PeriodFold],
@@ -90,27 +87,34 @@ final class PanelSplit private (
   private def checkGroup(group: String): Unit =
     require(group == "test" || group == "train", s"group must be 'test' or 'train', got $group")
 
+  /** The rows of `df` in any fold's members, each exploded into one row per
+    * member `(code, predicate)` of `members(fold)` that holds for it, with
+    * that code in a non-nullable int column `codeCol` (which replaces in
+    * place a column of that name). One scan with the predicates inline: the
+    * rows of any member pass first (so a source can still prune by them),
+    * under the same SQL semantics as each predicate's own filter. Codes must
+    * be ≥ 0; the splitter must have folds.
+    */
+  private def tag(df: DataFrame, codeCol: String, members: PeriodFold => Seq[(Int, Column)]): DataFrame = {
+    // the non-null -1 keeps the code non-nullable; a filter after the
+    // explode drops it, where a lambda filter inside would leave
+    // whole-stage codegen
+    val codes = explode(array(folds.flatMap(members).map { case (i, p) => when(p, i).otherwise(-1) }: _*))
+    genLabels(df, members(_).map(_._2).reduce(_ || _))
+      .withColumn(codeCol, codes).filter(col(codeCol) >= 0)
+  }
+
   /** Every fold's `group` ("test" or "train") rows of `df`, tagged with the
     * fold's index in a non-nullable `fold` column, which replaces in place
     * a `fold` column the rows already have. A row in several folds' groups
     * appears once per fold; out-of-fold reassembly
-    * (`application.py:142-157,228-297`) is these rows. One scan of `df`
-    * with the folds' predicates inline: the rows of any group pass (so a
-    * source can still prune by them), then each row is exploded into the
-    * folds whose predicates hold, under the same SQL semantics as each
-    * fold's own filter. No folds give an empty frame.
+    * (`application.py:142-157,228-297`) is these rows, from one scan of
+    * `df`. No folds give an empty frame.
     */
   def foldRows(df: DataFrame, group: String = "test"): DataFrame = {
     checkGroup(group)
-    val preds = folds.map(f => f.index -> groupPredicate(f, group))
-    if (preds.isEmpty) df.sparkSession.emptyDataFrame
-    else {
-      // the non-null -1 keeps `fold` non-nullable; a filter after the
-      // explode drops it, where a lambda filter inside would leave
-      // whole-stage codegen
-      val tag = explode(array(preds.map { case (i, p) => when(p, i).otherwise(-1) }: _*))
-      df.filter(preds.map(_._2).reduce(_ || _)).withColumn("fold", tag).filter(col("fold") >= 0)
-    }
+    if (folds.isEmpty) df.sparkSession.emptyDataFrame
+    else tag(df, "fold", f => Seq(f.index -> groupPredicate(f, group)))
   }
 
   /** The union, by name, of every fold's `group` rows, each fold's mapped
@@ -129,67 +133,37 @@ final class PanelSplit private (
     }.reduceOption(_ unionByName _).getOrElse(df.sparkSession.emptyDataFrame)
   }
 
-  /** `df` joined on its period to a broadcast fold-membership table of
-    * `entries` (period, fold index named `foldCol`, then `fields`), keeping a
-    * fold's rows only where the snapshot column equals that fold's snapshot.
-    * The join adds no shuffle: the table is tiny (periods × folds).
-    */
-  private def joinMembership(
-      df: DataFrame, foldCol: String, fields: Seq[StructField], entries: Seq[Row]): DataFrame = {
-    val schema = StructType(StructField("__m_period", df.schema(periodsCol).dataType) +:
-      StructField(foldCol, IntegerType, nullable = false) +: fields)
-    val membership = df.sparkSession.createDataFrame(entries.asJava, schema)
-    val joined = df.join(broadcast(membership), col(periodsCol) === col("__m_period"), "inner")
-      .drop("__m_period")
-    snapshotCol.fold(joined) { sc =>
-      joined.filter(folds.map { f =>
-        val inFold = col(foldCol) === f.index
-        f.snapshot.fold(inFold)(sv => inFold && col(sc) === lit(sv))
-      }.reduceOption(_ || _).getOrElse(lit(true)))
-    }
-  }
+  /** A row of fold `f`: on its train or its test side. */
+  private def member(f: PeriodFold): Column =
+    f.trainPredicate(periodsCol, snapshotCol) || f.testPredicate(periodsCol, snapshotCol)
 
   /** Fold expansion: every fold's (train ∪ test) rows tagged with `split` and
     * `snapshot_period` — rows deliberately duplicate across folds
-    * (`cross_validation.py:355-428`).
+    * (`cross_validation.py:355-428`). One scan of `df`, each row exploded
+    * into the folds it is a member of (the single-scan plan of SURVEY
+    * §7.3), instead of the reference's n_splits re-reads; at 100 TB the
+    * duplication cost is inherent to the semantics.
     *
-    * Implemented as ONE scan + broadcast hash join against a tiny
-    * (period → split, snapshot_period) membership table, instead of the
-    * reference's n_splits re-reads — the single-scan path of SURVEY §7.3. At
-    * 100 TB the duplication cost is inherent to the semantics; the join adds
-    * no shuffle (fold side broadcasts).
-    *
-    * `snapshot_period` = max period value *present in the fold's rows*
-    * (`cross_validation.py:413-414` takes the max over the selected rows, not
-    * over the fold spec), computed from the tiny distinct-period set of `df`.
+    * `snapshot_period` = max non-null `periodCol` value *of the fold's rows*
+    * (`cross_validation.py:413-414` takes the max over the selected rows,
+    * which in snapshot mode are already vintage-filtered — not over the fold
+    * spec), one aggregate per fold from one job over `df`, then a `CASE`
+    * over `split`. No folds give no rows, with the same columns.
     */
   def genSnapshots(df: DataFrame, periodCol: Option[String] = None): DataFrame = {
     val pc = periodCol.getOrElse(periodsCol)
-    // distinct (fold-period, snapshot-period, snapshot-filter value) triples
-    // actually present — tiny. The third element carries the snapshot column
-    // so the per-fold max is taken over the SNAPSHOT-FILTERED rows, matching
-    // the reference (`cross_validation.py:407-414` computes the max over the
-    // selected rows, which in snapshot mode are already vintage-filtered).
-    val snapExpr = snapshotCol.map(col).getOrElse(lit(null))
-    val presentTriples: Seq[(Any, Any, Any)] =
-      df.select(col(periodsCol), col(pc), snapExpr).distinct().collect()
-        .map(r => (r.get(0), r.get(1), r.get(2))).toSeq
-
-    val entries = folds.flatMap { f =>
-      val foldPeriods = (f.trainPeriods ++ f.testPeriods).distinct
-      val present = presentTriples.filter { case (p, _, s) =>
-        foldPeriods.contains(p) && ((snapshotCol, f.snapshot) match {
-          case (Some(_), Some(sv)) => s == sv
-          case _                   => true
-        })
-      }
-      if (present.isEmpty) Nil
-      else {
-        val last = present.map(_._2).max(PanelSplit.anyOrdering)
-        foldPeriods.map(p => Row(p, f.index, last))
-      }
+    val periodType = df.schema(pc).dataType
+    if (folds.isEmpty)
+      df.filter(lit(false)).withColumn("split", lit(0))
+        .withColumn("snapshot_period", lit(null).cast(periodType))
+    else {
+      val lasts = folds.map(f => max(when(member(f), col(pc))))
+      val last = df.agg(lasts.head, lasts.tail: _*).head()
+      val snapshot = folds.zipWithIndex.map { case (f, i) => (col("split") === f.index, lit(last.get(i))) }
+      tag(df, "split", f => Seq(f.index -> member(f))).withColumn("snapshot_period",
+        snapshot.tail.foldLeft(when(snapshot.head._1, snapshot.head._2)) { case (c, (k, v)) => c.when(k, v) }
+          .cast(periodType))
     }
-    joinMembership(df, "split", Seq(StructField("snapshot_period", df.schema(pc).dataType)), entries)
   }
 
   /** Intended semantics of the reference's `drop_splits`
@@ -198,21 +172,16 @@ final class PanelSplit private (
     * mutates its fold list while iterating (skipping the element after each
     * drop); we evaluate ALL folds — documented divergence (SURVEY §4).
     *
-    * Two physical plans, same semantics: up to [[PanelSplit.DROP_SPLITS_CONDITIONAL_MAX]]
-    * folds, one scan with conditional aggregates (4 per fold — each
-    * `countDistinct` adds an Expand branch, so plan width is O(nSplits));
-    * beyond that, a broadcast fold-membership join + ONE `groupBy(fold,
-    * side)` aggregation whose plan is constant-width regardless of fold
-    * count (rows duplicate by fold membership instead — the right trade at
-    * hundreds of folds).
+    * One scan: each row is tagged with every fold side it is in (train
+    * `2·index`, test `2·index + 1`), then one `groupBy` of the sides counts
+    * rows and distinct `y`, a plan whose width does not grow with the fold
+    * count. A side with no rows has no group and counts as empty.
     */
   def dropSplits(df: DataFrame, yCol: String): PanelSplit = {
-    val counts =
-      if (folds.size <= PanelSplit.DROP_SPLITS_CONDITIONAL_MAX) dropSplitCountsConditional(df, yCol)
-      else dropSplitCountsExploded(df, yCol)
+    val counts = sideCounts(df, yCol)
     val kept = folds.filter { f =>
-      val (trN, trU) = counts.getOrElse((f.index, "train"), (0L, 0L))
-      val (teN, teU) = counts.getOrElse((f.index, "test"), (0L, 0L))
+      val (trN, trU) = counts.getOrElse(2 * f.index, (0L, 0L))
+      val (teN, teU) = counts.getOrElse(2 * f.index + 1, (0L, 0L))
       !(trN == 0 || teN == 0 || trU == 1 || teU == 1)
     }
     folds.diff(kept).foreach { f =>
@@ -223,58 +192,26 @@ final class PanelSplit private (
     new PanelSplit(kept, periodsCol, snapshotCol)
   }
 
-  /** (fold, side) → (rowCount, distinct-y-with-null) via per-fold
-    * conditional aggregates in one scan.
+  /** Side code (train `2·index`, test `2·index + 1`) → (row count, distinct
+    * `y` counting null as one more value, as np.unique keeps NaN —
+    * `cross_validation.py:23-38`) for every side with rows.
     */
-  private[cv] def dropSplitCountsConditional(df: DataFrame, yCol: String): Map[(Int, String), (Long, Long)] = {
-    val aggs = folds.flatMap { f =>
-      val tr = f.trainPredicate(periodsCol, snapshotCol)
-      val te = f.testPredicate(periodsCol, snapshotCol)
-      // "distinct y" counts null as one extra value — np.unique keeps NaN
-      // (`cross_validation.py:23-38`), countDistinct drops nulls.
-      def uniq(pred: Column) =
-        (countDistinct(when(pred, col(yCol))) +
-          coalesce(max(when(pred && col(yCol).isNull, 1).otherwise(0)), lit(0))).cast("long")
-      Seq(
-        count(when(tr, 1)).as(s"tr_n_${f.index}"),
-        count(when(te, 1)).as(s"te_n_${f.index}"),
-        uniq(tr).as(s"tr_u_${f.index}"),
-        uniq(te).as(s"te_u_${f.index}"))
+  private[cv] def sideCounts(df: DataFrame, yCol: String): Map[Int, (Long, Long)] =
+    if (folds.isEmpty) Map.empty
+    else {
+      val y = col(yCol)
+      tag(df, "__side", f => Seq(
+        2 * f.index -> f.trainPredicate(periodsCol, snapshotCol),
+        2 * f.index + 1 -> f.testPredicate(periodsCol, snapshotCol)))
+        .groupBy(col("__side"))
+        .agg(count(lit(1)), (countDistinct(y) + max(when(y.isNull, 1).otherwise(0))).cast("long"))
+        .collect()
+        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2))))
+        .toMap
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    folds.flatMap { f =>
-      Seq(
-        (f.index, "train") -> ((row.getAs[Long](s"tr_n_${f.index}"), row.getAs[Long](s"tr_u_${f.index}"))),
-        (f.index, "test") -> ((row.getAs[Long](s"te_n_${f.index}"), row.getAs[Long](s"te_u_${f.index}"))))
-    }.toMap
-  }
-
-  /** Same counts via the broadcast (period → fold, side) membership join
-    * and a single constant-width aggregation — scales to any fold count.
-    * Sides missing from the result are genuinely empty.
-    */
-  private[cv] def dropSplitCountsExploded(df: DataFrame, yCol: String): Map[(Int, String), (Long, Long)] = {
-    val entries = folds.flatMap { f =>
-      f.trainPeriods.map(p => Row(p, f.index, "train")) ++ f.testPeriods.map(p => Row(p, f.index, "test"))
-    }
-    joinMembership(df, "__ds_fold", Seq(StructField("__ds_side", StringType, nullable = false)), entries)
-      .groupBy(col("__ds_fold"), col("__ds_side"))
-      .agg(
-        count(lit(1)).as("__n"),
-        (countDistinct(col(yCol)) +
-          coalesce(max(when(col(yCol).isNull, 1).otherwise(0)), lit(0))).cast("long").as("__u"))
-      .collect()
-      .map(r => (r.getInt(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3))))
-      .toMap
-  }
 }
 
 object PanelSplit {
-
-  /** Fold-count ceiling for the conditional-aggregate dropSplits plan;
-    * above it the constant-width explode-join plan takes over.
-    */
-  val DROP_SPLITS_CONDITIONAL_MAX = 24
 
   /** Reconstruct from an explicit fold list (persistence / tests). */
   private[graft] def fromFolds(

@@ -116,7 +116,7 @@ class MeanRegressorModel(override val uid: String, val mean: Double)
   override def transform(ds: Dataset[_]): DataFrame =
     ds.withColumn($(predictionCol), lit(mean))
   override def copy(extra: ParamMap): MeanRegressorModel =
-    copyValues(new MeanRegressorModel(uid, mean)).setParent(parent)
+    copyValues(new MeanRegressorModel(uid, mean), extra).setParent(parent)
   override def transformSchema(schema: StructType): StructType = withPrediction(schema)
   override def write: MLWriter = SimpleIO.writer(this, Map("mean" -> mean))
 }
@@ -161,7 +161,7 @@ class IdentityRegressorModel(override val uid: String)
   override def transform(ds: Dataset[_]): DataFrame =
     ds.withColumn($(predictionCol), col($(featureCol)).cast(DoubleType))
   override def copy(extra: ParamMap): IdentityRegressorModel =
-    copyValues(new IdentityRegressorModel(uid)).setParent(parent)
+    copyValues(new IdentityRegressorModel(uid), extra).setParent(parent)
   override def transformSchema(schema: StructType): StructType = withPrediction(schema)
   override def write: MLWriter = SimpleIO.writer(this, Map.empty)
 }
@@ -224,7 +224,7 @@ class BinClustererModel(override val uid: String,
       least(greatest(floor((col($(featureCol)) - lit(lo)) / lit(width)), lit(0.0)),
         lit((k - 1).toDouble)).cast(DoubleType))
   override def copy(extra: ParamMap): BinClustererModel =
-    copyValues(new BinClustererModel(uid, lo, width, k)).setParent(parent)
+    copyValues(new BinClustererModel(uid, lo, width, k), extra).setParent(parent)
   override def transformSchema(schema: StructType): StructType = withPrediction(schema)
   override def write: MLWriter = SimpleIO.writer(this,
     Map("lo" -> lo, "width" -> width, "k" -> k.toDouble))
@@ -281,7 +281,7 @@ class ThresholdClassifierModel(override val uid: String, val threshold: Double)
         -org.apache.spark.sql.functions.log(lit(1.0) + exp(-margin / lit(10.0))))
   }
   override def copy(extra: ParamMap): ThresholdClassifierModel =
-    copyValues(new ThresholdClassifierModel(uid, threshold)).setParent(parent)
+    copyValues(new ThresholdClassifierModel(uid, threshold), extra).setParent(parent)
   override def transformSchema(schema: StructType): StructType = withPrediction(schema)
   override def write: MLWriter = SimpleIO.writer(this, Map("threshold" -> threshold))
 }

@@ -270,9 +270,9 @@ object DedupQueries extends QueryPack {
       // crawl-like sparse-similarity corpus (500-hot/10k-cold vocabulary,
       // median J ≈ 0.04, planted near-dup clusters + exact dups) generated
       // deterministically from the doc_id axis — see SparseCorpus. Head
-      // recall vs brute-force truth on this fixture is measured by
-      // tools/HeadCompare and recorded in SCALE.md; the gate pins the
-      // algorithm cross-engine.
+      // recall vs brute-force truth on this fixture was measured by
+      // graft.tools.HeadCompare (in the tree at commit ed768c0) and is
+      // recorded in SCALE.md; the gate pins the algorithm cross-engine.
       // row-local codegen generation — regenerating per scan is cheaper
       // than caching 5k docs would save
       val sparse = graft.dedup.SparseCorpus.generate(docs(s, dir).select("doc_id"))

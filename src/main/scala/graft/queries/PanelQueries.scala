@@ -29,10 +29,10 @@ object PanelQueries extends QueryPack {
   def panelSplit(df: DataFrame): PanelSplit =
     PanelSplit(df, "period", nSplits = N_SPLITS, testSize = 1)
 
-  /** Fold planning output as a DataFrame: (split, role, period). */
-  private def foldPeriods(spark: SparkSession, dir: String): DataFrame = {
-    val df = events(spark, dir)
-    val ps = panelSplit(df)
+  /** A splitter's folds as a DataFrame of (split, role, period) rows, one
+    * per period of each fold's train and test side; periods are dates.
+    */
+  def foldSpec(spark: SparkSession, ps: PanelSplit): DataFrame = {
     val rows = ps.folds.flatMap { f =>
       f.trainPeriods.map(p => Row(f.index, "train", p)) ++
         f.testPeriods.map(p => Row(f.index, "test", p))
@@ -43,6 +43,10 @@ object PanelQueries extends QueryPack {
       StructField("role", StringType, nullable = false),
       StructField("period", DateType, nullable = false))))
   }
+
+  /** Fold planning output as a DataFrame: (split, role, period). */
+  private def foldPeriods(spark: SparkSession, dir: String): DataFrame =
+    foldSpec(spark, panelSplit(events(spark, dir)))
 
   def cvMse(spark: SparkSession, dir: String): DataFrame = {
     val df = events(spark, dir)

@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.cv.PanelSplit
 
@@ -29,15 +28,7 @@ object VariantQueries extends QueryPack {
     val df = events(spark, dir)
     val ps = PanelSplit(df, "period", nSplits = 4, gap = 1, testSize = 2,
       maxTrainSize = Some(10), includeTrainInTest = true)
-    val rows = ps.folds.flatMap { f =>
-      f.trainPeriods.map(p => Row(f.index, "train", p)) ++
-        f.testPeriods.map(p => Row(f.index, "test", p))
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("split", IntegerType, nullable = false),
-      StructField("role", StringType, nullable = false),
-      StructField("period", DateType, nullable = false))))
+    PanelQueries.foldSpec(spark, ps)
   }
 
   /** Vintage-aware membership: per fold, train rows tagged with split —
@@ -90,21 +81,13 @@ object VariantQueries extends QueryPack {
     val df = df0.withColumn("y2",
       when(col("period").isin(lastDays: _*), lit(42.0)).otherwise(col("value")))
     val ps = PanelQueries.panelSplit(df).dropSplits(df, "y2")
-    val rows = ps.folds.flatMap { f =>
-      f.trainPeriods.map(p => Row(f.index, "train", p)) ++
-        f.testPeriods.map(p => Row(f.index, "test", p))
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("split", IntegerType, nullable = false),
-      StructField("role", StringType, nullable = false),
-      StructField("period", DateType, nullable = false))))
+    PanelQueries.foldSpec(spark, ps)
   }
 
-  /** dropSplits at 28 folds (> the 24-fold ceiling) over the 30 daily
-    * event periods — routes through the constant-width explode-join plan;
-    * the last two days carry a constant target, so the folds testing them
-    * are degenerate and must drop.
+  /** dropSplits at 28 folds over the 30 daily event periods, so every
+    * fold's train side spans most of the rows and each row is tagged with
+    * many fold sides; the last two days carry a constant target, so the
+    * folds testing them are degenerate and must drop.
     */
   private def dropSplitsWideQ(spark: SparkSession, dir: String): DataFrame = {
     val df0 = events(spark, dir)
@@ -113,15 +96,7 @@ object VariantQueries extends QueryPack {
     val df = df0.withColumn("y2",
       when(col("period").isin(lastDays: _*), lit(42.0)).otherwise(col("value")))
     val ps = graft.cv.PanelSplit(df, "period", nSplits = 28, testSize = 1).dropSplits(df, "y2")
-    val rows = ps.folds.flatMap { f =>
-      f.trainPeriods.map(p => Row(f.index, "train", p)) ++
-        f.testPeriods.map(p => Row(f.index, "test", p))
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("split", IntegerType, nullable = false),
-      StructField("role", StringType, nullable = false),
-      StructField("period", DateType, nullable = false))))
+    PanelQueries.foldSpec(spark, ps)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -96,11 +96,11 @@ class PanelSplitSpec extends SparkTestBase {
     assert(kept.nSplits == 1 && kept.folds.head.testPeriods == Vector(3))
   }
 
-  test("dropSplits: conditional and explode-join plans agree at wide fold counts") {
-    // 40 periods -> 38 folds (over the conditional plan's 24-fold ceiling):
-    // the first 6 periods carry a constant y (degenerate while they dominate
-    // the train side), nulls sprinkle extra distinct values, period 35 has
-    // no rows at all (empty test side for its fold)
+  test("dropSplits at wide fold counts: side counts match each fold's own filter") {
+    // 40 periods -> 38 folds: the first 6 periods carry a constant y
+    // (degenerate while they dominate the train side), nulls sprinkle extra
+    // distinct values, period 35 has no rows at all (empty test side for
+    // its fold)
     val rows = for {
       p <- (1 to 40) if p != 35
       i <- 0 to 1
@@ -115,21 +115,66 @@ class PanelSplitSpec extends SparkTestBase {
     val ps = PanelSplit(df, "period", nSplits = 38, testSize = 1,
       uniquePeriods = Some((1 to 40).map(_.asInstanceOf[Any]).toVector))
     assert(ps.nSplits == 38)
-    val cond = ps.dropSplitCountsConditional(df, "y")
-    val expl = ps.dropSplitCountsExploded(df, "y")
-    // explode path omits empty sides; conditional records them as (0, 0)
-    cond.foreach { case (k, v) =>
-      assert(expl.getOrElse(k, (0L, 0L)) == v, s"mismatch at $k: cond=$v expl=${expl.get(k)}")
+    // (rows, distinct y with null as one value) of one side, from its own
+    // filter: one group per distinct y, null included
+    def own(pred: org.apache.spark.sql.Column): (Long, Long) = {
+      val byY = df.filter(pred).groupBy("y").count().collect()
+      (byY.map(_.getLong(1)).sum, byY.length.toLong)
     }
-    // and the public API (which routes to the explode plan at 38 folds)
-    // matches a manual evaluation of the conditional counts
+    val counts = ps.sideCounts(df, "y")
+    val expected = ps.folds.map { f =>
+      f.index -> (own(f.trainPredicate("period")), own(f.testPredicate("period")))
+    }.toMap
+    for ((i, (tr, te)) <- expected) {
+      assert(counts.getOrElse(2 * i, (0L, 0L)) == tr, s"train side of fold $i")
+      assert(counts.getOrElse(2 * i + 1, (0L, 0L)) == te, s"test side of fold $i")
+    }
+    assert(!counts.contains(2 * 32 + 1)) // fold 32 tests the empty period 35
     val keptIdx = ps.dropSplits(df, "y").folds.map(_.index).toSet
-    val manual = ps.folds.filter { f =>
-      val (trN, trU) = cond((f.index, "train"))
-      val (teN, teU) = cond((f.index, "test"))
-      !(trN == 0 || teN == 0 || trU == 1 || teU == 1)
-    }.map(_.index).toSet
+    val manual = expected.collect { case (i, ((trN, trU), (teN, teU)))
+      if !(trN == 0 || teN == 0 || trU == 1 || teU == 1) => i }.toSet
     assert(keptIdx == manual)
-    assert(keptIdx.nonEmpty && keptIdx.size < 38) // degenerates actually dropped
+    // constant-y trains (folds 0-4) and the empty test side (fold 32) drop;
+    // a null beside one value (test periods 14, 21, 28) keeps its fold
+    assert(keptIdx == (5 until 38).toSet - 32)
+  }
+
+  test("dropSplits on a splitter with no folds returns the empty splitter") {
+    val df = Seq((Some(0), 1), (Option.empty[Int], 2), (Some(1), 3)).toDF("y", "period")
+    val none = PanelSplit(df, "period", nSplits = 2, testSize = 1).dropSplits(df, "y")
+    assert(none.nSplits == 0)
+    val again = none.dropSplits(df, "y")
+    assert(again.nSplits == 0 && again.periodsCol == "period")
+  }
+
+  test("genSnapshots: snapshot_period is the max of the fold's non-null period values") {
+    // every period holds a null c beside a non-null one
+    val df = Seq((1, Some(10)), (1, None), (2, Some(20)), (2, None), (3, Some(30)), (3, None))
+      .toDF("period", "c")
+    val ps = PanelSplit(df, "period", nSplits = 2, testSize = 1)
+    val snap = ps.genSnapshots(df, Some("c"))
+      .select("split", "period", "c", "snapshot_period")
+      .collect().map(r => (r.getInt(0), r.getInt(1), Option(r.get(2)), r.getInt(3)))
+      .sortBy(t => (t._1, t._2, t._3.isDefined)).toVector
+    assert(snap == Vector(
+      (0, 1, None, 20), (0, 1, Some(10), 20), (0, 2, None, 20), (0, 2, Some(20), 20),
+      (1, 1, None, 30), (1, 1, Some(10), 30), (1, 2, None, 30), (1, 2, Some(20), 30),
+      (1, 3, None, 30), (1, 3, Some(30), 30)))
+  }
+
+  test("genSnapshots keeps df's columns, then a non-nullable int split and a nullable snapshot_period, at zero folds too") {
+    import org.apache.spark.sql.types._
+    val df = Seq((Some(0), java.sql.Date.valueOf("2024-01-01")), (None, java.sql.Date.valueOf("2024-01-02")),
+      (Some(1), java.sql.Date.valueOf("2024-01-03"))).toDF("y", "period")
+    val ps = PanelSplit(df, "period", nSplits = 2, testSize = 1)
+    val none = ps.dropSplits(df, "y")
+    assert(none.nSplits == 0)
+    val want = StructType(df.schema.fields ++ Seq(
+      StructField("split", IntegerType, nullable = false),
+      StructField("snapshot_period", DateType, nullable = true)))
+    assert(ps.genSnapshots(df).schema == want)
+    val empty = none.genSnapshots(df)
+    assert(empty.schema == want)
+    assert(empty.collect().isEmpty)
   }
 }

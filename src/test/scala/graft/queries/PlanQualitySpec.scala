@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * scale-safe are checked from the executed plan, not assumed: metric
   * aggregates stay inside whole-stage codegen with no UDF islands, fold
   * predicates reach the parquet scan as pushed filters with pruned schemas,
-  * and genSnapshots' membership join broadcasts the tiny fold table.
+  * and fold expansion and dropSplits tag rows in one scan, with no join.
   */
 class PlanQualitySpec extends SparkTestBase {
   private lazy val sp = spark
@@ -151,13 +151,36 @@ class PlanQualitySpec extends SparkTestBase {
     assert(rootMsg(e).contains("roc_auc undefined"), s"unexpected error: ${rootMsg(e)}")
   }
 
-  test("genSnapshots joins the fold-membership table via broadcast") {
-    val df = (for (p <- 1 to 6; i <- 0 to 3) yield (p * 10 + i, p, i.toDouble))
-      .toDF("id", "period", "y")
+  test("genSnapshots and dropSplits plan one scan of df, with no join") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val path = s"target/planquality/panel_${System.nanoTime()}"
+    (for (p <- 1 to 6; i <- 0 to 3) yield (p * 10 + i, p, i.toDouble))
+      .toDF("id", "period", "y").write.mode("overwrite").parquet(path)
+    val df = spark.read.parquet(path)
     val ps = PanelSplit(df, "period", nSplits = 3, testSize = 1)
-    val plan = ps.genSnapshots(df).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"membership join not broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), s"unexpected shuffle join:\n$plan")
+    // the plans of the queries dropSplits runs, seen by a query listener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ps.dropSplits(df, "y")
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, s"dropSplits ran ${plans.size} queries")
+    val snapshots = ps.genSnapshots(df)
+    snapshots.collect()
+    val nodes = new AdaptiveSparkPlanHelper {}
+    for ((name, plan) <- Seq("dropSplits" -> plans.peek(), "genSnapshots" -> snapshots.queryExecution.executedPlan)) {
+      assert(nodes.collect(plan) { case s: FileSourceScanExec => s }.size == 1, s"$name: not one scan of df:\n$plan")
+      assert(nodes.collect(plan) { case j: BaseJoinExec => j; case b: BroadcastExchangeLike => b }.isEmpty,
+        s"$name: a join or broadcast:\n$plan")
+    }
   }
 
   test("row-local curation ops (chunking, PII) run shuffle-free and UDF-free") {
